@@ -121,7 +121,7 @@ def bench_ingest(spark) -> tuple[float, float, int]:
 
     from evm_indexer_spark.sources.rawgen import write_landing_files
     from evm_indexer_spark.streaming.ingest import start_ingest_stream
-    from evm_indexer_spark.streaming.store import BlockStore
+    from evm_indexer_spark.streaming.txstore import AtomicBlockStore
 
     times = []
     n = 0
@@ -130,7 +130,7 @@ def bench_ingest(spark) -> tuple[float, float, int]:
         try:
             landing = os.path.join(root, "landing")
             write_landing_files(landing, INGEST_BLOCKS, n_files=8)
-            store = BlockStore(spark, os.path.join(root, "store"))
+            store = AtomicBlockStore(spark, os.path.join(root, "store"))
             t0 = time.perf_counter()
             q = start_ingest_stream(
                 spark, landing, store, os.path.join(root, "ckpt")
@@ -303,15 +303,15 @@ def main_latency() -> None:
     from evm_indexer_spark.streaming.ingest import start_ingest_stream
     from evm_indexer_spark.streaming.resp import RespBroker, RespClient
     from evm_indexer_spark.streaming.resp import make_resp_publisher
-    from evm_indexer_spark.streaming.store import BlockStore
+    from evm_indexer_spark.streaming.txstore import AtomicBlockStore
 
     n_probe = int(os.environ.get("SPARK_GRAFT_LATENCY_PROBES", "25"))
     prefill = int(os.environ.get("SPARK_GRAFT_LATENCY_PREFILL", "200"))
-    # storage backend for the latency leg: the COW BlockStore rewrites
-    # every touched bucket per micro-batch — read-modify-write of the
+    # commit mode for the latency leg: a COW commit rewrites every
+    # touched bucket per micro-batch — read-modify-write of the
     # whole bucket for a single arriving block, the dominant leg of the
     # round-14 profile (upsert median 2.45s of the 3.97s p50). The MOR
-    # delta store (AtomicBlockStore commit_mode="delta") appends
+    # delta mode (commit_mode="delta") appends
     # O(batch) delta objects instead and merges on read — the
     # archetypal low-latency arrival trade. Default measures the MOR
     # path (the architecture's answer for this workload); set
@@ -332,16 +332,11 @@ def main_latency() -> None:
     try:
         landing = os.path.join(root, "landing")
         write_landing_files(landing, prefill, n_files=8)
-        if store_mode == "cow":
-            store = BlockStore(spark, os.path.join(root, "store"))
-        else:
-            from evm_indexer_spark.streaming.txstore import (
-                AtomicBlockStore,
-            )
-
-            store = AtomicBlockStore(
-                spark, os.path.join(root, "store"), commit_mode="delta"
-            )
+        store = AtomicBlockStore(
+            spark,
+            os.path.join(root, "store"),
+            commit_mode="cow" if store_mode == "cow" else "delta",
+        )
         print(f"  latency: store ready ({store_mode}), subscribing",
               file=sys.stderr, flush=True)
         sub = RespClient("127.0.0.1", broker.port)

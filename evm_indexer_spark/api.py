@@ -218,11 +218,10 @@ class RestFacade:
         config: EngineConfig = DEFAULT_CONFIG,
         hash_index=None,
     ) -> None:
-        """*hash_index*: optional ``streaming.store.HashIndex`` — wired
-        by default via ``BlockStore.rest_facade()`` /
-        ``AtomicBlockStore.rest_facade()``. Point reads by block hash
-        then resolve the bucket from the slim side index and scan one
-        bucket instead of the chain (the reference's B-tree point-read
+        """*hash_index*: optional ``streaming.txstore.HashIndex`` —
+        wired by default via ``AtomicBlockStore.rest_facade()``. Point
+        reads by block hash then resolve the bucket from the slim side
+        index and scan one bucket instead of the chain (the reference's B-tree point-read
         economics, ``model.go:16-18``); unindexed hashes fall back to
         the catalog path unchanged."""
         self.q = queries

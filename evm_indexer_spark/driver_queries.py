@@ -75,7 +75,7 @@ def _dec(col, p=18, s=2):
 # (``table_column_bytes`` — zero plan-build jobs; None, i.e. footerless
 # or non-local sources, routes DISTRIBUTED, the always-correct path).
 #
-# Cap calibration (measured, see OPTIMIZATION_r16.md "byte gates"):
+# Cap calibration (measured):
 # the text kernels process ~1.5 MB of footer text in ~0.2-0.5 s of
 # single-task Python at sf0.1 and ~15 MB in ~4 s (the sf1 single-task
 # md5 probe) — the distributed plans beat one task well before that, so

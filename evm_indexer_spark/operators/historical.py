@@ -51,12 +51,12 @@ class HistoricalQueries:
         bucket_reader=None,
         time_bucket_resolver=None,
     ) -> None:
-        """*bucket_size*: when the tables come from the bucket-partitioned
-        store (and still carry the ``bucket`` partition column), number
-        ranges additionally constrain ``bucket`` — Catalyst cannot derive
+        """*bucket_size*: when the tables come from the block store (and
+        still carry its ``bucket`` column), number ranges additionally
+        constrain ``bucket`` — Catalyst cannot derive
         ``bucket = number // size`` on its own, and without the explicit
-        predicate a range query scans every partition. Use
-        ``BlockStore.historical_queries()`` to get a correctly wired
+        predicate a range query scans every bucket. Use
+        ``AtomicBlockStore.historical_queries()`` to get a correctly wired
         instance.
 
         *bucket_reader*: optional ``(table_name, [bucket, ...]) ->

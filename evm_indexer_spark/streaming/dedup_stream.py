@@ -18,7 +18,7 @@ between ``compact()`` calls.
 Idempotence: bucket rows are written to ``batch=<batch_id>`` subdirs
 with overwrite — Structured Streaming re-delivers a failed epoch under
 the SAME epoch id, so a crashed write is replaced, never doubled (the
-same contract ``streaming/store`` uses for block upserts). Pair output
+same contract ``streaming/txstore`` uses for block upserts). Pair output
 goes through the caller's sink callback with the STORE batch id
 (``_stream_batch_base + epoch``) so the sink can apply the same keying
 as the ``batch=<id>`` dirs — stable across checkpoint lineages.

@@ -7,7 +7,7 @@ insert → depth-gated confirm, with retry/dedup bookkeeping
 - a Structured Streaming ``readStream`` over the raw-block landing zone
   (file source here; a Kafka header topic in production) feeding
 - one ``foreachBatch`` handler that normalizes, upserts with
-  replace-by-number (reorg-safe, see ``store``), and emits
+  replace-by-number (reorg-safe, see ``txstore``), and emits
   notification rows exactly once (publish log anti-join = T5), plus
 - a depth-gate view for finality (T2) and a scheduled gap-repair job
   reusing the J6 anti-join (T7).
@@ -33,7 +33,7 @@ from ..sources.normalize import (
     normalize_events,
     normalize_transactions,
 )
-from .store import BlockStore
+from .txstore import AtomicBlockStore
 
 
 def _accepts_batch_arg(cb) -> bool:
@@ -64,7 +64,7 @@ def _accepts_batch_arg(cb) -> bool:
 
 
 def process_raw_batch(
-    store: BlockStore,
+    store: AtomicBlockStore,
     raw: DataFrame,
     batch_id: int = 0,
     on_fresh=None,
@@ -189,7 +189,7 @@ def process_raw_batch(
 def start_ingest_stream(
     spark: SparkSession,
     landing_dir: str,
-    store: BlockStore,
+    store: AtomicBlockStore,
     checkpoint_dir: str,
     config: EngineConfig = DEFAULT_CONFIG,
     publish=None,
@@ -258,14 +258,16 @@ def confirmed_blocks(
 
 
 def repair_gaps(
-    spark: SparkSession, store: BlockStore, frm: int, to: int
+    spark: SparkSession, store: AtomicBlockStore, frm: int, to: int
 ) -> DataFrame:
     """T7 gap repair: the J6 anti-join over the expected range — returns
     the numbers to refetch (SyncMissingBlocksInDB, syncer.go:152-207)."""
     return find_missing_blocks_in_range(spark, store.blocks(), frm, to)
 
 
-def confirmed_mismatches(store: BlockStore, raw_confirmed: DataFrame) -> DataFrame:
+def confirmed_mismatches(
+    store: AtomicBlockStore, raw_confirmed: DataFrame
+) -> DataFrame:
     """T3 confirmed re-pass: blocks whose stored hash differs from the
     refetched doc at finality depth — the reorg check the reference does
     with ``SimilarTo`` before replacing (``listener.go:124-148``,

@@ -1,13 +1,11 @@
-"""Atomic multi-table block store: manifest-committed snapshots on parquet.
+"""The block store: manifest-committed snapshots on parquet.
 
 The reference persists each block inside ONE Postgres transaction
 (``StoreBlock``, ``app/db/block.go:24-106``): blocks, transactions and
-events can never be observed half-written. ``store.BlockStore`` (the
-default backend) relaxes that — its dynamic partition overwrite is
-idempotent and replayable, but a crash between the three table writes
-briefly exposes an inconsistent trio (documented there).
+events can never be observed half-written, and a same-number/different-
+hash conflict cascade-deletes the old version first (the reorg replace).
 
-This backend restores full cross-table atomicity with the mechanism
+This store keeps that cross-table atomicity with the mechanism
 table formats like Iceberg/Delta use, reduced to its core: immutable
 data objects + an atomically swapped manifest.
 
@@ -69,6 +67,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -76,7 +75,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import BLOCK_BUCKET_SIZE, BLOCKS_SCHEMA, EVENTS_SCHEMA, TRANSACTIONS_SCHEMA
-from .store import bucket_of
 
 _SCHEMAS = {
     "blocks": BLOCKS_SCHEMA,
@@ -86,10 +84,59 @@ _SCHEMAS = {
 _TABLES = ("blocks", "transactions", "events")
 
 
+def bucket_of(number_col):
+    return (number_col / BLOCK_BUCKET_SIZE).cast("long")
+
+
+def _cols(table: str) -> list[str]:
+    """A stored table's columns: its schema plus ``bucket``."""
+    return [f.name for f in _SCHEMAS[table]] + ["bucket"]
+
+
+def _bucket_batch(blocks: DataFrame, txs: DataFrame, events: DataFrame):
+    """Tag a batch's blocks with their bucket, and each child row with
+    its parent block's bucket (every child belongs to a batch block).
+    The bucketed blocks come back persisted — they feed the touched-
+    bucket list, both child joins and the writes, which would otherwise
+    each parse the raw batch again — and the caller unpersists them."""
+    blocks = blocks.withColumn("bucket", bucket_of(F.col("number"))).persist()
+    key = blocks.select(F.col("hash").alias("_bh"), "bucket")
+    txs, events = (
+        c.join(key, c["blockhash"] == key["_bh"], "inner").drop("_bh")
+        for c in (txs, events)
+    )
+    return blocks, txs, events
+
+
+def _empty(spark: SparkSession, schema) -> DataFrame:
+    """An empty frame that costs nothing to plan over. ``limit(0)``
+    lets the optimizer replace it with an empty local relation, so the
+    joins and unions a commit builds over an empty bucket fold away and
+    actions over it schedule no job (a frame built from an empty Python
+    list runs one Python task per default-parallelism slice)."""
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema).limit(0)
+
+
+def _swap_in(tmp: str, path: str) -> None:
+    """Replace the directory *path* with *tmp* by two renames. The old
+    copy is renamed aside to ``<path>_retired`` first, so a crash
+    between the renames never loses it (``published()`` restores the
+    publish log's); a failed second rename puts it back."""
+    retired = path + "_retired"
+    shutil.rmtree(retired, ignore_errors=True)
+    os.rename(path, retired)
+    try:
+        os.rename(tmp, path)
+    except OSError:
+        os.rename(retired, path)
+        raise
+    shutil.rmtree(retired, ignore_errors=True)
+
+
 class AtomicBlockStore:
-    """Drop-in alternative to ``store.BlockStore`` with atomic
-    cross-table commits (same public surface; ``start_ingest_stream``
-    and ``HistoricalQueries`` are storage-agnostic)."""
+    """Three bucketed tables committed atomically through one manifest,
+    plus the publish log (``start_ingest_stream`` and
+    ``HistoricalQueries`` run over it unchanged)."""
 
     def __init__(
         self,
@@ -112,9 +159,7 @@ class AtomicBlockStore:
         os.makedirs(root, exist_ok=True)
 
     def _path(self, name: str) -> str:
-        """Side-table path (publish log, hash index) — same contract as
-        ``BlockStore._path`` so ``HashIndex`` and the publish helpers
-        work against either backend."""
+        """Side-table path (publish log, hash index)."""
         return os.path.join(self.root, name)
 
     # -- manifest ----------------------------------------------------------
@@ -205,6 +250,17 @@ class AtomicBlockStore:
     def _obj_dir(self, table: str, bucket: int, version: int) -> str:
         return os.path.join(self.root, "objects", table, f"b{bucket}", f"c{version}")
 
+    def _write_object(
+        self, df: DataFrame, table: str, bucket: int | str, version: int
+    ) -> None:
+        """Write one bucket's rows as a new immutable object dir, sorted
+        on the table's lookup key so row-group stats prune (overwrite:
+        a crashed attempt's partial dir is replaced on replay)."""
+        sort_key = "number" if table == "blocks" else "blockhash"
+        df.sortWithinPartitions(sort_key).coalesce(1).write.mode("overwrite").parquet(
+            self._obj_dir(table, int(bucket), version)
+        )
+
     # -- reads -------------------------------------------------------------
 
     @staticmethod
@@ -242,7 +298,7 @@ class AtomicBlockStore:
             for v in versions:
                 by_version.setdefault(v, []).append(self._obj_dir(table, int(b), v))
         if not by_version:
-            return self.spark.createDataFrame([], schema)
+            return _empty(self.spark, schema)
         if not merge:
             paths = [p for ps in by_version.values() for p in ps]
             return self.spark.read.schema(schema).parquet(*paths)
@@ -339,7 +395,6 @@ class AtomicBlockStore:
         hash→bucket hint index for point-by-hash."""
         from ..api import RestFacade
         from ..config import DEFAULT_CONFIG
-        from .store import HashIndex
 
         return RestFacade(
             self.historical_queries(config),
@@ -348,20 +403,6 @@ class AtomicBlockStore:
         )
 
     # -- atomic upsert -----------------------------------------------------
-
-    def _prepare_batch(self, blocks, txs, events):
-        """Shared commit preamble: bucket the blocks, tag children with
-        their parent's bucket, list the touched buckets."""
-        blocks = blocks.withColumn("bucket", bucket_of(F.col("number")))
-        key = blocks.select(
-            F.col("hash").alias("_bh"), F.col("number").alias("_num"), "bucket"
-        )
-        txs = txs.join(key, txs["blockhash"] == key["_bh"], "inner").drop("_bh")
-        events = events.join(key, events["blockhash"] == key["_bh"], "inner").drop(
-            "_bh"
-        )
-        touched = [r[0] for r in blocks.select("bucket").distinct().collect()]
-        return blocks, txs, events, touched
 
     def upsert_batch(
         self, blocks: DataFrame, txs: DataFrame, events: DataFrame
@@ -385,7 +426,23 @@ class AtomicBlockStore:
         manifest = self._manifest()
         next_version = manifest["version"] + 1
 
-        blocks, txs, events, touched = self._prepare_batch(blocks, txs, events)
+        blocks, txs, events = _bucket_batch(blocks, txs, events)
+        try:
+            self._cow_write(manifest, next_version, blocks, txs, events)
+        finally:
+            blocks.unpersist()
+
+    def _cow_write(
+        self,
+        manifest: dict,
+        next_version: int,
+        blocks: DataFrame,
+        txs: DataFrame,
+        events: DataFrame,
+    ) -> None:
+        """Merge the bucketed batch into its touched buckets, write the
+        new bucket versions of all three tables, swap the manifest."""
+        touched = [r[0] for r in blocks.select("bucket").distinct().collect()]
         replaced = blocks.select(F.col("number").alias("_num")).distinct()
 
         # survivors ∪ new, computed against the CURRENT snapshot
@@ -394,7 +451,7 @@ class AtomicBlockStore:
         cur_blocks = self._read_table("blocks", manifest, buckets=touched)
         new_blocks = cur_blocks.join(
             replaced, cur_blocks["number"] == replaced["_num"], "left_anti"
-        ).unionByName(blocks.select(*[f.name for f in _SCHEMAS["blocks"]], "bucket"))
+        ).unionByName(blocks.select(*_cols("blocks")))
         # child survivors: parent hash still present in the new block set
         parents = new_blocks.select(F.col("hash").alias("_kh"))
 
@@ -403,9 +460,8 @@ class AtomicBlockStore:
             survivors = existing.join(
                 parents, existing["blockhash"] == F.col("_kh"), "left_semi"
             )
-            cols = [f.name for f in _SCHEMAS[table]] + ["bucket"]
-            return survivors.select(*cols).unionByName(
-                batch.drop("_num").select(*cols)
+            return survivors.select(*_cols(table)).unionByName(
+                batch.select(*_cols(table))
             )
 
         merged = {
@@ -417,7 +473,6 @@ class AtomicBlockStore:
         new_entries: dict[str, dict[str, int]] = {t: {} for t in _TABLES}
         time_stats: dict[str, list] = {}
         for table, df in merged.items():
-            sort_key = "number" if table == "blocks" else "blockhash"
             # one write per touched bucket (the manifest maps buckets to
             # versions, so each bucket needs its own directory) — persist
             # the merged frame across the loop or every bucket write
@@ -435,13 +490,8 @@ class AtomicBlockStore:
                         .collect()
                     }
                 for b in touched:
-                    out = self._obj_dir(table, int(b), next_version)
-                    (
-                        df.filter(F.col("bucket") == b)
-                        .sortWithinPartitions(sort_key)
-                        .coalesce(1)
-                        .write.mode("overwrite")
-                        .parquet(out)
+                    self._write_object(
+                        df.filter(F.col("bucket") == b), table, b, next_version
                     )
                     new_entries[table][str(int(b))] = next_version
             finally:
@@ -474,15 +524,7 @@ class AtomicBlockStore:
         # scheduling floors per micro-batch on a latency-sensitive
         # stream. The aggregate also materializes the persisted blocks
         # frame the writes below reuse.
-        blocks = blocks.withColumn("bucket", bucket_of(F.col("number")))
-        key = blocks.select(
-            F.col("hash").alias("_bh"), "bucket"
-        )
-        txs = txs.join(key, txs["blockhash"] == key["_bh"], "inner").drop("_bh")
-        events = events.join(
-            key, events["blockhash"] == key["_bh"], "inner"
-        ).drop("_bh")
-        blocks = blocks.persist()
+        blocks, txs, events = _bucket_batch(blocks, txs, events)
         stat_rows = (
             blocks.groupBy("bucket")
             .agg(F.min("time").alias("tmin"), F.max("time").alias("tmax"))
@@ -493,13 +535,9 @@ class AtomicBlockStore:
             str(int(r["bucket"])): [r["tmin"], r["tmax"]] for r in stat_rows
         }
         batch = {
-            "blocks": blocks.select(*[f.name for f in _SCHEMAS["blocks"]], "bucket"),
-            "transactions": txs.select(
-                *[f.name for f in _SCHEMAS["transactions"]], "bucket"
-            ),
-            "events": events.select(
-                *[f.name for f in _SCHEMAS["events"]], "bucket"
-            ),
+            "blocks": blocks.select(*_cols("blocks")),
+            "transactions": txs.select(*_cols("transactions")),
+            "events": events.select(*_cols("events")),
         }
         try:
             # the three tables land in DISJOINT object dirs, so their
@@ -511,15 +549,9 @@ class AtomicBlockStore:
 
             def _write(item) -> None:
                 table, df = item
-                sort_key = "number" if table == "blocks" else "blockhash"
                 for b in touched:
-                    out = self._obj_dir(table, int(b), next_version)
-                    (
-                        df.filter(F.col("bucket") == b)
-                        .sortWithinPartitions(sort_key)
-                        .coalesce(1)
-                        .write.mode("overwrite")  # idempotent crash replay
-                        .parquet(out)
+                    self._write_object(
+                        df.filter(F.col("bucket") == b), table, b, next_version
                     )
 
             with ThreadPoolExecutor(max_workers=3) as ex:
@@ -577,17 +609,10 @@ class AtomicBlockStore:
         if not folded:
             return 0
         for t in _TABLES:
-            sort_key = "number" if t == "blocks" else "blockhash"
             for bs in targets[t]:
                 df = self._read_table(t, manifest, buckets=[int(bs)]).persist()
                 try:
-                    out = self._obj_dir(t, int(bs), next_version)
-                    (
-                        df.sortWithinPartitions(sort_key)
-                        .coalesce(1)
-                        .write.mode("overwrite")
-                        .parquet(out)
-                    )
+                    self._write_object(df, t, bs, next_version)
                     if t == "blocks":
                         row = df.agg(
                             F.min("time").alias("tmin"), F.max("time").alias("tmax")
@@ -602,18 +627,50 @@ class AtomicBlockStore:
         self._commit_manifest(manifest)
         return folded
 
-    # -- publish log (same semantics as BlockStore) ------------------------
+    # -- publish log (T5 publish-once) -------------------------------------
 
     def published(self) -> DataFrame:
-        path = os.path.join(self.root, "_published")
+        path = self._path("_published")
         if not os.path.isdir(path):
-            return self.spark.createDataFrame([], "number long, hash string")
+            # crash recovery: a compaction interrupted mid-swap leaves the
+            # old log renamed aside — restore it rather than reporting an
+            # empty log (which would re-publish every block)
+            retired = path + "_retired"
+            if not os.path.isdir(retired):
+                return _empty(self.spark, "number long, hash string")
+            os.rename(retired, path)
         return self.spark.read.parquet(path)
 
     def mark_published(self, rows: DataFrame) -> None:
         rows.select("number", "hash").write.mode("append").parquet(
-            os.path.join(self.root, "_published")
+            self._path("_published")
         )
+
+    def compact_published(self) -> None:
+        """Rewrite the append-only publish log as one deduped file set.
+
+        The log grows one tiny file per micro-batch and keeps
+        reorged-away hashes forever; periodic compaction (e.g. alongside
+        the T7 repair sweep) bounds both file count and the anti-join
+        probe size. Dedup on (number, hash) preserves publish-once
+        semantics exactly. The tables need no such pass: a COW commit
+        writes each touched bucket as one sorted object, and delta
+        chains fold through ``compact()``.
+        """
+        path = self._path("_published")
+        if not os.path.isdir(path):
+            return
+        tmp = path + "_compacting"
+        self.published().dropDuplicates(["number", "hash"]).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(tmp)
+        # Swap via directory renames so the live log is never absent: a
+        # mode('overwrite') onto `path` deletes it before the rewrite
+        # lands, and a crash in that window would make the T5 anti-join
+        # see an empty log and re-publish every block. Rename is atomic
+        # on a POSIX filesystem; the worst crash outcome is a stale
+        # `_retired` directory, which ``published()`` restores.
+        _swap_in(tmp, path)
 
     # -- maintenance -------------------------------------------------------
 
@@ -634,7 +691,6 @@ class AtomicBlockStore:
         retention reasoning as Delta/Iceberg VACUUM) keeps concurrent
         maintenance safe; pass 0 only when no writer can be active.
         """
-        import shutil
         import time
 
         retained = self.snapshots()[-max(retain_snapshots, 0):] if retain_snapshots else []
@@ -674,3 +730,95 @@ class AtomicBlockStore:
                     shutil.rmtree(full, ignore_errors=True)
                     removed += 1
         return removed
+
+
+# -- hash→bucket hint index (SURVEY §7 risk 3) ------------------------------
+#
+# Point lookups by hash (P4: GetBlockByHash / GetTransactionByHash) can't
+# prune the number-bucketed layout — the hash says nothing about the
+# bucket. The reference leans on a Postgres B-tree; the columnar analog
+# is a SLIM append-only side index (hash, bucket): ~50 bytes/block, so
+# even a 20M-block chain indexes in ~1 GB of narrow parquet that scans
+# in a trice vs. the full fact tables, and the bucket it yields turns
+# the point read into a one-bucket scan. Compacted like the publish log.
+
+
+class HashIndex:
+    """Append-only (hash, bucket) hint index over an ``AtomicBlockStore``."""
+
+    def __init__(self, store: AtomicBlockStore) -> None:
+        self.store = store
+
+    def _path(self) -> str:
+        return self.store._path("_hashidx")
+
+    def append(self, blocks: DataFrame) -> None:
+        """Record a batch's block hashes (call right after
+        ``upsert_batch`` with the same normalized blocks)."""
+        blocks.select(
+            F.lower("hash").alias("hash"), bucket_of(F.col("number")).alias("bucket")
+        ).write.mode("append").parquet(self._path())
+
+    def read(self) -> DataFrame:
+        if not os.path.isdir(self._path()):
+            return _empty(self.store.spark, "hash string, bucket long")
+        return self.store.spark.read.parquet(self._path())
+
+    def bucket_of_hash(self, block_hash: str) -> int | None:
+        """Resolve a block hash to its bucket; None if unindexed. One
+        scan of the slim index — never of the fact tables — and no Spark
+        job at all while the index has never been written. Reorged-away
+        hashes may linger (like the publish log); the caller's point
+        read simply finds no row in the bucket, which is correct."""
+        if not os.path.isdir(self._path()):
+            return None
+        rows = (
+            self.read()
+            .filter(F.col("hash") == block_hash.lower())
+            .select("bucket")
+            .limit(1)
+            .collect()
+        )
+        return int(rows[0][0]) if rows else None
+
+    def _bucket_slice(self, table: str, bucket: int | None) -> DataFrame:
+        """The *table* rows for one bucket, path-pruned through the
+        manifest; the whole table when the bucket is unknown."""
+        if bucket is None:
+            return self.store.read(table)
+        return self.store.read_buckets(table, [bucket])
+
+    def lookup_block(self, block_hash: str) -> DataFrame:
+        """P4 point read pruned through the index: resolve the bucket,
+        then scan ONLY that bucket of ``blocks``. Falls back to the full
+        scan when the hash is unindexed (pre-index history)."""
+        b = self.bucket_of_hash(block_hash)
+        return (
+            self._bucket_slice("blocks", b)
+            .filter(F.lower(F.col("hash")) == block_hash.lower())
+            .drop("bucket")
+        )
+
+    def lookup_block_transactions(self, block_hash: str) -> DataFrame:
+        """Transactions of one block, bucket-pruned through the index:
+        fact rows live in their parent block's bucket, so the block's
+        bucket prunes the tx scan too."""
+        b = self.bucket_of_hash(block_hash)
+        return (
+            self._bucket_slice("transactions", b)
+            .filter(F.lower(F.col("blockhash")) == block_hash.lower())
+            .drop("bucket")
+        )
+
+    def compact(self) -> None:
+        """Dedup + rewrite through the same rename swap as the publish
+        log (the index is advisory, so a lost index only costs
+        performance, never correctness)."""
+        path = self._path()
+        if not os.path.isdir(path):
+            return
+        tmp = path + "_compacting"
+        self.read().dropDuplicates(["hash"]).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(tmp)
+        _swap_in(tmp, path)

@@ -179,3 +179,18 @@ class TestChainOfCustody:
         ):
             assert field in src, field
         assert 'if contamination_verdict(att["steal"])' in src
+
+
+def test_capture_plans_refuses_flag_like_outdir(tmp_path):
+    # `capture_plans.py --help` once wrote 70 plan dumps into a
+    # directory named --help; a flag-like outdir must exit non-zero
+    # before any Spark session starts or any directory is made
+    p = subprocess.run(
+        [sys.executable, str(REPO / "tools" / "capture_plans.py"), "--help"],
+        capture_output=True,
+        text=True,
+        cwd=tmp_path,
+    )
+    assert p.returncode != 0
+    assert "looks like a flag" in p.stderr
+    assert list(tmp_path.iterdir()) == []

@@ -159,7 +159,7 @@ def test_landed_docs_feed_the_ingest_pipeline(rpc, spark, tmp_path):
     ingest batch, and read the rows back from the store."""
     from evm_indexer_spark.sources.normalize import RAW_BLOCK_SCHEMA
     from evm_indexer_spark.streaming.ingest import process_raw_batch
-    from evm_indexer_spark.streaming.store import BlockStore
+    from evm_indexer_spark.streaming.txstore import AtomicBlockStore
 
     url, _ = rpc
     f = BlockFetcher(url, concurrency=4)
@@ -169,7 +169,7 @@ def test_landed_docs_feed_the_ingest_pipeline(rpc, spark, tmp_path):
     assert path.endswith(".json") and not path.endswith(".tmp")
 
     raw = spark.read.schema(RAW_BLOCK_SCHEMA).json(str(landing))
-    store = BlockStore(spark, str(tmp_path / "store"))
+    store = AtomicBlockStore(spark, str(tmp_path / "store"))
     process_raw_batch(store, raw)
     assert store.blocks().count() == 5
     assert store.transactions().count() == 15

@@ -10,7 +10,7 @@ from evm_indexer_spark.api import RestFacade
 from evm_indexer_spark.operators.historical import HistoricalQueries
 from evm_indexer_spark.sources.rawgen import raw_block_doc, write_landing_files
 from evm_indexer_spark.streaming.ingest import start_ingest_stream
-from evm_indexer_spark.streaming.store import BlockStore
+from evm_indexer_spark.streaming.txstore import AtomicBlockStore, HashIndex
 
 N_BLOCKS = 120
 
@@ -20,7 +20,7 @@ def store(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("e2e")
     landing = str(root / "landing")
     write_landing_files(landing, N_BLOCKS, n_files=4)
-    s = BlockStore(spark, str(root / "store"))
+    s = AtomicBlockStore(spark, str(root / "store"))
     q = start_ingest_stream(spark, landing, s, str(root / "ckpt"))
     q.awaitTermination(180)
     return s
@@ -95,8 +95,6 @@ def test_grand_loop_all_components(spark, tmp_path):
         RespClient,
         make_resp_publisher,
     )
-    from evm_indexer_spark.streaming.store import HashIndex
-    from evm_indexer_spark.streaming.txstore import AtomicBlockStore
 
     from .test_streaming import make_raw, raw_block
 
@@ -177,7 +175,6 @@ def test_resp_depth_reorg_broker_restart_at_least_once(spark, tmp_path):
         consume_loop,
         make_resp_publisher,
     )
-    from evm_indexer_spark.streaming.store import BlockStore
 
     from .test_streaming import raw_block
 
@@ -185,7 +182,7 @@ def test_resp_depth_reorg_broker_restart_at_least_once(spark, tmp_path):
     host, port = broker.host, broker.port
     landing = tmp_path / "landing"
     landing.mkdir()
-    store = BlockStore(spark, str(tmp_path / "store"))
+    store = AtomicBlockStore(spark, str(tmp_path / "store"))
     ckpt = str(tmp_path / "ckpt")
     publish = make_resp_publisher(host, port)
 
@@ -350,7 +347,6 @@ def test_full_stack_soak_ingest_dedup_audit(spark, tmp_path):
         RespClient,
         make_resp_publisher,
     )
-    from evm_indexer_spark.streaming.store import BlockStore
 
     from .test_streaming import raw_block
 
@@ -385,7 +381,7 @@ def test_full_stack_soak_ingest_dedup_audit(spark, tmp_path):
     audit_landing.mkdir()
     vec_landing = tmp_path / "vecs"
     vec_landing.mkdir()
-    store = BlockStore(spark, str(tmp_path / "store"))
+    store = AtomicBlockStore(spark, str(tmp_path / "store"))
     ingest_ckpt = str(tmp_path / "ckpt_ingest")
     index = MinHashBucketIndex(
         spark, str(tmp_path / "ix"), num_hashes=64, bands=64

@@ -1,25 +1,25 @@
-"""Partition pruning over the bucket store: a guardrail-bounded range
-query must touch only its bucket's partitions."""
+"""Bucket pruning over the block store: a guardrail-bounded read must
+scan only its buckets' object dirs, resolved from the manifest."""
 
 from __future__ import annotations
 
 import io
+import os
 from contextlib import redirect_stdout
 
 import pytest
-from pyspark.sql import functions as F
 
 from evm_indexer_spark.schemas import BLOCK_BUCKET_SIZE
 from evm_indexer_spark.sources.rawgen import raw_block_doc
 from evm_indexer_spark.sources.normalize import RAW_BLOCK_SCHEMA
 from evm_indexer_spark.streaming.ingest import process_raw_batch
-from evm_indexer_spark.streaming.store import BlockStore
+from evm_indexer_spark.streaming.txstore import AtomicBlockStore, HashIndex
 
 
 @pytest.fixture(scope="module")
-def store(spark, tmp_path_factory):
-    root = tmp_path_factory.mktemp("pruned")
-    s = BlockStore(spark, str(root))
+def atomic_store(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("atomic_pruned")
+    s = AtomicBlockStore(spark, str(root))
     docs = [
         raw_block_doc(n)
         for start in (0, BLOCK_BUCKET_SIZE, 2 * BLOCK_BUCKET_SIZE)
@@ -36,80 +36,38 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
-def test_number_range_prunes_block_partitions(store):
-    hq = store.historical_queries()
-    frm = BLOCK_BUCKET_SIZE + 5
-    df = hq.get_blocks_by_number_range(frm, frm + 10)
-    plan = _plan(df)
-    # the scan must carry a bucket partition filter, not just a row filter
-    assert "PartitionFilters" in plan
-    assert "bucket" in plan.split("PartitionFilters", 1)[1][:200], plan
-    assert df.count() == 11
-    assert df.select(F.min("number")).first()[0] == frm
-
-
-def test_unwired_queries_do_not_prune(store):
+def test_unwired_queries_do_not_prune(atomic_store):
     from evm_indexer_spark.operators.historical import HistoricalQueries
 
-    hq = HistoricalQueries(store.blocks(), store.transactions(), store.events())
+    hq = HistoricalQueries(
+        atomic_store.blocks(), atomic_store.transactions(), atomic_store.events()
+    )
     plan = _plan(hq.get_blocks_by_number_range(5, 15))
     seg = plan.split("PartitionFilters", 1)
     assert len(seg) == 1 or "bucket#" not in seg[1][:120]
 
 
-def test_fact_side_prunes_too(store):
-    hq = store.historical_queries()
-    frm = 2 * BLOCK_BUCKET_SIZE
-    df = hq.get_events_from_contract_by_block_number_range(
-        "0x" + "0" * 40, frm, frm + 20
-    )
-    plan = _plan(df)
-    # both the blocks slice and the events fact scan carry bucket filters
-    assert plan.count("PartitionFilters") >= 2
-    first, second = plan.split("PartitionFilters")[1:3]
-    assert "bucket" in first[:200] and "bucket" in second[:200]
-    assert df.count() > 0
-
-
-def test_pruned_results_match_unpruned(store):
-    pruned = store.historical_queries()
-    plain = __import__(
-        "evm_indexer_spark.operators.historical", fromlist=["HistoricalQueries"]
-    ).HistoricalQueries(store.blocks(), store.transactions(), store.events())
-    frm = BLOCK_BUCKET_SIZE - 5  # straddles two buckets
-    a = sorted(r["number"] for r in pruned.get_blocks_by_number_range(frm, frm + 20).collect())
-    b = sorted(r["number"] for r in plain.get_blocks_by_number_range(frm, frm + 20).collect())
-    # only 100000..100015 exist in-range (bucket 0 ends at number 29)
-    assert a == b and len(a) == 16
-
-
 def test_hash_index_prunes_point_lookup(spark, tmp_path):
     """P4 by hash through the hint index scans one bucket, not the chain
     (SURVEY §7 risk 3); unindexed hashes fall back to the full scan."""
-    import json
-
-    from evm_indexer_spark.streaming.ingest import process_raw_batch
-    from evm_indexer_spark.streaming.store import BlockStore, HashIndex
-    from evm_indexer_spark.schemas import BLOCK_BUCKET_SIZE
+    from evm_indexer_spark.sources.normalize import normalize_blocks
 
     from .test_streaming import make_raw, raw_block
 
-    store = BlockStore(spark, str(tmp_path / "s"))
+    store = AtomicBlockStore(spark, str(tmp_path / "s"))
     far = BLOCK_BUCKET_SIZE * 7
     docs = [raw_block(0), raw_block(1), raw_block(far)]
     process_raw_batch(store, make_raw(spark, docs))
     idx = HashIndex(store)
-    from evm_indexer_spark.sources.normalize import normalize_blocks
-
     idx.append(normalize_blocks(make_raw(spark, docs)))
 
     target = raw_block(far)["hash"].lower()
     assert idx.bucket_of_hash(target) == 7
     row = idx.lookup_block(target).collect()
     assert len(row) == 1 and row[0]["number"] == far
-    # the pruned read filters on the bucket value BEFORE the hash match
-    plan = idx.lookup_block(target)._jdf.queryExecution().optimizedPlan().toString()
-    assert "bucket" in plan and "= 7" in plan.replace("7L", "7"), plan
+    # the pruned read resolves bucket 7's object dir before the hash match
+    files = idx.lookup_block(target).inputFiles()
+    assert files and all("/b7/" in f for f in files), files
 
     # unindexed hash → full-scan fallback still answers
     process_raw_batch(store, make_raw(spark, [raw_block(2)]))  # not appended to idx
@@ -120,19 +78,19 @@ def test_hash_index_prunes_point_lookup(spark, tmp_path):
     assert idx.bucket_of_hash(target) == 7
 
 
-@pytest.fixture(scope="module")
-def atomic_store(spark, tmp_path_factory):
-    from evm_indexer_spark.streaming.txstore import AtomicBlockStore
-
-    root = tmp_path_factory.mktemp("atomic_pruned")
-    s = AtomicBlockStore(spark, str(root))
-    docs = [
-        raw_block_doc(n)
-        for start in (0, BLOCK_BUCKET_SIZE, 2 * BLOCK_BUCKET_SIZE)
-        for n in range(start, start + 30)
-    ]
-    process_raw_batch(s, spark.createDataFrame(docs, RAW_BLOCK_SCHEMA))
-    return s
+def test_absent_hash_index_launches_no_job(spark, tmp_path):
+    """A store whose hash index was never written answers by-hash
+    bucket lookups with None without scheduling a single Spark job."""
+    idx = HashIndex(AtomicBlockStore(spark, str(tmp_path / "s")))
+    assert not os.path.isdir(idx._path())
+    sc = spark.sparkContext
+    group = "absent-hash-index-probe"
+    sc.setJobGroup(group, group, False)
+    try:
+        assert idx.bucket_of_hash("0x" + "ab" * 32) is None
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_manifest_path_pruning_window_read(atomic_store):
@@ -260,75 +218,31 @@ def test_zone_map_legacy_manifest_falls_back(atomic_store):
             f.write(orig)
 
 
-def test_zone_map_time_pruning_hive_store(store):
-    """The hive-layout store prunes by-time reads too — via a bucket
-    partition filter derived from its _time_stats side file."""
-    assert store.buckets_for_time_range(
-        _t(BLOCK_BUCKET_SIZE), _t(BLOCK_BUCKET_SIZE + 29)
-    ) == [1]
-    hq = store.historical_queries()
-    frm = _t(BLOCK_BUCKET_SIZE + 5)
-    df = hq.get_blocks_by_time_range(frm, frm + 12 * 10)
-    plan = _plan(df)
-    assert "PartitionFilters" in plan
-    assert "bucket" in plan.split("PartitionFilters", 1)[1][:250], plan
-    assert df.count() == 11
-    # disjoint window resolves to no buckets at all
-    assert store.buckets_for_time_range(_t(10**9), _t(10**9) + 1) == []
-
-
-def test_zone_map_hive_fact_side_prunes(store):
-    hq = store.historical_queries()
-    frm = _t(2 * BLOCK_BUCKET_SIZE)
-    df = hq.get_events_from_contract_by_block_time_range(
-        "0x" + "0" * 40, frm, frm + 12 * 20
-    )
-    plan = _plan(df)
-    assert plan.count("PartitionFilters") >= 2, plan
-    assert df.count() > 0
-
-
-def test_rest_facade_default_hash_index_both_backends(
-    spark, store, atomic_store, tmp_path
-):
+def test_rest_facade_default_hash_index_both_backends(spark, atomic_store):
     """store.rest_facade() must serve point-by-hash reads through the
-    hint index by default: one bucket scanned on either backend."""
+    hint index by default, scanning one bucket's object dirs."""
     from evm_indexer_spark.sources.normalize import normalize_blocks
-    from evm_indexer_spark.sources.rawgen import raw_block_doc as rbd
-    from evm_indexer_spark.streaming.store import HashIndex
 
-    for s in (store, atomic_store):
-        idx = HashIndex(s)
-        docs = [
-            rbd(n)
-            for start in (0, BLOCK_BUCKET_SIZE, 2 * BLOCK_BUCKET_SIZE)
-            for n in range(start, start + 30)
-        ]
-        raw = spark.createDataFrame(docs, RAW_BLOCK_SCHEMA)
-        idx.append(normalize_blocks(raw))
+    idx = HashIndex(atomic_store)
+    docs = [
+        raw_block_doc(n)
+        for start in (0, BLOCK_BUCKET_SIZE, 2 * BLOCK_BUCKET_SIZE)
+        for n in range(start, start + 30)
+    ]
+    raw = spark.createDataFrame(docs, RAW_BLOCK_SCHEMA)
+    idx.append(normalize_blocks(raw))
 
-        target_number = 2 * BLOCK_BUCKET_SIZE + 7
-        h = rbd(target_number)["hash"].lower()
-        facade = s.rest_facade()
-        assert facade.hash_index is not None
-        out = facade.block({"hash": h})
-        assert int(out["number"]) == target_number
+    target_number = 2 * BLOCK_BUCKET_SIZE + 7
+    h = raw_block_doc(target_number)["hash"].lower()
+    facade = atomic_store.rest_facade()
+    assert facade.hash_index is not None
+    out = facade.block({"hash": h})
+    assert int(out["number"]) == target_number
 
-        # the underlying pruned lookup touches one bucket only: file-level
-        # for the manifest store (paths resolved before the scan);
-        # partition-filter for the hive layout (inputFiles() is listed
-        # before partition pruning there, so assert the plan instead)
-        for lookup in (
-            facade.hash_index.lookup_block(h),
-            facade.hash_index.lookup_block_transactions(h),
-        ):
-            if hasattr(s, "read_buckets"):
-                files = lookup.inputFiles()
-                assert files and all("/b2/" in f for f in files), files
-            else:
-                plan = (
-                    lookup._jdf.queryExecution().optimizedPlan().toString()
-                )
-                assert "bucket" in plan and "= 2" in plan.replace(
-                    "2L", "2"
-                ), plan
+    # the pruned lookup resolves bucket 2's paths before the scan
+    for lookup in (
+        facade.hash_index.lookup_block(h),
+        facade.hash_index.lookup_block_transactions(h),
+    ):
+        files = lookup.inputFiles()
+        assert files and all("/b2/" in f for f in files), files

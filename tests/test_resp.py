@@ -161,7 +161,7 @@ def test_ingest_stream_publishes_to_resp_broker(spark, tmp_path, broker):
     restart with duplicate re-delivery."""
     from evm_indexer_spark.streaming.ingest import start_ingest_stream
     from evm_indexer_spark.streaming.resp import make_resp_publisher
-    from evm_indexer_spark.streaming.store import BlockStore
+    from evm_indexer_spark.streaming.txstore import AtomicBlockStore
 
     from .test_streaming import raw_block
 
@@ -170,7 +170,7 @@ def test_ingest_stream_publishes_to_resp_broker(spark, tmp_path, broker):
 
     landing = tmp_path / "landing"
     landing.mkdir()
-    store = BlockStore(spark, str(tmp_path / "store"))
+    store = AtomicBlockStore(spark, str(tmp_path / "store"))
     ckpt = str(tmp_path / "ckpt")
     pub = make_resp_publisher(broker.host, broker.port)
 
@@ -204,11 +204,11 @@ def test_publisher_failure_leaves_log_untouched_and_replays(spark, tmp_path):
     fresh set and re-sends — appending first would silently drop the
     notifications forever."""
     from evm_indexer_spark.streaming.ingest import process_raw_batch
-    from evm_indexer_spark.streaming.store import BlockStore
+    from evm_indexer_spark.streaming.txstore import AtomicBlockStore
 
     from .test_streaming import make_raw, raw_block
 
-    store = BlockStore(spark, str(tmp_path / "s"))
+    store = AtomicBlockStore(spark, str(tmp_path / "s"))
     raw = make_raw(spark, [raw_block(0), raw_block(1)])
 
     calls: list[int] = []

@@ -26,7 +26,7 @@ from evm_indexer_spark.streaming.ingest import (
     repair_gaps,
     start_ingest_stream,
 )
-from evm_indexer_spark.streaming.store import BlockStore
+from evm_indexer_spark.streaming.txstore import AtomicBlockStore
 
 
 def raw_block(number: int, salt: str = "", n_tx: int = 2) -> dict:
@@ -120,7 +120,7 @@ class TestNormalize:
 
 class TestStore:
     def test_upsert_and_reorg_replace(self, spark, tmp_path):
-        store = BlockStore(spark, str(tmp_path / "store"))
+        store = AtomicBlockStore(spark, str(tmp_path / "store"))
         batch1 = make_raw(spark, [raw_block(n) for n in range(5)])
         process_raw_batch(store, batch1)
         assert store.blocks().count() == 5
@@ -145,7 +145,7 @@ class TestStore:
         assert store.events().filter(F.col("blockhash") == old_hash3).count() == 0
 
     def test_publish_once(self, spark, tmp_path):
-        store = BlockStore(spark, str(tmp_path / "store"))
+        store = AtomicBlockStore(spark, str(tmp_path / "store"))
         batch = make_raw(spark, [raw_block(n) for n in range(3)])
         fresh1 = process_raw_batch(store, batch)
         assert fresh1.count() == 3
@@ -165,7 +165,7 @@ class TestStore:
         subset must carry the full batch content — the O(batch)
         payload source that spares the publisher three per-micro-batch
         full-store scans."""
-        store = BlockStore(spark, str(tmp_path / "store"))
+        store = AtomicBlockStore(spark, str(tmp_path / "store"))
         seen2, seen3 = [], []
 
         def cb2(store_, fresh):
@@ -221,7 +221,7 @@ class TestStore:
         assert _accepts_batch_arg(three)
         assert not _accepts_batch_arg(functools.partial(three, None))
 
-        store = BlockStore(spark, str(tmp_path / "store"))
+        store = AtomicBlockStore(spark, str(tmp_path / "store"))
         calls = []
 
         def cb(store_, fresh, *, batch=None):
@@ -235,7 +235,7 @@ class TestStore:
 
 class TestFinalityAndRepair:
     def test_depth_gate(self, spark, tmp_path):
-        store = BlockStore(spark, str(tmp_path / "store"))
+        store = AtomicBlockStore(spark, str(tmp_path / "store"))
         process_raw_batch(store, make_raw(spark, [raw_block(n) for n in range(10)]))
         confirmed = confirmed_blocks(store.blocks(), depth=3)
         assert sorted(r["number"] for r in confirmed.collect()) == list(range(7))
@@ -244,7 +244,7 @@ class TestFinalityAndRepair:
         assert confirmed2.count() == 10
 
     def test_gap_repair(self, spark, tmp_path):
-        store = BlockStore(spark, str(tmp_path / "store"))
+        store = AtomicBlockStore(spark, str(tmp_path / "store"))
         docs = [raw_block(n) for n in range(10) if n not in (4, 7)]
         process_raw_batch(store, make_raw(spark, docs))
         missing = repair_gaps(spark, store, 0, 9)
@@ -255,7 +255,7 @@ class TestStreamEndToEnd:
     def test_file_source_ingest(self, spark, tmp_path):
         landing = tmp_path / "landing"
         landing.mkdir()
-        store = BlockStore(spark, str(tmp_path / "store"))
+        store = AtomicBlockStore(spark, str(tmp_path / "store"))
         ckpt = str(tmp_path / "ckpt")
 
         with open(landing / "b1.json", "w") as f:
@@ -353,7 +353,6 @@ def test_confirmed_mismatch_detection(spark, tmp_path):
         confirmed_mismatches,
         process_raw_batch,
     )
-    from evm_indexer_spark.streaming.store import BlockStore
     from evm_indexer_spark.sources.normalize import RAW_BLOCK_SCHEMA
 
     def raw(num, hsh):
@@ -365,7 +364,7 @@ def test_confirmed_mismatch_detection(spark, tmp_path):
             "transactions": [],
         }
 
-    store = BlockStore(spark, str(tmp_path / "store"))
+    store = AtomicBlockStore(spark, str(tmp_path / "store"))
     first = spark.createDataFrame(
         [raw(1, "0xAA"), raw(2, "0xBB")], RAW_BLOCK_SCHEMA
     )
@@ -385,9 +384,8 @@ def test_confirmed_mismatch_detection(spark, tmp_path):
 
 
 def test_publish_log_compaction(spark, tmp_path):
-    from evm_indexer_spark.streaming.store import BlockStore
 
-    store = BlockStore(spark, str(tmp_path / "s"))
+    store = AtomicBlockStore(spark, str(tmp_path / "s"))
     for i in range(4):
         store.mark_published(
             spark.createDataFrame([(i, f"0x{i}"), (0, "0x0")], "number long, hash string")
@@ -404,7 +402,6 @@ def test_malformed_docs_dropped(spark, tmp_path):
     import json, os
     from evm_indexer_spark.sources.normalize import RAW_BLOCK_SCHEMA
     from evm_indexer_spark.streaming.ingest import start_ingest_stream
-    from evm_indexer_spark.streaming.store import BlockStore
 
     landing = tmp_path / "l"
     landing.mkdir()
@@ -419,7 +416,7 @@ def test_malformed_docs_dropped(spark, tmp_path):
         f.write(json.dumps(good) + "\n")
         f.write("this is not json at all\n")
         f.write(json.dumps({"number": 8}) + "\n")  # missing hash
-    store = BlockStore(spark, str(tmp_path / "s"))
+    store = AtomicBlockStore(spark, str(tmp_path / "s"))
     q = start_ingest_stream(spark, str(landing), store, str(tmp_path / "c"))
     q.awaitTermination(120)
     rows = store.blocks().collect()
@@ -432,9 +429,8 @@ def test_publish_log_compaction_crash_recovery(spark, tmp_path):
     publish log: published() restores the renamed-aside copy."""
     import os
 
-    from evm_indexer_spark.streaming.store import BlockStore
 
-    store = BlockStore(spark, str(tmp_path / "s"))
+    store = AtomicBlockStore(spark, str(tmp_path / "s"))
     store.mark_published(
         spark.createDataFrame([(1, "0x1"), (2, "0x2")], "number long, hash string")
     )
@@ -461,7 +457,7 @@ class TestReorgConfirmedLoop:
     def test_reorg_replace_republish_once_across_restart(self, spark, tmp_path):
         landing = tmp_path / "landing"
         landing.mkdir()
-        store = BlockStore(spark, str(tmp_path / "store"))
+        store = AtomicBlockStore(spark, str(tmp_path / "store"))
         ckpt = str(tmp_path / "ckpt")
 
         # leg 1: blocks 0..9 land and publish

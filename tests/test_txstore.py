@@ -36,8 +36,8 @@ def test_upsert_and_reorg_replace(spark, tmp_path):
 
 def test_crash_before_manifest_swap_is_invisible(spark, tmp_path, monkeypatch):
     """All data written but the manifest swap dies: readers still see the
-    previous snapshot for ALL THREE tables (the property the default
-    store lacks), vacuum reclaims the orphans, and replaying the batch
+    previous snapshot for ALL THREE tables (the reference's one-transaction
+    StoreBlock), vacuum reclaims the orphans, and replaying the batch
     commits cleanly."""
     store = AtomicBlockStore(spark, str(tmp_path / "s"))
     process_raw_batch(store, make_raw(spark, [raw_block(0), raw_block(1)]))
@@ -89,8 +89,8 @@ def test_manifest_is_single_commit_point(spark, tmp_path):
 
 
 def test_stream_ingest_over_atomic_store(spark, tmp_path):
-    """The ingest stream is storage-agnostic: the atomic backend slots in
-    under start_ingest_stream with checkpoint restart + publish-once."""
+    """The store runs under start_ingest_stream with checkpoint restart
+    + publish-once."""
     landing = tmp_path / "landing"
     landing.mkdir()
     store = AtomicBlockStore(spark, str(tmp_path / "store"))
@@ -136,7 +136,7 @@ def test_read_buckets_prunes_paths(spark, tmp_path):
 def test_hash_index_works_over_atomic_store(spark, tmp_path):
     from evm_indexer_spark.schemas import BLOCK_BUCKET_SIZE
     from evm_indexer_spark.sources.normalize import normalize_blocks
-    from evm_indexer_spark.streaming.store import HashIndex
+    from evm_indexer_spark.streaming.txstore import HashIndex
 
     store = AtomicBlockStore(spark, str(tmp_path / "s"))
     far = BLOCK_BUCKET_SIZE * 4

@@ -23,6 +23,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def main() -> None:
     outdir = sys.argv[1] if len(sys.argv) > 1 else "plans/r15"
+    if outdir.startswith("-"):
+        # a flag typed where the directory goes (e.g. --help) would
+        # otherwise become a directory of plan dumps
+        sys.exit(f"capture_plans: output directory {outdir!r} looks like a flag\n{__doc__}")
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     only = set(sys.argv[3:])
     os.makedirs(outdir, exist_ok=True)
