@@ -3299,9 +3299,9 @@ def q83(spark, sf):
     index holds the FULL corpus's slim (id, band, bh) rows — the state
     ``streaming/dedup_stream.MinHashBucketIndex`` persists — and a
     reorg retracts doc set R. The post-retraction read path is the
-    index's tombstone semantics (``live_buckets``,
-    dedup_stream.py:632): one anti-join of the persisted rows against
-    the retracted ids — O(index scan + |R|), the corpus is never
+    index's tombstone semantics (``MinHashBucketIndex.live_buckets``):
+    one anti-join of the persisted rows against the retracted ids —
+    O(index scan + |R|), the corpus is never
     re-signed — and the surviving candidates verified on the surviving
     text must CONVERGE to the batch truth of the surviving corpus
     (q27's oracle minus R). Recall is inherited: removing docs only

@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..streaming import epochlog
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -615,9 +617,8 @@ class IvfServingIndex:
     """Build-once / query-many IVF index — the serving shape at 100 TB,
     where an index you rebuild per query is not an index.
 
-    Mirrors the ``MinHashBucketIndex`` layout discipline: vectors live
-    under ``path/vectors/batch=<id>/list_id=*/`` (epoch-keyed overwrite
-    — a re-delivered batch replaces, never duplicates), the coarse
+    The vectors are an epoch log (``streaming/epochlog``) under
+    ``path/vectors/batch=<id>/list_id=*/``, the coarse
     quantizer's centroids and the exact row schema live in small JSON
     sidecars, and a ``_params`` stamp pins (n_lists, seed, dim) for the
     index lifetime (atomic create-if-absent; reopening with different
@@ -662,8 +663,6 @@ class IvfServingIndex:
     ) -> None:
         import posixpath
 
-        from ..streaming.dedup_stream import _claim_stamp
-
         self.spark = spark
         self.path = path
         self.centroids = centroids
@@ -675,7 +674,9 @@ class IvfServingIndex:
         self._schema_json = schema_json
         self._vectors_dir = posixpath.join(path, "vectors")
         self._tombstones_dir = posixpath.join(path, "tombstones")
-        _claim_stamp(spark, path, self._MARKER, f"{n_lists},{seed},{dim}")
+        epochlog._claim_stamp(
+            spark, path, self._MARKER, f"{n_lists},{seed},{dim}"
+        )
 
     # -- construction ----------------------------------------------------
 
@@ -713,11 +714,9 @@ class IvfServingIndex:
         import json
         import posixpath
 
-        from ..streaming.dedup_stream import _list_batch_dirs
-
         spark = df.sparkSession
         vectors_dir = posixpath.join(path, "vectors")
-        prior = _list_batch_dirs(spark, vectors_dir)
+        prior = epochlog.batch_dirs(spark, vectors_dir)
         if [d for d in prior if posixpath.basename(d) != "batch=0"]:
             raise ValueError(
                 f"index at {path} already holds appended batches "
@@ -748,10 +747,8 @@ class IvfServingIndex:
             spark, path, centroids, n_lists, seed, dim, row_schema.json(),
             codebooks=books, scale=scale,
         )
-        assigned.select(*cols, "list_id").write.partitionBy(
-            "list_id"
-        ).mode("overwrite").parquet(
-            posixpath.join(idx._vectors_dir, "batch=0")
+        epochlog.write(
+            assigned.select(*cols, "list_id"), idx._vectors_dir, 0, "list_id"
         )
         # sidecars go through the Hadoop FS like the stamp and the
         # vectors — local open() would break every non-local index path
@@ -797,20 +794,15 @@ class IvfServingIndex:
 
     # -- query -----------------------------------------------------------
 
-    def vectors(self) -> DataFrame:
+    def _row_schema(self):
         from pyspark.sql.types import StructType
 
-        schema = StructType.fromJson(__import__("json").loads(self._schema_json))
-        # batch/list_id are directory-derived partition columns; the
-        # stored schema covers the data columns, so no footer job runs
-        data_schema = StructType(
-            [f for f in schema.fields if f.name not in ("list_id",)]
-        )
-        return (
-            self.spark.read.schema(data_schema)
-            .option("basePath", self._vectors_dir)
-            .parquet(self._vectors_dir)
-        )
+        return StructType.fromJson(__import__("json").loads(self._schema_json))
+
+    def vectors(self) -> DataFrame:
+        # list_id is a directory-derived partition column typed by the
+        # stored schema, so no footer job runs
+        return epochlog.read(self.spark, self._vectors_dir, self._row_schema())
 
     def indexed_ids(self, exclude_batch: int | None = None) -> DataFrame:
         """Slim (id) scan of the indexed rows, optionally excluding one
@@ -818,47 +810,21 @@ class IvfServingIndex:
         (excluding the current epoch, so a crashed epoch reprocesses in
         full; the column projection keeps the guard one thin column
         scan, never a vector read)."""
-        import json as _json
-
-        import posixpath
-
-        from pyspark.sql.types import StructType
-
-        from ..streaming.dedup_stream import _list_batch_dirs
-
-        stored = StructType.fromJson(_json.loads(self._schema_json))
-        id_schema = StructType([stored["id"]])
-        dirs = [
-            d
-            for d in _list_batch_dirs(self.spark, self._vectors_dir)
-            if exclude_batch is None
-            or posixpath.basename(d) != f"batch={exclude_batch}"
-        ]
-        if not dirs:
-            return self.spark.createDataFrame([], id_schema)
-        return (
-            self.spark.read.schema(id_schema)
-            .option("basePath", self._vectors_dir)
-            .parquet(*dirs)
-            .select("id")
-        )
+        return epochlog.read(
+            self.spark, self._vectors_dir, self._id_schema(), exclude_batch
+        ).select("id")
 
     def _id_schema(self):
-        import json as _json
-
         from pyspark.sql.types import StructType
 
-        stored = StructType.fromJson(_json.loads(self._schema_json))
-        return StructType([stored["id"]])
+        return StructType([self._row_schema()["id"]])
 
     def tombstones(self) -> DataFrame | None:
         """Slim (id) DataFrame of deleted ids, ``None`` when the index
         has none — the None fast path keeps undeleted indexes at ZERO
         extra plan nodes and zero extra file listings beyond one
         driver-side exists/list call."""
-        from ..streaming.dedup_stream import _tombstones_df
-
-        return _tombstones_df(
+        return epochlog._tombstones_df(
             self.spark, self._tombstones_dir, schema=self._id_schema()
         )
 
@@ -885,9 +851,7 @@ class IvfServingIndex:
         A delete is TERMINAL until compact: re-appending the same id
         leaves it masked (the anti-join matches every physical copy),
         so delete → compact → append is the resurrection order."""
-        from ..streaming.dedup_stream import _append_tombstones
-
-        _append_tombstones(
+        epochlog._append_tombstones(
             self.spark, self._tombstones_dir, ids, batch_id,
             schema=self._id_schema(),
         )
@@ -897,69 +861,40 @@ class IvfServingIndex:
         batch dir into the next ``batch=base<G>`` generation
         (partitioned by cell, ``files_per_cell`` files each — the
         small-files consolidation pass every arrival-heavy index
-        needs), then delete the folded batch dirs and ALL tombstone
-        dirs. Same hidden-dir + atomic-rename publication as
-        ``MinHashBucketIndex.compact``; single-writer by contract, and
-        concurrent READERS planned against the old listing keep
-        resolving (dirs are deleted only after the rename lands).
-        Returns the number of batch dirs folded."""
-        import posixpath
+        needs) and clear the consumed tombstones
+        (``epochlog.compact_tombstoned``). Concurrent READERS planned
+        against the old listing keep resolving (dirs are deleted only
+        after the rename lands). Returns the number of batch dirs
+        folded."""
 
-        from ..streaming.dedup_stream import _hadoop, _list_batch_dirs
-
-        old = _list_batch_dirs(self.spark, self._vectors_dir)
-        if not old:
-            return 0
-        # snapshot BEFORE the fold: a delete() landing while the fold
-        # job runs was not applied to the rewritten rows — clearing it
-        # afterwards would silently undo the retraction, so only the
-        # tombstone dirs this fold consumed are removed
-        tomb_dirs = _list_batch_dirs(self.spark, self._tombstones_dir)
-        live = self._served(self.vectors())
-        cols = [f.name for f in self.vectors().schema.fields
-                if f.name not in ("batch", "list_id")]
-        # a crash between a previous fold's rename and its source-dir
-        # deletes leaves every row duplicated; unlike bucket rows,
-        # serving rows have no downstream dedup — drop FULL-ROW
-        # duplicates (crash copies are byte-identical) so re-compaction
-        # heals, then fail loudly if an id still appears twice: that
-        # means divergent payloads under one id (an append/delete
-        # contract violation), and silently freezing an arbitrary
-        # choice into the base would corrupt serving forever
-        live = live.select(*cols, "list_id").dropDuplicates()
-        clash = (
-            live.groupBy("id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > 1)
-            .take(5)
-        )
-        if clash:
-            raise ValueError(
-                "IvfServingIndex.compact: divergent payloads for id(s) "
-                f"{sorted(r['id'] for r in clash)} — duplicate ids must "
-                "be exact crash copies; refusing to pick one arbitrarily"
+        def live() -> DataFrame:
+            # an epoch landing mid-compaction is folded AND survives in
+            # its own dir; unlike bucket rows, serving rows have no
+            # downstream dedup — drop FULL-ROW duplicates (such copies
+            # are byte-identical) so re-compaction heals, then fail
+            # loudly if an id still appears twice: that means divergent
+            # payloads under one id (an append/delete contract
+            # violation), and silently freezing an arbitrary choice into
+            # the base would corrupt serving forever
+            rows = self._served(self.vectors()).dropDuplicates()
+            clash = (
+                rows.groupBy("id")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .filter(F.col("n") > 1)
+                .take(5)
             )
-        fs, _ = _hadoop(self.spark, self._vectors_dir)
-        Path = self.spark._jvm.org.apache.hadoop.fs.Path
-        gen = 0
-        for d in old:
-            name = posixpath.basename(d)
-            if name.startswith("batch=base"):
-                suffix = name[len("batch=base"):]
-                if suffix.isdigit():
-                    gen = max(gen, int(suffix) + 1)
-        tmp = posixpath.join(self._vectors_dir, "_compacting")
-        live.repartition(
-            max(1, files_per_cell) * self.n_lists, "list_id"
-        ).write.mode("overwrite").partitionBy("list_id").parquet(tmp)
-        dest = Path(posixpath.join(self._vectors_dir, f"batch=base{gen}"))
-        if not fs.rename(Path(tmp), dest):
-            raise OSError(f"compaction rename to {dest} failed")
-        for d in old:
-            fs.delete(Path(d), True)
-        for d in tomb_dirs:
-            fs.delete(Path(d), True)
-        return len(old)
+            if clash:
+                raise ValueError(
+                    "IvfServingIndex.compact: divergent payloads for id(s) "
+                    f"{sorted(r['id'] for r in clash)} — duplicate ids must "
+                    "be exact crash copies; refusing to pick one arbitrarily"
+                )
+            return rows
+
+        return epochlog.compact_tombstoned(
+            self.spark, self._vectors_dir, self._tombstones_dir, live,
+            max(1, files_per_cell) * self.n_lists, "list_id",
+        )
 
     def topk(
         self,
@@ -1029,8 +964,6 @@ class IvfServingIndex:
         euclidean, first-min tie-break — the KMeans.transform rule) and
         land them under ``batch=<batch_id>`` (overwrite: re-delivered
         epochs converge). O(batch) work; the quantizer is fixed."""
-        import posixpath
-
         from pyspark.sql.functions import pandas_udf
 
         cents = np.array(self.centroids, dtype=np.float64)
@@ -1041,11 +974,7 @@ class IvfServingIndex:
             d = ((m[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
             return pd.Series(d.argmin(axis=1).astype(np.int32))
 
-        import json as _json
-
-        from pyspark.sql.types import StructType
-
-        stored = StructType.fromJson(_json.loads(self._schema_json))
+        stored = self._row_schema()
         v_type = stored["v"].dataType
         # arrivals must land in the index's EXACT physical type — a
         # double batch in a float index fails every subsequent scan
@@ -1063,18 +992,13 @@ class IvfServingIndex:
                 ).alias("codes")
             )
         cols.append(nearest(F.col(vec_col)).alias("list_id"))
-        rows = docs.select(*cols)
-        rows.write.partitionBy("list_id").mode("overwrite").parquet(
-            posixpath.join(self._vectors_dir, f"batch={batch_id}")
-        )
+        epochlog.write(docs.select(*cols), self._vectors_dir, batch_id, "list_id")
 
 
 def _write_sidecar(spark, path: str, text: str) -> None:
     """Small driver-side file write through the Hadoop FS (works on any
     index location, not just local paths)."""
-    from ..streaming.dedup_stream import _hadoop
-
-    fs, _ = _hadoop(spark, path)
+    fs, _ = epochlog._hadoop(spark, path)
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     out = fs.create(jpath, True)
     try:
@@ -1084,23 +1008,18 @@ def _write_sidecar(spark, path: str, text: str) -> None:
 
 
 def _read_sidecar(spark, path: str, optional: bool = False) -> str | None:
-    from ..streaming.dedup_stream import _hadoop, _read_small
-
-    fs, _ = _hadoop(spark, path)
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs, jpath = epochlog._hadoop(spark, path)
     if not fs.exists(jpath):
         if optional:
             return None
         raise ValueError(f"no index sidecar at {path} — not a built index")
-    return _read_small(fs, jpath)
+    return epochlog._read_small(fs, jpath)
 
 
 def _read_stamp_params(spark, path: str, marker: str) -> tuple[int, int, int]:
     import posixpath
 
-    from ..streaming.dedup_stream import _hadoop, _read_marker
-
-    fs, _ = _hadoop(spark, path)
+    fs, _ = epochlog._hadoop(spark, path)
     jmarker = spark._jvm.org.apache.hadoop.fs.Path(
         posixpath.join(path, marker)
     )
@@ -1111,7 +1030,7 @@ def _read_stamp_params(spark, path: str, marker: str) -> tuple[int, int, int]:
         raise ValueError(
             f"no {marker} stamp at {path} — not a built IvfServingIndex"
         )
-    stamp = _read_marker(fs, jmarker)
+    stamp = epochlog._read_marker(fs, jmarker)
     n_lists, seed, dim = (int(x) for x in stamp.split(","))
     return n_lists, seed, dim
 

@@ -16,13 +16,11 @@ rows. Training text is never re-scanned when eval changes; new eval
 docs append O(their grams), withdrawn eval docs RETRACT O(their grams)
 through the shared at-most-once retraction ledger.
 
-Store layout mirrors ``NgramStatsStore``: the index holds summed
-(gram, occ) partials under ``batch=<k>`` dirs — occ is the eval-side
-occurrence count, so a gram stays "present" while its sum is positive
-even when several eval docs share it, and a retraction of one sharer
-cancels exactly without erasing the others (set semantics would get
-this wrong). Compaction merges from a snapshot, drops zero-sum rows,
-and asserts non-negativity (the retraction-contract backstop).
+The index is a summed-counter epoch log (``epochlog.CounterLog``) of
+(gram, occ) partials — occ is the eval-side occurrence count, so a gram
+stays "present" while its sum is positive even when several eval docs
+share it, and a retraction of one sharer cancels exactly without
+erasing the others (set semantics would get this wrong).
 
 Arrival rows are exactly what the batch operator would say about those
 docs against the eval set at that moment — pinned by the
@@ -52,16 +50,8 @@ from ..operators.corpus import (
     window_variant_rows,
 )
 from ..operators.partitioning import spread_small_scan
-from .dedup_stream import (
-    _assert_counters_nonnegative,
-    _claim_stamp,
-    _fold_batch_dirs,
-    _foldable_dirs,
-    _hadoop,
-    _list_batch_dirs,
-    _retraction_guard,
-    _stream_batch_base,
-)
+from . import epochlog
+from .epochlog import CounterLog, _claim_stamp, _stream_batch_base
 
 GRAM_SCHEMA = StructType(
     [
@@ -244,8 +234,7 @@ class EvalGramIndex:
         self.path = path
         self.n = n
         self.mode = mode
-        fs, jroot = _hadoop(spark, path)
-        fs.mkdirs(jroot)
+        self._log = CounterLog(spark, path, GRAM_SCHEMA, "EvalGramIndex")
         _claim_stamp(spark, path, "_meta", f"n={n};mode={mode}")
 
     # -- eval-side maintenance (the small, slowly-changing side) --------
@@ -266,9 +255,7 @@ class EvalGramIndex:
     ) -> None:
         """Add *eval_docs*' gram occurrences under ``batch=<batch_id>``
         (overwrite — re-delivery replaces). O(their grams)."""
-        self._partial(eval_docs, text_col).write.mode("overwrite").parquet(
-            posixpath.join(self.path, f"batch={batch_id}")
-        )
+        self._log.append(self._partial(eval_docs, text_col), batch_id)
 
     def retract(
         self,
@@ -285,31 +272,20 @@ class EvalGramIndex:
         ledger; ambiguous-failure retries pass the same *retraction_id*
         (see ``WindowHashIndex.retract``). Text must be the exact
         appended text."""
-        target = _retraction_guard(
-            self.spark, self.path, eval_docs.select(id_col), retraction_id
+        self._log.retract(
+            self._partial(eval_docs, text_col), eval_docs.select(id_col),
+            retraction_id,
         )
-        self._partial(eval_docs, text_col).select(
-            "gram", (-F.col("occ")).alias("occ")
-        ).write.mode("overwrite").parquet(target)
 
     # -- reads -----------------------------------------------------------
 
     def partials(self) -> DataFrame:
-        dirs = _list_batch_dirs(self.spark, self.path)
-        if not dirs:
-            return self.spark.createDataFrame([], GRAM_SCHEMA)
-        return self.spark.read.schema(GRAM_SCHEMA).parquet(*dirs)
+        return self._log.partials()
 
     def grams(self) -> DataFrame:
         """The CURRENT distinct eval gram set: summed partials with a
         positive total (zero = fully retracted)."""
-        return (
-            self.partials()
-            .groupBy("gram")
-            .agg(F.sum("occ").alias("occ"))
-            .filter(F.col("occ") > 0)
-            .select("gram")
-        )
+        return self._log.totals().filter(F.col("occ") > 0).select("gram")
 
     def contamination_for(
         self,
@@ -344,30 +320,10 @@ class EvalGramIndex:
         )
 
     def compact(self, coalesce_n: int = 1) -> int:
-        """Merge every batch dir into one summed base generation —
-        files AND rows bounded at distinct-gram cardinality. Snapshot
-        semantics and the non-negativity backstop as in
-        ``NgramStatsStore.compact``."""
-        dirs = _list_batch_dirs(self.spark, self.path)
-        old = _foldable_dirs(dirs)
-        if len(old) <= 1:
-            return 0
-        _assert_counters_nonnegative(
-            self.spark.read.schema(GRAM_SCHEMA)
-            .parquet(*dirs)
-            .groupBy("gram")
-            .agg(F.sum("occ").alias("occ")),
-            ["occ"],
-            "EvalGramIndex.compact",
-        )
-        merged = (
-            self.spark.read.schema(GRAM_SCHEMA)
-            .parquet(*old)
-            .groupBy("gram")
-            .agg(F.sum("occ").alias("occ"))
-            .filter(F.col("occ") != 0)
-        )
-        return _fold_batch_dirs(self.spark, self.path, merged, old, coalesce_n)
+        """Merge batch dirs into one summed base generation — files AND
+        rows bounded at distinct-gram cardinality (see
+        ``CounterLog.compact``)."""
+        return self._log.compact(coalesce_n)
 
 
 def start_contamination_stream(
@@ -412,10 +368,9 @@ def start_contamination_stream(
         if not batch.take(1):
             return
         rows = index.contamination_for(batch, id_col, text_col, min_hits)
-        dest = posixpath.join(out_dir, f"batch={bid}")
-        rows.write.mode("overwrite").parquet(dest)
+        epochlog.write(rows, out_dir, bid)
         if on_stats is not None:
-            back = spark.read.parquet(dest).collect()
+            back = spark.read.parquet(epochlog.batch_path(out_dir, bid)).collect()
             on_stats([r.asDict() for r in back], bid)
 
     stream = (

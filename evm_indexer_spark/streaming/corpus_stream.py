@@ -11,11 +11,9 @@ counters — per epoch the stream tokenizes O(batch), appends one slim
 groupBy-sum over partials whose size tracks DISTINCT n-grams (Zipf:
 far below corpus size), not documents.
 
-Store layout mirrors ``MinHashBucketIndex``: ``batch=<epoch>`` dirs
-written with overwrite (epoch re-delivery replaces, never doubles),
-folded by ``compact()`` into a base generation via the same hidden-dir
-write + atomic rename. Compaction here MERGES (groupBy-sum), so it
-bounds both file count and row count at the distinct-ngram cardinality.
+The store is a summed-counter epoch log (``epochlog.CounterLog``):
+compaction MERGES (groupBy-sum), so it bounds both file count and row
+count at the distinct-ngram cardinality.
 
 Delivery contract: each document must land at most once across epochs
 (epoch re-delivery is safe; cross-epoch re-arrival would double-count).
@@ -26,7 +24,6 @@ at-most-once flow this audit needs.
 
 from __future__ import annotations
 
-import posixpath
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,15 +36,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.corpus import _ngram_counts_pandas
-from .dedup_stream import (
-    _assert_counters_nonnegative,
-    _fold_batch_dirs,
-    _foldable_dirs,
-    _hadoop,
-    _list_batch_dirs,
-    _retraction_guard,
-    _stream_batch_base,
-)
+from .epochlog import CounterLog, _stream_batch_base
 
 STATS_SCHEMA = StructType(
     [
@@ -64,22 +53,16 @@ class NgramStatsStore:
     def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
         self.path = path
-        fs, jroot = _hadoop(spark, path)
-        fs.mkdirs(jroot)
+        self._log = CounterLog(spark, path, STATS_SCHEMA, "NgramStatsStore")
 
     def partials(self) -> DataFrame:
-        """Raw partial rows across all batch dirs (explicit schema:
-        empty epoch dirs must not poison inference)."""
-        dirs = _list_batch_dirs(self.spark, self.path)
-        if not dirs:
-            return self.spark.createDataFrame([], STATS_SCHEMA)
-        return self.spark.read.schema(STATS_SCHEMA).parquet(*dirs)
+        """Raw partial rows across all batch dirs."""
+        return self._log.partials()
 
     def totals(self) -> DataFrame:
         """(ngram, n_occurrences, n_docs) summed over every partial."""
-        return self.partials().groupBy("ngram").agg(
-            F.sum("occ").alias("n_occurrences"),
-            F.sum("docs").alias("n_docs"),
+        return self._log.totals().withColumnsRenamed(
+            {"occ": "n_occurrences", "docs": "n_docs"}
         )
 
     def top(self, k: int = 100, min_count: int = 2) -> DataFrame:
@@ -96,9 +79,7 @@ class NgramStatsStore:
     def append(self, partial: DataFrame, batch_id: int) -> None:
         """Persist one epoch's partial counters under
         ``batch=<batch_id>`` (overwrite — re-delivery replaces)."""
-        partial.select("ngram", "occ", "docs").write.mode(
-            "overwrite"
-        ).parquet(posixpath.join(self.path, f"batch={batch_id}"))
+        self._log.append(partial, batch_id)
 
     def retract(
         self,
@@ -106,66 +87,17 @@ class NgramStatsStore:
         doc_ids: DataFrame,
         retraction_id: int | None = None,
     ) -> None:
-        """Remove a previously-appended contribution: persist the
-        NEGATED partial under ``batch=retract<k>``. Callers recompute
-        the partial from the retracted docs exactly as the stream did
-        (``_ngram_counts_pandas`` with the same n) — the store keeps no
-        per-doc rows to derive it from, the same trust ``append``
-        extends. *doc_ids* (a one-column DataFrame of the retracted
-        ids) feeds the shared retraction ledger: at-most-once per doc
-        is ENFORCED (double retract raises before anything is written),
-        and ambiguous-failure retries pass the same *retraction_id* to
-        overwrite their own ``retract<k>`` dir idempotently. Sums
-        cancel exactly in ``totals``/``top``; compaction folds
-        retractions like any partial, drops zero-sum rows, and asserts
-        non-negativity as the backstop."""
-        target = _retraction_guard(
-            self.spark, self.path, doc_ids, retraction_id
-        )
-        partial.select(
-            "ngram",
-            (-F.col("occ")).alias("occ"),
-            (-F.col("docs")).alias("docs"),
-        ).write.mode("overwrite").parquet(target)
+        """Remove a previously-appended contribution (see
+        ``CounterLog.retract``). Callers recompute the partial from the
+        retracted docs exactly as the stream did
+        (``_ngram_counts_pandas`` with the same n); *doc_ids* is a
+        one-column DataFrame of the retracted ids."""
+        self._log.retract(partial, doc_ids, retraction_id)
 
     def compact(self) -> int:
-        """Merge every batch dir into one summed base generation; see
-        module docstring. Returns the number of directories folded.
-
-        Unlike the bucket index (where a duplicated row is harmless),
-        these partials are SUMMED — folding a row twice corrupts the
-        running counts. The merge therefore reads strictly the ``old``
-        snapshot dirs captured before the write (an epoch landing
-        mid-compaction is neither folded nor deleted; it survives for
-        the next compaction), and exactly one concurrent writer is
-        assumed — the streaming ``foreachBatch`` contract, same as
-        ``MinHashBucketIndex.compact``. Run from the maintenance
-        cadence, never concurrently with ``append``."""
-        # newest epoch dir never folds: a crashed-then-redelivered
-        # epoch must still find and overwrite its own first-attempt
-        # partial (folding it into the base would double the counts
-        # forever — see dedup_stream._foldable_dirs)
-        dirs = _list_batch_dirs(self.spark, self.path)
-        old = _foldable_dirs(dirs)
-        if len(old) <= 1:
-            return 0
-        # retraction-contract backstop (see dupwin_stream.compact)
-        _assert_counters_nonnegative(
-            self.spark.read.schema(STATS_SCHEMA)
-            .parquet(*dirs)
-            .groupBy("ngram")
-            .agg(F.sum("occ").alias("occ"), F.sum("docs").alias("docs")),
-            ["occ", "docs"],
-            "NgramStatsStore.compact",
-        )
-        merged = (
-            self.spark.read.schema(STATS_SCHEMA)
-            .parquet(*old)
-            .groupBy("ngram")
-            .agg(F.sum("occ").alias("occ"), F.sum("docs").alias("docs"))
-            .filter((F.col("occ") != 0) | (F.col("docs") != 0))
-        )
-        return _fold_batch_dirs(self.spark, self.path, merged, old, 1)
+        """Merge every batch dir into one summed base generation (see
+        ``CounterLog.compact``); returns the number of dirs folded."""
+        return self._log.compact()
 
 
 def start_ngram_stream(

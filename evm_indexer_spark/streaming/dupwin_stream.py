@@ -15,13 +15,7 @@ batch operator would say about those docs at that corpus state
 (pinned by test_dupwin_stream's prefix-equivalence probe and the q76
 gate identity).
 
-Store layout mirrors ``NgramStatsStore``: ``batch=<epoch>`` dirs with
-overwrite (epoch re-delivery replaces, never doubles), folded by
-``compact()`` into a base generation. Counts are SUMMED on read, so
-compaction merges strictly from the snapshot it will delete — an epoch
-landing mid-compaction is neither folded nor deleted (the
-corpus_stream double-count lesson), and exactly one concurrent writer
-is assumed (the streaming foreachBatch contract).
+The index is a summed-counter epoch log (``epochlog.CounterLog``).
 
 Delivery contract: each document must land at most once across epochs.
 The stream enforces it with an id-store anti-join (epoch re-deliveries
@@ -39,16 +33,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..operators.corpus import _window_hashes, incremental_dup_window_stats
-from .dedup_stream import (
-    _assert_counters_nonnegative,
-    _claim_stamp,
-    _fold_batch_dirs,
-    _foldable_dirs,
-    _hadoop,
-    _list_batch_dirs,
-    _retraction_guard,
-    _stream_batch_base,
-)
+from . import epochlog
+from .epochlog import CounterLog, _claim_stamp, _stream_batch_base
 
 HASH_SCHEMA = StructType(
     [
@@ -77,42 +63,28 @@ class WindowHashIndex:
         self.path = path
         self.window_n = window_n
         _claim_stamp(spark, path, self._MARKER, str(window_n))
+        self._log = CounterLog(spark, path, HASH_SCHEMA, "WindowHashIndex")
 
     def hashes(self, exclude_epoch: int | None = None) -> DataFrame:
-        """All partial counters (explicit schema: empty/partial batch
-        dirs must not poison inference). Consumers sum per hash.
-
+        """All partial counters; consumers sum per hash.
         ``exclude_epoch`` drops that epoch's own ``batch=`` dir — the
         stream passes the current epoch so a crashed-then-redelivered
         batch is not scored against its own first-attempt counters."""
-        if exclude_epoch is None:
-            return (
-                self.spark.read.schema(HASH_SCHEMA)
-                .option("recursiveFileLookup", "true")
-                .parquet(self.path)
-            )
-        dirs = [
-            d
-            for d in _list_batch_dirs(self.spark, self.path)
-            if posixpath.basename(d) != f"batch={exclude_epoch}"
-        ]
-        if not dirs:
-            return self.spark.createDataFrame([], HASH_SCHEMA)
-        return self.spark.read.schema(HASH_SCHEMA).parquet(*dirs)
+        return self._log.partials(exclude=exclude_epoch)
+
+    def _partial(self, docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+        return (
+            _window_hashes(docs, id_col, text_col, self.window_n)
+            .groupBy("h")
+            .agg(F.count(F.lit(1)).alias("occ"))
+        )
 
     def append(
         self, docs: DataFrame, id_col: str, text_col: str, batch_id: int = 0
     ) -> None:
         """Hash *docs*' windows and persist their (h, occ) partial under
         ``batch=<batch_id>`` (overwrite — epoch re-delivery replaces)."""
-        rows = (
-            _window_hashes(docs, id_col, text_col, self.window_n)
-            .groupBy("h")
-            .agg(F.count(F.lit(1)).alias("occ"))
-        )
-        rows.write.mode("overwrite").parquet(
-            posixpath.join(self.path, f"batch={batch_id}")
-        )
+        self._log.append(self._partial(docs, id_col, text_col), batch_id)
 
     def retract(
         self,
@@ -123,69 +95,22 @@ class WindowHashIndex:
     ) -> None:
         """Remove *docs*' counter contribution — the retraction path
         for reorged/taken-down documents: re-hash their windows and
-        append the NEGATED partial under ``batch=retract<k>``. Every
-        consumer sums partials, so the contribution cancels exactly;
-        O(retracted docs) work, no store rewrite.
-
-        At-most-once is ENFORCED via the shared retraction ledger
-        (``_retraction_guard``): retracting an already-retracted id
-        raises before anything is written, and a retry after an
-        ambiguous failure should pass the SAME *retraction_id* to
-        overwrite its own ``retract<k>`` dir idempotently (the key
-        ``append`` and ``delete`` already take). The text must be the
-        exact appended text (the store keeps no per-doc rows to check
-        against — the same trust ``append`` already extends). The
-        doc's id stays consumed in the arrival stream's id store:
-        retraction removes CONTENT statistics, it does not re-open the
-        id for landing."""
-        target = _retraction_guard(
-            self.spark, self.path, docs.select(id_col), retraction_id
+        append the NEGATED partial (``CounterLog.retract``: ledgered,
+        at-most-once per id, idempotent under the same
+        *retraction_id*). O(retracted docs) work, no store rewrite. The
+        text must be the exact appended text. The doc's id stays
+        consumed in the arrival stream's id store: retraction removes
+        CONTENT statistics, it does not re-open the id for landing."""
+        self._log.retract(
+            self._partial(docs, id_col, text_col), docs.select(id_col),
+            retraction_id,
         )
-        rows = (
-            _window_hashes(docs, id_col, text_col, self.window_n)
-            .groupBy("h")
-            .agg((-F.count(F.lit(1))).alias("occ"))
-        )
-        rows.write.mode("overwrite").parquet(target)
 
     def compact(self, coalesce_n: int = 1) -> int:
-        """Fold every ``batch=*`` dir into one merged base generation,
-        bounding files AND rows at distinct-hash cardinality. Partials
-        are SUMMED — the merge reads strictly the ``old`` snapshot dirs
-        captured before the write, so an epoch landing mid-compaction
-        is neither double-counted nor lost (retraction partials fold
-        like any other; hashes whose sum reaches zero are dropped).
-        Single concurrent writer assumed; run from the maintenance
-        cadence, never concurrently with ``append``. Returns the
-        number of directories folded."""
-        # the newest epoch dir is never folded: a crashed-then-
-        # redelivered epoch must still find (and overwrite) its own
-        # first-attempt rows — folding them into the base would both
-        # defeat the exclude_epoch read and double the counts forever
-        dirs = _list_batch_dirs(self.spark, self.path)
-        old = _foldable_dirs(dirs)
-        if len(old) <= 1:
-            return 0
-        # non-negativity backstop over ALL partials (incl. the
-        # un-foldable newest epoch, which a retraction may legitimately
-        # cancel): a negative total proves a contract violation the
-        # ledger couldn't see — refuse to freeze it into the base
-        _assert_counters_nonnegative(
-            self.spark.read.schema(HASH_SCHEMA)
-            .parquet(*dirs)
-            .groupBy("h")
-            .agg(F.sum("occ").alias("occ")),
-            ["occ"],
-            "WindowHashIndex.compact",
-        )
-        merged = (
-            self.spark.read.schema(HASH_SCHEMA)
-            .parquet(*old)
-            .groupBy("h")
-            .agg(F.sum("occ").alias("occ"))
-            .filter(F.col("occ") != 0)
-        )
-        return _fold_batch_dirs(self.spark, self.path, merged, old, coalesce_n)
+        """Fold batch dirs into one merged base generation, bounding
+        files AND rows at distinct-hash cardinality (see
+        ``CounterLog.compact``); returns the number of dirs folded."""
+        return self._log.compact(coalesce_n)
 
     def stats_for(
         self,
@@ -248,34 +173,24 @@ def start_dupwin_stream(
     )
     id_schema = StructType([StructField(id_col, LongType(), False)])
 
-    def _seen_ids(exclude_epoch: int) -> DataFrame:
-        dirs = [
-            d
-            for d in _list_batch_dirs(spark, ids_dir)
-            if posixpath.basename(d) != f"batch={exclude_epoch}"
-        ]
-        if not dirs:
-            return spark.createDataFrame([], id_schema)
-        return spark.read.schema(id_schema).parquet(*dirs)
-
     def _process(batch: DataFrame, epoch_id: int) -> None:
         bid = base + epoch_id
         batch = batch.dropDuplicates([id_col])
         if not assume_new_ids:
-            batch = batch.join(_seen_ids(bid), id_col, "left_anti")
+            seen = epochlog.read(spark, ids_dir, id_schema, exclude=bid)
+            batch = batch.join(seen, id_col, "left_anti")
         if not batch.take(1):
             return
         stats = index.stats_for(batch, id_col, text_col, exclude_epoch=bid)
-        epoch_dir = posixpath.join(out_dir, f"batch={bid}")
         stat_schema = stats.schema
-        stats.write.mode("overwrite").parquet(epoch_dir)
+        epochlog.write(stats, out_dir, bid)
         if on_stats is not None:
-            rows = spark.read.schema(stat_schema).parquet(epoch_dir).collect()
+            rows = spark.read.schema(stat_schema).parquet(
+                epochlog.batch_path(out_dir, bid)
+            ).collect()
             on_stats([r.asDict() for r in rows], bid)
         index.append(batch, id_col, text_col, batch_id=bid)
-        batch.select(id_col).write.mode("overwrite").parquet(
-            posixpath.join(ids_dir, f"batch={bid}")
-        )
+        epochlog.write(batch.select(id_col), ids_dir, bid)
 
     stream = (
         spark.readStream.schema(doc_schema)

@@ -1,8 +1,7 @@
 """Embedding-dedup-on-arrival: a persisted hyperplane-LSH bucket index
 plus a streaming pipeline that reports embedding near-duplicate pairs
 as vectors land — the embedding twin of ``dedup_stream`` (text), built
-on the same store machinery (epoch batch dirs, atomic parameter stamp,
-rename-published compaction, re-arrival guard).
+on the same epoch log (``streaming/epochlog``) and re-arrival guard.
 
 Why incremental: at 100 TB re-hashing the vector corpus per refresh has
 the same cost problem the MinHash index solves for text. Each arriving
@@ -11,13 +10,9 @@ against the persisted (id, bucket) index, exactly cosine-verified, and
 its own bucket rows appended for future batches — per-batch cost is
 O(batch + collisions), nothing rescans the corpus.
 
-Idempotence and layout follow ``MinHashBucketIndex`` exactly: bucket
-and vector rows land under ``batch=<batch_id>`` with overwrite (epoch
-re-delivery replaces, never doubles), the ``_planes`` marker pins
-(n_planes, n_tables, seed, dim) for the index lifetime (rows from
-different hyperplane sets share no geometry — a mixed index would
-silently stop colliding), and ``compact()`` folds batch dirs through
-the shared hidden-dir write + atomic rename.
+The ``_planes`` marker pins (n_planes, n_tables, seed, dim) for the
+index lifetime: rows from different hyperplane sets share no geometry,
+so a mixed index would silently stop colliding.
 """
 
 from __future__ import annotations
@@ -36,12 +31,10 @@ from pyspark.sql.types import (
 )
 
 from ..operators import similarity
-from .dedup_stream import (
-    _claim_stamp,
-    _fold_batch_dirs,
+from . import epochlog
+from .epochlog import (
     _append_tombstones,
-    _hadoop,
-    _list_batch_dirs,
+    _claim_stamp,
     _stream_batch_base,
     _tombstones_df,
 )
@@ -83,7 +76,7 @@ class EmbeddingBucketIndex:
         self.n_planes = n_planes
         self.n_tables = n_tables
         self.seed = seed
-        # underscore prefix: excluded from buckets()' recursive listing
+        # underscore prefix: invisible to the epoch-log read
         self._tombstones_dir = posixpath.join(path, "_tombstones")
         _claim_stamp(
             spark, path, self._MARKER, f"{n_planes},{n_tables},{seed},{dim}"
@@ -93,11 +86,7 @@ class EmbeddingBucketIndex:
         """All PHYSICAL bucket rows, tombstoned ids included (explicit
         schema: empty/partial batch dirs must not poison inference).
         Serving paths read ``live_buckets()``."""
-        return (
-            self.spark.read.schema(EMBED_BUCKET_SCHEMA)
-            .option("recursiveFileLookup", "true")
-            .parquet(self.path)
-        )
+        return epochlog.read(self.spark, self.path, EMBED_BUCKET_SCHEMA)
 
     def live_buckets(self) -> DataFrame:
         """Bucket rows minus deleted ids — what every candidate join
@@ -130,32 +119,17 @@ class EmbeddingBucketIndex:
             docs, id_col, vec_col, self.n_planes, self.n_tables, self.seed,
             self.dim,
         )
-        rows.write.mode("overwrite").parquet(
-            posixpath.join(self.path, f"batch={batch_id}")
-        )
+        epochlog.write(rows, self.path, batch_id)
 
     def compact(self) -> int:
-        """Fold every ``batch=*`` directory into one base generation —
-        same contract as ``MinHashBucketIndex.compact``: a crash
-        between publish and delete leaves duplicate bucket rows, which
-        are harmless (candidate pairs are de-duplicated and
-        verification is exact); single concurrent writer assumed.
-        Returns the number of directories folded."""
-        old = _list_batch_dirs(self.spark, self.path)
-        # snapshot first: a delete() landing mid-fold was not applied
-        # to the rewritten rows — clearing it would undo the
-        # retraction; only the consumed dirs are removed
-        tomb_dirs = _list_batch_dirs(self.spark, self._tombstones_dir)
-        if not old or (len(old) <= 1 and not tomb_dirs):
-            return 0
-        folded = _fold_batch_dirs(
-            self.spark, self.path, self.live_buckets(), old, self.n_tables
+        """Fold every ``batch=*`` directory into one base generation,
+        dropping tombstoned rows — same contract as
+        ``MinHashBucketIndex.compact``. Returns the number of
+        directories folded."""
+        return epochlog.compact_tombstoned(
+            self.spark, self.path, self._tombstones_dir, self.live_buckets,
+            self.n_tables,
         )
-        fs, _ = _hadoop(self.spark, self._tombstones_dir)
-        Path = self.spark._jvm.org.apache.hadoop.fs.Path
-        for d in tomb_dirs:
-            fs.delete(Path(d), True)
-        return folded
 
     def pairs_for(
         self,
@@ -224,21 +198,10 @@ def start_embedding_dedup_stream(
         ]
     )
 
-    def _seen_vecs(exclude_epoch: int | None = None) -> DataFrame:
-        dirs = [
-            d
-            for d in _list_batch_dirs(spark, vec_dir)
-            if exclude_epoch is None
-            or posixpath.basename(d) != f"batch={exclude_epoch}"
-        ]
-        if not dirs:
-            return spark.createDataFrame([], doc_schema)
-        return spark.read.schema(doc_schema).parquet(*dirs)
-
     def _process(batch: DataFrame, epoch_id: int) -> None:
         bid = base + epoch_id
         batch = batch.dropDuplicates([id_col])
-        prior = _seen_vecs(exclude_epoch=bid)
+        prior = epochlog.read(spark, vec_dir, doc_schema, exclude=bid)
         if not assume_new_ids:
             batch = batch.join(prior.select(id_col), id_col, "left_anti")
         if not batch.take(1):
@@ -247,16 +210,15 @@ def start_embedding_dedup_stream(
         pairs = index.pairs_for(
             batch, corpus, id_col, vec_col, min_cosine
         )
-        epoch_dir = posixpath.join(out_dir, f"batch={bid}")
         pair_schema = pairs.schema
-        pairs.write.mode("overwrite").parquet(epoch_dir)
+        epochlog.write(pairs, out_dir, bid)
         if on_pairs is not None:
-            rows = spark.read.schema(pair_schema).parquet(epoch_dir).collect()
+            rows = spark.read.schema(pair_schema).parquet(
+                epochlog.batch_path(out_dir, bid)
+            ).collect()
             on_pairs([r.asDict() for r in rows], bid)
         index.append(batch, id_col, vec_col, batch_id=bid)
-        batch.select(id_col, vec_col).write.mode("overwrite").parquet(
-            posixpath.join(vec_dir, f"batch={bid}")
-        )
+        epochlog.write(batch.select(id_col, vec_col), vec_dir, bid)
 
     stream = (
         spark.readStream.schema(doc_schema)

@@ -3,12 +3,12 @@
 The reference cascades a reorg through its OWN tables in one Postgres
 transaction (app/db/block.go:44-58); this engine additionally maintains
 DERIVED state — dedup bucket indexes, summed counter stores, ANN
-serving indexes — and each grew its own retraction primitive
-(tombstone ``delete`` on bucket/serving indexes; ledgered negative
-partials on summed stores). What was missing was the composition: the
-reorg handler that fires them ALL for one document, under ONE
-idempotence story, so a crash mid-fan-out is recoverable without
-double-cancelling any store.
+serving indexes — and each has the epoch log's retraction primitive
+(``streaming/epochlog``: tombstone ``delete`` on bucket/serving
+indexes; ledgered negative partials on summed stores). What was
+missing was the composition: the reorg handler that fires them ALL for
+one document, under ONE idempotence story, so a crash mid-fan-out is
+recoverable without double-cancelling any store.
 
 ``retract_document_everywhere`` is that handler. Contract:
 

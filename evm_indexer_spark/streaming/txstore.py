@@ -75,6 +75,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import BLOCK_BUCKET_SIZE, BLOCKS_SCHEMA, EVENTS_SCHEMA, TRANSACTIONS_SCHEMA
+from .epochlog import _empty
 
 _SCHEMAS = {
     "blocks": BLOCKS_SCHEMA,
@@ -108,20 +109,14 @@ def _bucket_batch(blocks: DataFrame, txs: DataFrame, events: DataFrame):
     return blocks, txs, events
 
 
-def _empty(spark: SparkSession, schema) -> DataFrame:
-    """An empty frame that costs nothing to plan over. ``limit(0)``
-    lets the optimizer replace it with an empty local relation, so the
-    joins and unions a commit builds over an empty bucket fold away and
-    actions over it schedule no job (a frame built from an empty Python
-    list runs one Python task per default-parallelism slice)."""
-    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema).limit(0)
-
-
-def _swap_in(tmp: str, path: str) -> None:
-    """Replace the directory *path* with *tmp* by two renames. The old
-    copy is renamed aside to ``<path>_retired`` first, so a crash
-    between the renames never loses it (``published()`` restores the
-    publish log's); a failed second rename puts it back."""
+def _swap_in(rows: DataFrame, path: str) -> None:
+    """Replace the directory *path* with *rows* as one file: write them
+    to ``<path>_next``, then swap by two renames. The old copy is
+    renamed aside to ``<path>_retired`` first, so a crash between the
+    renames never loses it (``published()`` restores the publish
+    log's); a failed second rename puts it back."""
+    tmp = path + "_next"
+    rows.coalesce(1).write.mode("overwrite").parquet(tmp)
     retired = path + "_retired"
     shutil.rmtree(retired, ignore_errors=True)
     os.rename(path, retired)
@@ -660,17 +655,13 @@ class AtomicBlockStore:
         path = self._path("_published")
         if not os.path.isdir(path):
             return
-        tmp = path + "_compacting"
-        self.published().dropDuplicates(["number", "hash"]).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
         # Swap via directory renames so the live log is never absent: a
         # mode('overwrite') onto `path` deletes it before the rewrite
         # lands, and a crash in that window would make the T5 anti-join
         # see an empty log and re-publish every block. Rename is atomic
         # on a POSIX filesystem; the worst crash outcome is a stale
         # `_retired` directory, which ``published()`` restores.
-        _swap_in(tmp, path)
+        _swap_in(self.published().dropDuplicates(["number", "hash"]), path)
 
     # -- maintenance -------------------------------------------------------
 
@@ -817,8 +808,4 @@ class HashIndex:
         path = self._path()
         if not os.path.isdir(path):
             return
-        tmp = path + "_compacting"
-        self.read().dropDuplicates(["hash"]).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        _swap_in(tmp, path)
+        _swap_in(self.read().dropDuplicates(["hash"]), path)

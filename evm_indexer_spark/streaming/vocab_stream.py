@@ -13,34 +13,21 @@ below 100k words), never a corpus re-scan. Merges reported at each
 epoch equal ``bpe_train`` over all documents landed so far (pinned by
 test_vocab_stream's prefix-equivalence probe).
 
-Store layout mirrors ``NgramStatsStore``: ``batch=<epoch>`` dirs with
-overwrite (epoch re-delivery replaces, never doubles), folded by
-``compact()`` into a merged base generation; the merge reads strictly
-the snapshot it deletes (counts are summed — the corpus_stream
-double-count lesson). Delivery contract: each document lands at most
-once across epochs — pair with ``dedup_stream``'s text store when the
-source cannot guarantee that.
+The store is a summed-counter epoch log (``epochlog.CounterLog``).
+Delivery contract: each document lands at most once across epochs —
+pair with ``dedup_stream``'s text store when the source cannot
+guarantee that.
 """
 
 from __future__ import annotations
 
-import posixpath
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..operators.tokenizer import bpe_train_from_counts, word_counts
-from .dedup_stream import (
-    _assert_counters_nonnegative,
-    _fold_batch_dirs,
-    _foldable_dirs,
-    _hadoop,
-    _list_batch_dirs,
-    _retraction_guard,
-    _stream_batch_base,
-)
+from .epochlog import CounterLog, _stream_batch_base
 
 VOCAB_SCHEMA = StructType(
     [
@@ -56,26 +43,17 @@ class WordCountStore:
     def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
         self.path = path
-        fs, jroot = _hadoop(spark, path)
-        fs.mkdirs(jroot)
+        self._log = CounterLog(spark, path, VOCAB_SCHEMA, "WordCountStore")
 
     def partials(self) -> DataFrame:
-        return (
-            self.spark.read.schema(VOCAB_SCHEMA)
-            .option("recursiveFileLookup", "true")
-            .parquet(self.path)
-        )
+        return self._log.partials()
 
     def counts(self) -> DataFrame:
         """Current corpus word counts (partials summed)."""
-        return self.partials().groupBy("word").agg(
-            F.sum("freq").alias("freq")
-        )
+        return self._log.totals()
 
     def append(self, docs: DataFrame, text_col: str, batch_id: int = 0) -> None:
-        word_counts(docs, text_col).write.mode("overwrite").parquet(
-            posixpath.join(self.path, f"batch={batch_id}")
-        )
+        self._log.append(word_counts(docs, text_col), batch_id)
 
     def retract(
         self,
@@ -84,48 +62,17 @@ class WordCountStore:
         id_col: str = "doc_id",
         retraction_id: int | None = None,
     ) -> None:
-        """Remove *docs*' word-count contribution: the NEGATED counts
-        land under ``batch=retract<k>`` and cancel exactly in
-        ``counts``/``train``. At-most-once is ENFORCED per *id_col*
-        via the shared retraction ledger (``_retraction_guard``):
-        double retract raises, ambiguous-failure retries pass the same
-        *retraction_id* to overwrite idempotently. Text must be the
-        exact appended text, as with ``WindowHashIndex.retract``."""
-        target = _retraction_guard(
-            self.spark, self.path, docs.select(id_col), retraction_id
+        """Remove *docs*' word-count contribution (see
+        ``CounterLog.retract``); at-most-once is enforced per *id_col*.
+        Text must be the exact appended text."""
+        self._log.retract(
+            word_counts(docs, text_col), docs.select(id_col), retraction_id
         )
-        word_counts(docs, text_col).select(
-            "word", (-F.col("freq")).alias("freq")
-        ).write.mode("overwrite").parquet(target)
 
     def compact(self, coalesce_n: int = 1) -> int:
-        """Fold every ``batch=*`` dir into one merged base generation —
-        files AND rows bounded at vocab cardinality. Merges strictly
-        the ``old`` snapshot (summed counts; a mid-compaction epoch is
-        neither double-counted nor lost); single concurrent writer
-        assumed. Returns the number of directories folded."""
-        # newest epoch dir never folds (see dupwin_stream.compact)
-        dirs = _list_batch_dirs(self.spark, self.path)
-        old = _foldable_dirs(dirs)
-        if len(old) <= 1:
-            return 0
-        # retraction-contract backstop (see dupwin_stream.compact)
-        _assert_counters_nonnegative(
-            self.spark.read.schema(VOCAB_SCHEMA)
-            .parquet(*dirs)
-            .groupBy("word")
-            .agg(F.sum("freq").alias("freq")),
-            ["freq"],
-            "WordCountStore.compact",
-        )
-        merged = (
-            self.spark.read.schema(VOCAB_SCHEMA)
-            .parquet(*old)
-            .groupBy("word")
-            .agg(F.sum("freq").alias("freq"))
-            .filter(F.col("freq") != 0)
-        )
-        return _fold_batch_dirs(self.spark, self.path, merged, old, coalesce_n)
+        """Fold batch dirs into one merged base generation (see
+        ``CounterLog.compact``); returns the number of dirs folded."""
+        return self._log.compact(coalesce_n)
 
     def train(
         self, num_merges: int = 8, min_freq: int = 1

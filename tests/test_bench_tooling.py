@@ -194,3 +194,46 @@ def test_capture_plans_refuses_flag_like_outdir(tmp_path):
     assert p.returncode != 0
     assert "looks like a flag" in p.stderr
     assert list(tmp_path.iterdir()) == []
+
+
+def test_net_loc_counts_code_apart_from_docs_and_comments(tmp_path):
+    # two commits: the package loses a function and gains a docstring
+    # and a comment, tests gain one code line; code moved between two
+    # package files nets to zero
+    def git(*args):
+        subprocess.run(
+            ["git", "-c", "user.name=t", "-c", "user.email=t@t", *args],
+            cwd=tmp_path, check=True, capture_output=True,
+        )
+
+    pkg = tmp_path / "evm_indexer_spark"
+    pkg.mkdir()
+    (tmp_path / "tests").mkdir()
+    (pkg / "a.py").write_text(
+        "def f():\n    return 1\n\n\ndef g():\n    return 2\n"
+    )
+    (tmp_path / "tests" / "test_a.py").write_text("x = 1\n")
+    git("init", "-q")
+    git("add", "-A")
+    git("commit", "-q", "-m", "one")
+    (pkg / "a.py").write_text(
+        '"""Module doc\nspanning two lines."""\n\n# a comment\n'
+        "def f():\n    return 1\n"
+    )
+    (pkg / "b.py").write_text("def g():\n    return 2\n")  # moved, untracked
+    (tmp_path / "tests" / "test_a.py").write_text("x = 1\ny = 2\n")
+    p = subprocess.run(
+        [sys.executable, str(REPO / "tools" / "net_loc.py"), "HEAD"],
+        capture_output=True, text=True, cwd=tmp_path / "tests",
+    )
+    assert p.returncode == 0, p.stderr
+    rows = {
+        line.split()[0]: tuple(int(x) for x in line.split()[1:])
+        for line in p.stdout.splitlines()[2:]
+    }
+    # raw: a.py 6 -> 6 lines, b.py +2; code: a.py 4 -> 2, b.py +2
+    assert rows == {
+        "evm_indexer_spark/": (2, 0),
+        "tests/": (1, 1),
+        "tools/": (0, 0),
+    }

@@ -143,9 +143,9 @@ def test_compaction_merges_only_snapshot_dirs(spark, tmp_path):
     store.append(partial, batch_id=1)
     store.append(partial, batch_id=2)
 
-    import evm_indexer_spark.streaming.corpus_stream as cs
+    import evm_indexer_spark.streaming.epochlog as el
 
-    real_list = cs._list_batch_dirs
+    real_list = el._list_batch_dirs
     landed = {"done": False}
 
     def racing_list(spark_, root):
@@ -156,10 +156,10 @@ def test_compaction_merges_only_snapshot_dirs(spark, tmp_path):
         return dirs
 
     try:
-        cs._list_batch_dirs = racing_list
+        el._list_batch_dirs = racing_list
         store.compact()
     finally:
-        cs._list_batch_dirs = real_list
+        el._list_batch_dirs = real_list
 
     # 4 epochs of the same doc → every count is exactly 4× the single
     # partial; a double-fold of the mid-compaction epoch would read 5×
@@ -257,3 +257,17 @@ def test_ngram_store_double_retract_raises(spark, tmp_path):
     }
     assert got == set()  # both docs retracted exactly once
     assert store.compact() >= 1
+
+
+def test_empty_store_top_launches_no_job(spark, tmp_path):
+    """A store with no batch dirs answers over an empty local relation:
+    ``top`` schedules no Spark job at all."""
+    store = NgramStatsStore(spark, str(tmp_path / "stats"))
+    sc = spark.sparkContext
+    group = "empty-ngram-store-top"
+    sc.setJobGroup(group, group, False)
+    try:
+        assert store.top(5).collect() == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

@@ -301,12 +301,12 @@ def test_index_rejects_unknown_strategy(spark, tmp_path):
 def test_index_marker_permission_error_not_masked(spark, tmp_path):
     # a non-race create() failure must surface as-is, not resurface as
     # a misleading banding-mismatch ValueError
-    import evm_indexer_spark.streaming.dedup_stream as ds
+    import evm_indexer_spark.streaming.epochlog as el
 
-    assert not ds.MinHashBucketIndex._is_already_exists(
+    assert not el._is_already_exists(
         RuntimeError("Permission denied: /ix/_banding")
     )
-    assert ds.MinHashBucketIndex._is_already_exists(
+    assert el._is_already_exists(
         RuntimeError("File already exists: /ix/_banding")
     )
 
@@ -352,7 +352,7 @@ def test_premarker_checkpoint_resumes_at_base_zero(spark, tmp_path):
     epochs already wrote batch ids 0..k, so base must be 0 — a
     high-water base would re-deliver an in-flight epoch under a new id
     and double-count summed partial stores (round-11 advice fix)."""
-    from evm_indexer_spark.streaming.dedup_stream import _stream_batch_base
+    from evm_indexer_spark.streaming.epochlog import _stream_batch_base
 
     landing = tmp_path / "landing"
     landing.mkdir()
@@ -380,7 +380,7 @@ def test_marker_read_exhaustion_raises_informative(spark, tmp_path, monkeypatch)
     # a persistently empty marker must fail loudly, not as int('')
     import time as _time
 
-    from evm_indexer_spark.streaming.dedup_stream import _hadoop, _read_marker
+    from evm_indexer_spark.streaming.epochlog import _hadoop, _read_marker
 
     marker = tmp_path / "__batch_base__"
     marker.write_text("")
@@ -468,7 +468,7 @@ def test_delete_landing_mid_compact_survives(spark, tmp_path, monkeypatch):
     the tombstone dirs it SNAPSHOTTED before folding, so the late
     retraction keeps masking after the fold (the round-11 review
     race)."""
-    import evm_indexer_spark.streaming.dedup_stream as ds
+    import evm_indexer_spark.streaming.epochlog as el
 
     ix = MinHashBucketIndex(spark, str(tmp_path / "ix"), num_hashes=64, bands=64)
     docs = spark.createDataFrame(
@@ -478,13 +478,13 @@ def test_delete_landing_mid_compact_survives(spark, tmp_path, monkeypatch):
     for i in range(2):
         ix.append(docs.filter(F.col("doc_id") == i), "doc_id", "text",
                   batch_id=i)
-    real_fold = ds._fold_batch_dirs
+    real_fold = el._fold_batch_dirs
 
     def fold_with_late_delete(*a, **k):
         ix.delete([1])  # lands after compact's tombstone snapshot
         return real_fold(*a, **k)
 
-    monkeypatch.setattr(ds, "_fold_batch_dirs", fold_with_late_delete)
+    monkeypatch.setattr(el, "_fold_batch_dirs", fold_with_late_delete)
     assert ix.compact() >= 1
     monkeypatch.undo()
     # the late tombstone survived the fold's cleanup and still masks
@@ -534,7 +534,7 @@ def test_marker_publication_is_crash_atomic(spark, tmp_path):
     """A crash mid-publication leaves only a hidden temp file, never a
     half-written marker; the next start ignores the residue, publishes
     atomically, and resumes with the full high-water value."""
-    from evm_indexer_spark.streaming.dedup_stream import _stream_batch_base
+    from evm_indexer_spark.streaming.epochlog import _stream_batch_base
 
     ix = MinHashBucketIndex(spark, str(tmp_path / "ix"), num_hashes=64, bands=64)
     ix.append(
@@ -562,11 +562,11 @@ def test_marker_publication_race_equal_bases(spark, tmp_path, monkeypatch):
     ADOPT it (delete its own temp, return the winner's value) rather
     than rename over it — pinned here by injecting a winner that
     publishes between the top-of-function check and the temp write."""
-    import evm_indexer_spark.streaming.dedup_stream as ds
+    import evm_indexer_spark.streaming.epochlog as el
 
     ckpt = tmp_path / "ckpt"
     marker = ckpt / "__batch_base__"
-    real_hw = ds._high_water_base
+    real_hw = el._high_water_base
 
     def winner_publishes_first(spark_, roots):
         # the racing winner lands its marker while we compute our base
@@ -574,8 +574,8 @@ def test_marker_publication_race_equal_bases(spark, tmp_path, monkeypatch):
         marker.write_text("7")
         return real_hw(spark_, roots)
 
-    monkeypatch.setattr(ds, "_high_water_base", winner_publishes_first)
-    base = ds._stream_batch_base(spark, str(ckpt), [str(tmp_path / "ix")])
+    monkeypatch.setattr(el, "_high_water_base", winner_publishes_first)
+    base = el._stream_batch_base(spark, str(ckpt), [str(tmp_path / "ix")])
     assert base == 7  # adopted the winner's value, not our own
     assert marker.read_text() == "7"  # never renamed over the winner
     # and our own temp was cleaned up
@@ -589,14 +589,14 @@ def test_marker_claim_is_exclusive_and_gates_the_rename(spark, tmp_path):
     atomic exclusive create (O_EXCL via java.io.File on local paths):
     only the claim winner renames onto the marker, so a published
     marker can no longer be silently replaced by a racer."""
-    import evm_indexer_spark.streaming.dedup_stream as ds
+    import evm_indexer_spark.streaming.epochlog as el
 
-    fs, _ = ds._hadoop(spark, str(tmp_path))
+    fs, _ = el._hadoop(spark, str(tmp_path))
     claim = str(tmp_path / ".claim")
-    assert ds._exclusive_create(spark._jvm, fs, claim) is True
+    assert el._exclusive_create(spark._jvm, fs, claim) is True
     # second creator must LOSE — this is the arbitration the bare
     # rename could not provide on POSIX
-    assert ds._exclusive_create(spark._jvm, fs, claim) is False
+    assert el._exclusive_create(spark._jvm, fs, claim) is False
     assert (tmp_path / ".claim").exists()
 
 
@@ -609,7 +609,7 @@ def test_marker_stale_claim_is_completed_by_restart(
     phantom winner, then completes the publish itself."""
     import time as _time
 
-    import evm_indexer_spark.streaming.dedup_stream as ds
+    import evm_indexer_spark.streaming.epochlog as el
 
     ix = MinHashBucketIndex(spark, str(tmp_path / "ix"), num_hashes=64, bands=64)
     ix.append(
@@ -620,7 +620,7 @@ def test_marker_stale_claim_is_completed_by_restart(
     ckpt.mkdir()
     (ckpt / ".__batch_base__.claim").touch()  # crash residue
     monkeypatch.setattr(_time, "sleep", lambda _s: None)  # skip the wait
-    base = ds._stream_batch_base(spark, str(ckpt), [str(tmp_path / "ix")])
+    base = el._stream_batch_base(spark, str(ckpt), [str(tmp_path / "ix")])
     assert base == 5  # high-water over batch=4, published despite the claim
     assert (ckpt / "__batch_base__").read_text() == "5"
 
@@ -630,7 +630,7 @@ def test_retraction_explicit_id_refuses_unledgered_dir(spark, tmp_path):
     if batch=retract<k> already exists on disk with NO matching ledger
     entry (pre-ledger code wrote it), overwriting would un-cancel that
     old retraction's counts — the guard must refuse (round-12 advice)."""
-    from evm_indexer_spark.streaming.dedup_stream import _retraction_guard
+    from evm_indexer_spark.streaming.epochlog import _retraction_guard
 
     root = tmp_path / "store"
     # a pre-ledger negated partial, no _retracted/retract3 ledger entry
@@ -652,7 +652,7 @@ def test_retraction_rejection_names_ledger_entry(spark, tmp_path):
     """A double-retract rejection must NAME the ledger entry holding the
     duplicate id, so an ambiguous failure on the auto-assigned path is
     recoverable by retrying with that retraction_id (round-12 advice)."""
-    from evm_indexer_spark.streaming.dedup_stream import _retraction_guard
+    from evm_indexer_spark.streaming.epochlog import _retraction_guard
 
     root = tmp_path / "store"
     ids = spark.createDataFrame([("docA",)], "id string")
