@@ -66,7 +66,7 @@ def _dec(col, p=18, s=2):
 
 # -- one-task tier byte gates (round 16) -------------------------------------
 #
-# Every one-task route (q27/q28/q35/q40/q66/q67/q73/q76/q79/q80-q83)
+# Every one-task route (q27/q35/q40/q60/q66/q67/q76/q79/q80-q83)
 # used to gate on footer ROWCOUNT alone; a corpus that lands just under
 # the row cap with pathological per-row payloads (few rows × megabyte
 # documents, or huge embedding dims) would serialize real work into one
@@ -702,18 +702,10 @@ def q28(spark, sf):
     doc = load_table(spark, sf, "documents")
     n = table_rowcount(sf, "documents")
     n = doc.count() if n is None else n
-    if n <= dedup.SIMHASH_TASK_CAP and _onetask_bytes_ok(
-        sf, "documents", "text", ONETASK_TEXT_BYTES_CAP
-    ):
-        # one-Arrow-task tier (the q27/q35/q79/q80-family small-corpus
-        # routing): the distributed group plan is one signing task plus
-        # three AQE stages of scheduling floor at this scale — 0.94 →
-        # 0.60s interleaved same-session noop medians at sf0.1 (gated
-        # r15 window had the group plan at 0.66 warm); identity with
-        # both distributed pair sources pinned in tests/test_dedup.py
-        return dedup.simhash_pairs_onetask(
-            doc, "doc_id", "text", max_hamming=3, n_blocks=4, n_bits=60
-        )
+    # no one-task tier: at sf0.1 (5k docs, 4 cores) a one-Arrow-task
+    # SimHash kernel won 2/6, 7/10 and 8/10 interleaved noop-sink rounds
+    # against this plan (identical 512 rows) — never 9 of 10 — and
+    # lost outright at 15k docs
     return dedup.simhash_near_duplicates(
         doc,
         "doc_id",
@@ -1241,12 +1233,18 @@ def q40(spark, sf):
     distinct integer key, so with footer min >= 0 the ``doc_id < 500``
     filter keeps at most 500 rows — strictly under the 2000-row brute
     threshold at EVERY SF — and the brute tier can be passed explicitly
-    with zero plan-build jobs. Footerless sources keep the live
-    limit-count probe; the auto router itself stays pytest-exercised
-    (tests/test_dedup)."""
+    with zero plan-build jobs, unless the footer text bytes exceed the
+    one-task byte gate (then the prefix join runs). Footerless sources
+    keep the live limit-count probe; the auto router itself stays
+    pytest-exercised (tests/test_dedup)."""
     doc = load_table(spark, sf, "documents").filter(F.col("doc_id") < 500)
     rng = table_column_range(sf, "documents", "doc_id")
-    strategy = "brute" if rng is not None and rng[0] >= 0 else "auto"
+    if rng is None or rng[0] < 0:
+        strategy = "auto"
+    elif _onetask_bytes_ok(sf, "documents", "text", ONETASK_TEXT_BYTES_CAP):
+        strategy = "brute"
+    else:
+        strategy = "prefix"
     return dedup.jaccard_prefix_join(
         doc, "doc_id", "text", threshold=0.5, strategy=strategy
     )
@@ -1740,15 +1738,18 @@ def q60(spark, sf):
     """Near-dup clustering over the id<500 slice (the cap keeps the
     small-SF benchmark comparable across rounds). The slice is
     structurally ≤500 docs, so routing picks the one-Arrow-task tier
-    from the footer row count — zero probe jobs; "auto" (which pays one
-    limit-probe job) covers sources without footer stats."""
+    from footer stats — zero probe jobs — unless the footer text bytes
+    exceed the one-task byte gate; "auto" (which pays one limit-probe
+    job) covers sources without footer stats."""
     from .operators import graph
 
     doc = load_table(spark, sf, "documents").filter(F.col("doc_id") < 500)
-    n = table_rowcount(sf, "documents")
-    strategy = "auto" if n is None else (
-        "onetask" if min(n, 500) <= 2000 else "distributed"
-    )
+    if table_rowcount(sf, "documents") is None:
+        strategy = "auto"
+    elif _onetask_bytes_ok(sf, "documents", "text", ONETASK_TEXT_BYTES_CAP):
+        strategy = "onetask"
+    else:
+        strategy = "distributed"
     return graph.dedup_clusters(
         doc, "doc_id", "text", threshold=0.5, strategy=strategy
     )
@@ -2393,22 +2394,9 @@ def q73(spark, sf):
     mark-duplicate-spans pass, at O(total windows) with no all-pairs
     stage."""
     doc = load_table(spark, sf, "documents")
-    # STRATEGY-routed small-corpus tier (round 15, the q80/q81 pattern):
-    # with every row flagged batch the one-task kernel computes exactly
-    # the global >1 rule; the distributed analytic-window plan is the
-    # 100-TB path, sf1-gated. Footer-read routing, zero plan-build jobs.
-    n_docs = table_rowcount(sf, "documents")
-    if (
-        n_docs is not None
-        and n_docs <= corpus.DUPWIN_TASK_CAP
-        and _onetask_bytes_ok(
-            sf, "documents", "text", ONETASK_TEXT_BYTES_CAP
-        )
-    ):
-        return corpus.dup_window_spans_onetask(
-            doc.select("doc_id", "text", F.lit(True).alias("__b")),
-            "doc_id", "text", "__b", window_n=8,
-        )
+    # no one-task route: at sf0.1 (5k docs, 4 cores) the one-task kernel
+    # won 3/6, 3/10 and 4/10 interleaved noop-sink rounds against this
+    # plan (identical 5,000 rows)
     return corpus.duplicate_window_spans(doc, "doc_id", "text", window_n=8)
 
 
@@ -3253,10 +3241,6 @@ def q82(spark, sf):
     grams = (
         mode_keys(ev, "text", 8, "skipgram").select("gram").distinct()
     )
-    # the pigeonhole-prefilter path (eval_windows=...) is deliberately
-    # NOT engaged: on this fixture the eval split scales with the
-    # corpus, the half-sets densify, and the prefilter measured slower
-    # at every graded SF (round-14 A/B — see skipgram_window_hits)
     return contamination_against(
         batch, grams, "doc_id", "text", n=8, mode="skipgram",
         eval_small=_eval_small_hint(sf, variants=8),

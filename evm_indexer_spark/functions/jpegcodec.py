@@ -27,9 +27,8 @@ Scope (and honest limits):
   this subset decode, not just our own output.
 - Entropy DECODE runs through a 16-bit-prefix LUT over the unstuffed
   scan (one table read per Huffman symbol, O(1) window peeks for
-  amplitude bits, module-cached tables — ``_decode_scan_lut``), with
-  the spec-shaped per-bit walk kept as its bit-identical scalar twin
-  (``_decode_scan_bitloop``, the flaccodec twin-pinning pattern);
+  amplitude bits, module-cached tables — ``_decode_scan_lut``), pinned
+  bit-identical to the spec-shaped per-bit walk kept in test_jpeg;
   dequant/IDCT/placement are batched numpy over all blocks. Symbol
   SEQUENCING is still an interpreter loop — honest ceiling: ~0.5 µs
   per coefficient, fine for fixture/tile payloads inside Arrow
@@ -263,35 +262,6 @@ class _BitWriter:
         return bytes(self.out)
 
 
-class _BitReader:
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-        self._acc = 0
-        self._nbits = 0
-
-    def read_bit(self) -> int:
-        if not self._nbits:
-            if self.pos >= len(self.data):
-                raise ValueError("entropy stream exhausted")
-            byte = self.data[self.pos]
-            self.pos += 1
-            if byte == 0xFF:
-                if self.pos >= len(self.data) or self.data[self.pos] != 0x00:
-                    raise ValueError("unexpected marker inside entropy data")
-                self.pos += 1  # skip the stuffed 0x00
-            self._acc = byte
-            self._nbits = 8
-        self._nbits -= 1
-        return (self._acc >> self._nbits) & 1
-
-    def read_bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
-
-
 # ---------------------------------------------------------------------------
 # Coefficient coding helpers
 # ---------------------------------------------------------------------------
@@ -306,15 +276,6 @@ def _amplitude_bits(v: int, size: int) -> int:
     """T.81 F.1.2.1: positive values verbatim; negative values as
     (v - 1) masked to `size` bits (one's-complement style)."""
     return v if v >= 0 else (v - 1) & ((1 << size) - 1)
-
-
-def _extend(bits: int, size: int) -> int:
-    """Inverse of _amplitude_bits (T.81 F.2.2.1 EXTEND)."""
-    if size == 0:
-        return 0
-    if bits < (1 << (size - 1)):
-        return bits - (1 << size) + 1
-    return bits
 
 
 def _encode_block(
@@ -362,43 +323,19 @@ _LUT_CACHE: dict = {}
 
 
 class _HuffDecoder:
-    """Canonical-code decoder: walks bits, matching against per-length
-    first-code offsets (T.81 F.2.2.3 DECODE)."""
+    """A DHT table's canonical code (T.81 C: code-length counts *bits*
+    and symbols *vals*), decoded through ``lut``."""
 
     def __init__(self, bits: list[int], vals: list[int]) -> None:
         self.bits = list(bits)
-        self.min_code = [0] * 17
-        self.max_code = [-1] * 17
-        self.val_ptr = [0] * 17
-        code = 0
-        k = 0
-        for length in range(1, 17):
-            n = bits[length - 1]
-            if n:
-                self.val_ptr[length] = k
-                self.min_code[length] = code
-                code += n
-                k += n
-                self.max_code[length] = code - 1
-            code <<= 1
         self.vals = vals
 
-    def decode(self, reader: _BitReader) -> int:
-        code = reader.read_bit()
-        length = 1
-        while code > self.max_code[length]:
-            if length >= 16:
-                raise ValueError("invalid Huffman code in stream")
-            code = (code << 1) | reader.read_bit()
-            length += 1
-        return self.vals[self.val_ptr[length] + code - self.min_code[length]]
-
     def lut(self) -> tuple[list[int], list[int]]:
-        """Full 16-bit prefix lookup table (symbol, code length) — the
-        fast-path twin of ``decode``: a canonical code of length L
-        owns the 2^(16-L) windows sharing its prefix, so ONE indexed
-        read replaces L per-bit loop steps. Length 0 marks windows no
-        code owns (the scalar path's 16-bit overrun error). Cached
+        """Full 16-bit prefix lookup table (symbol, code length): a
+        canonical code of length L owns the 2^(16-L) windows sharing
+        its prefix, so ONE indexed read replaces L per-bit walk steps
+        (T.81 F.2.2.3 DECODE). Length 0 marks windows no code owns (an
+        invalid Huffman code in the stream). Cached
         MODULE-wide by table content, not per instance — every decode
         re-parses DHT into fresh decoder objects, and bulk decode (the
         mapInPandas batches of q68) sees the same four Annex K tables
@@ -668,11 +605,11 @@ def _decode_scan_lut(
     mcx: int,
     mcy: int,
 ) -> list[np.ndarray]:
-    """Fast entropy decode: per-component ``(nblocks, 64)`` int64
-    zig-zag coefficients in MCU scan order. Bit-identical to
-    ``_decode_scan_bitloop`` (the per-bit scalar twin, pinned by
-    test_jpeg's twin-equality property test) but ~an order of
-    magnitude faster: the scan is unstuffed ONCE into plain bytes,
+    """Entropy decode: per-component ``(nblocks, 64)`` int64 zig-zag
+    coefficients in MCU scan order. Bit-identical to the spec-shaped
+    per-bit walk (T.81 F.2.2.3; test_jpeg pins the two across content,
+    subsampling and restart intervals) but ~an order of magnitude
+    faster: the scan is unstuffed ONCE into plain bytes,
     every Huffman symbol is ONE 16-bit-window lookup in the canonical
     prefix LUT (``_HuffDecoder.lut``), and amplitude bits are O(1)
     3-byte window peeks — no per-bit Python loop anywhere."""
@@ -806,75 +743,6 @@ def _decode_scan_lut(
     return out
 
 
-def _decode_scan_bitloop(
-    scan: bytes,
-    comps: list[tuple[int, int, int, int]],
-    scan_tables: list[tuple[int, int]],
-    htables: dict[tuple[int, int], _HuffDecoder],
-    restart_interval: int,
-    mcx: int,
-    mcy: int,
-) -> list[np.ndarray]:
-    """Scalar twin of ``_decode_scan_lut``: the original per-bit
-    reader + canonical-offset walk (T.81 F.2.2.3 verbatim). Kept as
-    the spec-shaped reference implementation; test_jpeg pins the two
-    paths bit-identical across content, subsampling, and restart
-    intervals."""
-    reader = _BitReader(scan)
-    ncomp = len(comps)
-    out = [
-        np.zeros((mcx * mcy * hs * vs, 64), dtype=np.int64)
-        for _, _, hs, vs in comps
-    ]
-    fill = [0] * ncomp
-    preds = [0] * ncomp
-    rst = 0
-    for m in range(mcx * mcy):
-        if restart_interval and m and m % restart_interval == 0:
-            # byte-align past the pad bits, consume RSTn, reset DC preds
-            reader._nbits = 0
-            reader._acc = 0
-            if not (
-                reader.pos + 1 < len(reader.data)
-                and reader.data[reader.pos] == 0xFF
-                and 0xD0 <= reader.data[reader.pos + 1] <= 0xD7
-            ):
-                raise ValueError("expected restart marker in scan")
-            if reader.data[reader.pos + 1] & 7 != rst % 8:
-                raise ValueError("restart marker out of sequence")
-            reader.pos += 2
-            rst += 1
-            preds = [0] * ncomp
-        for ci in range(ncomp):
-            dc_dec = htables[(0, scan_tables[ci][0])]
-            ac_dec = htables[(1, scan_tables[ci][1])]
-            _, _, hs, vs = comps[ci]
-            arr = out[ci]
-            for _ in range(hs * vs):
-                zz = arr[fill[ci]]
-                fill[ci] += 1
-                size = dc_dec.decode(reader)
-                preds[ci] += _extend(reader.read_bits(size), size)
-                zz[0] = preds[ci]
-                k = 1
-                while k < 64:
-                    sym = ac_dec.decode(reader)
-                    if sym == 0x00:  # EOB
-                        break
-                    run, size = sym >> 4, sym & 0x0F
-                    if size == 0:
-                        if run != 15:
-                            raise ValueError("invalid AC symbol")
-                        k += 16  # ZRL
-                        continue
-                    k += run
-                    if k > 63:
-                        raise ValueError("AC run overflows block")
-                    zz[k] = _extend(reader.read_bits(size), size)
-                    k += 1
-    return out
-
-
 def jpeg_header_dims(data: bytes) -> tuple[int, int, int]:
     """(height, width, n_components) from the frame header ONLY — a
     marker walk to the first SOF segment, no Huffman/DCT work, O(header
@@ -912,13 +780,10 @@ def jpeg_header_dims(data: bytes) -> tuple[int, int, int]:
     raise ValueError("no SOF frame header found")
 
 
-def jpeg_decode(data: bytes, *, entropy_path: str = "lut") -> np.ndarray:
+def jpeg_decode(data: bytes) -> np.ndarray:
     """Decode baseline 4:4:4 JFIF bytes (the subset in the module
     docstring) to uint8 pixels: (h, w) for 1 component, (h, w, 3) RGB
-    for 3. ``entropy_path`` selects the entropy decoder: ``"lut"``
-    (default, 16-bit-window table decode) or ``"bitloop"`` (the
-    spec-shaped per-bit scalar twin) — outputs are bit-identical,
-    pinned by test_jpeg."""
+    for 3."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload (missing SOI)")
     pos = 2
@@ -1004,12 +869,7 @@ def jpeg_decode(data: bytes, *, entropy_path: str = "lut") -> np.ndarray:
     vmax = max(vs for _, _, _, vs in comps)
     mcx = -(-w // (8 * hmax))
     mcy = -(-h // (8 * vmax))
-    if entropy_path not in ("lut", "bitloop"):
-        raise ValueError(f"unknown entropy_path {entropy_path!r}")
-    decode_scan = (
-        _decode_scan_lut if entropy_path == "lut" else _decode_scan_bitloop
-    )
-    coeff = decode_scan(
+    coeff = _decode_scan_lut(
         scan, comps, scan_tables, htables, restart_interval, mcx, mcy
     )
     # dequant + IDCT + MCU placement, batched over all blocks of a

@@ -2,7 +2,7 @@
 predicates (T9/T10) as native Column expressions.
 
 The reference does topic matching in two phases: a GIN-assisted SQL
-containment prefilter (``'{t0,t1}' <@ e.topics``, ``app/db/query.go:530-533``)
+containment pre-check (``'{t0,t1}' <@ e.topics``, ``app/db/query.go:530-533``)
 followed by a Go positional re-check (``DoesItMatch``,
 ``query.go:473-485``). In Spark the *final* positional semantics collapse
 into one native filter — ``element_at(topics, k+1) == v`` conjunction — that

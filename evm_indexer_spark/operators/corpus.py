@@ -441,7 +441,6 @@ def ngram_contamination(
     min_hits: int = 1,
     eval_small: bool | None = None,
     broadcast_below: int = 2_000_000,
-    keys: str = "string",
 ) -> DataFrame:
     """Benchmark decontamination by verbatim n-gram overlap — the
     GPT-3-style check: a training document is contaminated when ≥
@@ -476,21 +475,10 @@ def ngram_contamination(
     to drift between engines, and both regimes are value-identical by
     construction.
 
-    ``keys`` picks the join key space: ``"string"`` (default) joins on
-    the byte-exact space-joined gram strings; ``"fp64"`` joins on
-    64-bit window fingerprints instead (see the fingerprint key-space
-    block above) — now fully codegen'd (see the block's
-    three-formulation A/B history): ties the string engine at sf0.1
-    where stage floors dominate, so the byte-exact strings stay the
-    default and fp64 is the smaller-shuffle corpus-scale option.
-    Parity-pinned either way (tests/test_corpus.py).
-
     Returns (id, n_windows, n_contaminated, contaminated) for every
     train document, zero-filled where nothing matched."""
     if n < 1 or min_hits < 1:
         raise ValueError("n and min_hits must be positive")
-    if keys not in ("fp64", "string"):
-        raise ValueError(f"unknown keys {keys!r}")
     grams = gram_array(text_col, n)
     spread = spread_small_scan(train)
     if eval_small is None:
@@ -498,27 +486,6 @@ def ngram_contamination(
             F.sum(F.size(grams)).alias("__n")
         ).first()["__n"]
         eval_small = (total or 0) <= broadcast_below
-    if keys == "fp64":
-        rows = fp_window_rows(spread, id_col, text_col, n, variants=False)
-        probe = fp_eval_keys(eval_df, text_col, n, variants=False)
-        probe = probe.withColumn("__hit", F.lit(1))
-        probe = (
-            F.broadcast(probe) if eval_small else probe.hint("shuffle_hash")
-        )
-        return (
-            rows.join(probe, rows["__fp"] == probe["__k"], "left")
-            .groupBy("id")
-            .agg(
-                F.count("__i").alias("n_windows"),
-                F.sum(F.coalesce("__hit", F.lit(0))).alias("n_contaminated"),
-            )
-            .select(
-                "id",
-                "n_windows",
-                "n_contaminated",
-                (F.col("n_contaminated") >= min_hits).alias("contaminated"),
-            )
-        )
     # ONE regexp pass over the train text: window counts and hit counts
     # both aggregate from the same exploded stream, and the explode is
     # OUTER — a windowless doc (< n tokens) emits one NULL-gram row
@@ -565,8 +532,6 @@ def skipgram_contamination(
     min_hits: int = 1,
     eval_small: bool | None = None,
     broadcast_below: int = 2_000_000,
-    prefilter: bool = False,
-    keys: str = "string",
 ) -> DataFrame:
     """Fuzzy benchmark decontamination: a train document is
     contaminated when ≥ *min_hits* of its token n-gram windows match an
@@ -597,38 +562,14 @@ def skipgram_contamination(
     once (distinct window positions), so every output is an exact
     integer: (id, n_windows, n_contaminated, contaminated).
 
-    ``prefilter=True`` opts the broadcast regime into the pigeonhole
-    half-set path (``skipgram_window_hits``) — exact-identical output,
-    a win ONLY when the eval suite is small and FIXED while train is
-    huge (high prune rate). Default off: on fixtures whose eval split
-    scales with the corpus the half-sets densify and the measured
-    prune rate collapses (round-14 A/B: the prefilter cost +18% at
-    sf0.1 and +48% at sf1 on the gate fixture).
-
-    Join topology (round 15): in the broadcast regime the n variant
-    probes are n BroadcastHashJoins against ONE reused exchange,
-    pipelined in a single codegen stage over WINDOW rows — the n×
-    variant-row explosion, the per-window (id, pos) collapse exchange,
-    and the zero-fill restore join all disappear; the only shuffle
-    left is the per-doc aggregate. The shuffle (corpus-sized-eval)
-    regime keeps the exploded variant-row shape.
-
-    ``keys="fp64"`` swaps the masked-variant strings for 64-bit XOR
-    fingerprints (variant_j = window fingerprint with position j's
-    term swapped for the mask term — the string semantics exactly,
-    see the fingerprint key-space block). Now fully codegen'd (unrolled
-    columns, index explode — see the block's three-formulation A/B
-    history): TIES the string engine at sf0.1, where stage floors
-    dominate; default stays the byte-exact strings, fp64 is the
-    smaller-shuffle option for corpus-scale runs. ``prefilter=True``
-    implies the string engine (the pigeonhole half-set path is a
-    string construction)."""
+    Join topology (round 15): both regimes join outer-exploded variant
+    rows against the routed probe and collapse per window, then per
+    doc; windowless docs ride along as NULL rows, so no zero-fill
+    restore join is needed."""
     if n < 1 or min_hits < 1:
         raise ValueError("n and min_hits must be positive")
     if n > 32:
         raise ValueError("n > 32 masked variants per window is a mistake")
-    if keys not in ("fp64", "string"):
-        raise ValueError(f"unknown keys {keys!r}")
     norm = _token_split(text_col)
     spread = spread_small_scan(train)
     if eval_small is None:
@@ -640,70 +581,7 @@ def skipgram_contamination(
             ).alias("__n")
         ).first()["__n"]
         eval_small = (total or 0) <= broadcast_below
-    if keys == "fp64" and not prefilter:
-        # the SAME exploded one-join topology as the string engine (its
-        # round-15 A/B winner): outer-exploded variant rows against one
-        # routed probe, collapsed per window then per doc. An n-probe
-        # window-level topology (n BroadcastHashJoins folded with
-        # greatest) was the first fp formulation and lost for the same
-        # codegen-budget reason it lost on strings.
-        prows = fp_variant_rows(spread, id_col, text_col, n)
-        probe = fp_eval_keys(eval_df, text_col, n, variants=True).withColumn(
-            "__hit", F.lit(1)
-        )
-        probe_h = F.broadcast(probe) if eval_small else probe.hint(
-            "shuffle_hash"
-        )
-        win_hits = (
-            prows.join(probe_h, prows["__key"] == probe_h["__k"], "left")
-            .groupBy("id", "__pos")
-            .agg(
-                F.max(
-                    F.when(F.col("__hit").isNotNull(), 1).otherwise(0)
-                ).alias("__h")
-            )
-        )
-        per_doc = win_hits.groupBy("id").agg(
-            F.count("__pos").alias("n_windows"),
-            F.sum("__h").alias("n_contaminated"),
-        )
-        return per_doc.select(
-            "id",
-            "n_windows",
-            F.coalesce("n_contaminated", F.lit(0)).alias("n_contaminated"),
-            (
-                F.coalesce("n_contaminated", F.lit(0)) >= min_hits
-            ).alias("contaminated"),
-        )
     eval_win = skipgram_windows(eval_df.select(text_col), text_col, n)
-    if prefilter and eval_small:
-        # OPT-IN pigeonhole-prefiltered path (see skipgram_window_hits
-        # for the regime where it wins — and where it doesn't). Keeps
-        # the zero-fill restore join: the prefilter engine is a string
-        # construction over the inner-exploded window frame.
-        t_win = skipgram_windows(
-            spread.select(F.col(id_col).alias("id"), text_col),
-            text_col, n, "id",
-        )
-        win_hits = skipgram_window_hits(t_win, eval_win, n, "id")
-        per_doc = win_hits.groupBy("id").agg(
-            F.count(F.lit(1)).alias("n_windows"),
-            F.sum("__h").alias("n_contaminated"),
-        )
-        return (
-            spread.select(F.col(id_col).alias("id"))
-            .join(per_doc, "id", "left")
-            .select(
-                "id",
-                F.coalesce("n_windows", F.lit(0)).alias("n_windows"),
-                F.coalesce("n_contaminated", F.lit(0)).alias(
-                    "n_contaminated"
-                ),
-                (F.coalesce("n_contaminated", F.lit(0)) >= min_hits).alias(
-                    "contaminated"
-                ),
-            )
-        )
     # ONE tokenize+mask pass over the train text feeds everything (the
     # q80 lesson — at corpus scale the text pass IS the cost), at
     # WINDOW granularity with outer explode: windowless docs ride along
@@ -770,6 +648,8 @@ def _token_split(text_col: str):
 #   (ngram 1.04 vs 0.92s, skipgram 3.67 vs 2.31s distributed) → cap 8k.
 # - dup-window spans: one-task still wins at 15k (1.99 vs 2.53s) and
 #   the r15 sf1 point (50k) is distributed-faster → cap stays 20k.
+#   Only q76 routes here; q73 runs its distributed plan at every
+#   scale (the one-task kernel did not beat it at sf0.1).
 CONTAM_TASK_CAP = 8_000
 DUPWIN_TASK_CAP = 20_000
 
@@ -1060,9 +940,8 @@ def skipgram_windows(df: DataFrame, text_col: str, n: int, *keep) -> DataFrame:
 def masked_variants(n: int):
     """Column: array of the n masked one-substitution variants of the
     ``__w`` window column — position j replaced by the ``\\x01``
-    placeholder. Shared by ``skipgram_keys`` (full emission) and the
-    pigeonhole-prefiltered path (emission only for candidate
-    windows)."""
+    placeholder. Shared by ``skipgram_keys`` and
+    ``window_variant_rows``."""
     return F.array(
         *[
             F.concat_ws(
@@ -1078,24 +957,6 @@ def masked_variants(n: int):
     )
 
 
-def window_halves(n: int):
-    """(first-half, second-half) space-joined string Columns of the
-    ``__w`` window column, split at ``ceil(n/2)``. The pigeonhole
-    behind the skip-gram prefilter: ONE substitution falls in exactly
-    one half, so the other half is VERBATIM equal between any two
-    windows differing in ≤ 1 position — the same halving argument
-    Manku et al. use for Hamming neighbors in SimHash dedup
-    (dedup.simhash_near_duplicates)."""
-    n2 = (n + 1) // 2
-    h1 = F.concat_ws(
-        " ", *[F.element_at("__w", k + 1) for k in range(n2)]
-    )
-    h2 = F.concat_ws(
-        " ", *[F.element_at("__w", k + 1) for k in range(n2, n)]
-    )
-    return h1, h2
-
-
 def window_variant_rows(
     df: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
@@ -1103,11 +964,9 @@ def window_variant_rows(
     carrying its n masked variants as an ARRAY, plus one NULL row per
     windowless doc (``posexplode_outer`` over ``window_start_seq``).
 
-    The window-level shape the broadcast contamination regime probes
-    IN PLACE: n BroadcastHashJoins on ``element_at(__vars, j)`` fold to
-    a per-window hit with ``greatest`` — no n× variant-row explosion,
-    no (id, pos) collapse exchange, and (because windowless docs ride
-    along as NULL rows) no zero-fill restore join. ``__vars`` is NULL
+    The window-level shape both contamination regimes explode and
+    probe; because windowless docs ride along as NULL rows, no
+    zero-fill restore join is needed. ``__vars`` is NULL
     on the windowless row: ``masked_variants`` over a NULL window would
     otherwise concat to a bare mask token via concat_ws's NULL-skipping
     and could join a real eval key."""
@@ -1140,168 +999,6 @@ def skipgram_keys(win: DataFrame, n: int, *keep) -> DataFrame:
     return win.select(*keep, F.explode(masked_variants(n)).alias("__key"))
 
 
-def skipgram_window_hits(
-    win: DataFrame, eval_win: DataFrame, n: int, *keep
-) -> DataFrame:
-    """(*keep*, __pos, __h) — one row per window of *win*, ``__h`` = 1
-    iff the window matches some window of *eval_win* with ≤ 1 token
-    substitution. The broadcast-regime engine of the skip-gram
-    contamination family (q81/q82).
-
-    Two structural moves over the naive n-masked-variant join:
-
-    1. **Pigeonhole prefilter** (``window_halves``): a substitution
-       falls in exactly one half of the window, so a candidate's OTHER
-       half appears VERBATIM among the eval windows' halves — a
-       necessary condition testable with two ~n/2-token probes per
-       window. Only survivors (6.6% of train windows on the sf0.1
-       fixture) pay the n-variant emission, which is the pipeline's
-       dominant map volume at corpus scale (n strings of n tokens per
-       window ≈ n²× the text bytes).
-    2. **One tagged broadcast set**: the eval masked keys and both
-       half-sets are emitted from a SINGLE eval tokenize pass as
-       tag-prefixed strings (``k\\x02``/``1\\x02``/``2\\x02`` — the
-       categories cannot cross-collide since every entry's category is
-       its first byte) and broadcast ONCE; the half probes and the
-       variant verify are three joins against the same exchange
-       (ReusedExchange — pinned by the plan test), where separate
-       half/key frames would tokenize the eval side three times.
-
-    Exactness: the half test is necessary, survivors still verify
-    against the full masked-key category, so results are identical to
-    the unfiltered path (pinned by tests/test_corpus.py parity tests).
-    Broadcast-regime only by construction: callers route here when the
-    eval side is broadcast-small (the benchmark-suite regime); the
-    corpus-sized-eval regime shuffles full keys instead, where half
-    sets would be as unbroadcastable as the keys themselves.
-
-    WHEN IT WINS — measured honestly: the prune must actually prune.
-    With a small FIXED eval suite against an ever-growing train corpus
-    (the production decontamination regime) the half-sets stay sparse
-    and the n-variant emission (the dominant map volume) is skipped
-    for almost every window. On the GATE fixture, whose eval split is
-    10% of the corpus and therefore SCALES with it, the half-sets
-    densify as SF grows and the prefilter measured SLOWER (+18% at
-    sf0.1, +48% at sf1, survivor rate 6.6% at sf0.1 but the extra
-    per-window probes/columns outweigh the saved emission) — so the
-    catalog entries default it OFF and this path is opt-in
-    (``prefilter=True``), exactness pinned regardless."""
-    if n < 2:
-        # a 1-token window with 1 substitution allowed matches
-        # anything — halves degenerate; full-key path
-        keyed = skipgram_keys(win, n, *keep, "__pos")
-        probe = (
-            skipgram_keys(eval_win, n)
-            .select("__key")
-            .distinct()
-            .withColumn("__hit", F.lit(1))
-        )
-        return (
-            keyed.join(F.broadcast(probe), "__key", "left")
-            .groupBy(*keep, "__pos")
-            .agg(
-                F.max(
-                    F.when(F.col("__hit").isNotNull(), 1).otherwise(0)
-                ).alias("__h")
-            )
-        )
-    h1x, h2x = window_halves(n)
-    tag_half1 = F.concat(F.lit("1\x02"), h1x)
-    tag_half2 = F.concat(F.lit("2\x02"), h2x)
-    tag_keys = F.transform(
-        masked_variants(n), lambda s: F.concat(F.lit("k\x02"), s)
-    )
-    probe = (
-        eval_win.select(
-            F.explode(
-                F.concat(F.array(tag_half1, tag_half2), tag_keys)
-            ).alias("__e")
-        )
-        .distinct()
-    )
-    e1, e2, ek = probe.alias("e1"), probe.alias("e2"), probe.alias("ek")
-    cand = F.col("e1.__e").isNotNull() | F.col("e2.__e").isNotNull()
-    keyed = (
-        win.withColumn("__th1", tag_half1)
-        .withColumn("__th2", tag_half2)
-        .join(F.broadcast(e1), F.col("__th1") == F.col("e1.__e"), "left")
-        .join(F.broadcast(e2), F.col("__th2") == F.col("e2.__e"), "left")
-        .select(
-            *keep,
-            "__pos",
-            # explode_outer keeps pruned windows as one NULL-key row
-            # (null joins nothing), preserving per-doc window counts
-            F.explode_outer(F.when(cand, tag_keys)).alias("__key"),
-        )
-    )
-    return (
-        keyed.join(F.broadcast(ek), F.col("__key") == F.col("ek.__e"), "left")
-        .groupBy(*keep, "__pos")
-        .agg(
-            F.max(
-                F.when(F.col("ek.__e").isNotNull(), 1).otherwise(0)
-            ).alias("__h")
-        )
-    )
-
-
-# -- fingerprint key space (round 15) ---------------------------------------
-#
-# The contamination joins never need the window TEXT — only equality of
-# windows (verbatim) or of one-token-masked windows (skipgram). Both are
-# re-expressed as 64-bit fingerprints built from per-token xxhash64
-# values combined with position-keyed mixing:
-#
-#     g(r, tok)    = xxhash64(r, xxhash64(tok))      r = offset in window
-#     S(window)    = XOR of g(r, tok_r) over the n positions
-#     variant_j    = S ^ g(j, tok_j) ^ g(j, "\x01")  (mask position j)
-#
-# variant_j is literally the fingerprint of the window WITH position j
-# replaced by the \x01 placeholder, so the construction mirrors the
-# masked-STRING semantics exactly — including the documented corner
-# where raw text embeds a literal \x01 token (it hashes identically to
-# a mask, just as the string path matches it against one). Equality of
-# fingerprints ⟺ equality of the corresponding strings, except for
-# 64-bit hash collisions: the XOR fold is position-keyed (reordering
-# tokens changes every term), and a false positive needs two distinct
-# windows whose g-term XORs coincide — probability ≈ k²/2^65 over k
-# distinct keys (~7e-7 at the sf1 gate's ~5M keys; ~0.5 expected
-# collisions across a 100-TB corpus's ~1e12 windows — an O(1) docs
-# over-flag across the whole corpus, the right trade for dropping the
-# n²-byte masked-variant strings from the map volume; PARITY.md
-# "fingerprint key space"). The exact string path stays available via
-# ``keys="string"`` and is parity-pinned against this one.
-#
-# Map volume per window: n+1 fixed-width hashes + n² long XORs versus
-# building n strings of n tokens (≈ 6·n² text bytes) that are then
-# hashed again at every join probe. The per-window payload drops from
-# ~400 string bytes (n=8) to 8 longs, and the broadcast probe map keys
-# become primitive longs.
-#
-# MEASURED at sf0.1 across three formulations (round 15):
-#   1. higher-order functions (transform/aggregate lambdas): LOST 30%+
-#      — HOF bodies evaluate on the INTERPRETED expression path, and
-#      per-element lambda dispatch dwarfs the byte savings (fp verbatim
-#      window rows 1.18s vs 0.30s codegen'd regexp gram strings);
-#   2. unrolled plain columns + explode of the computed variant ARRAY:
-#      LOST 2-4× — ``InferFiltersFromGenerate`` infers ``size(arr)>0``
-#      from the explode and pushes it below the hash projection,
-#      re-inlining the whole n²-term tree into a per-window Filter;
-#   3. unrolled columns + explode of ``sequence(0, n-1)`` with the key
-#      assembled per (window, j) row (the current engine): TIES the
-#      string engine (1.57 vs 1.53s full q81 medians, same session) —
-#      at this SF both are stage-floor-dominated, so the smaller keys
-#      don't show locally. The string key space stays the default (it
-#      is the byte-exact one); fp64 remains the documented option whose
-#      shuffle/broadcast volume advantage (8 longs vs ~400 string bytes
-#      per window) is expected to matter only at corpus scale.
-# The STRUCTURAL wins the experiments surfaced (outer-explode killing
-# the restore join, the exploded one-join topology, the index-explode
-# rule above) are shared by both engines.
-
-_FP_MASK = "\x01"
-
-
 def window_start_seq(toks_col, n: int):
     """array<int> of 1-based window start positions — empty (not NULL)
     when the doc has no complete window, so ``posexplode_outer`` emits
@@ -1310,148 +1007,6 @@ def window_start_seq(toks_col, n: int):
     return F.when(
         valid, F.sequence(F.lit(1), F.size(toks_col) - n + 1)
     ).otherwise(F.array().cast("array<int>"))
-
-
-def _fp_window_frame(df: DataFrame, id_col: str, text_col: str, n: int):
-    """(id, __t, __i, __p) — one row per n-token window (``__i`` window
-    ordinal, ``__p`` 1-based start), plus one NULL-window row per
-    windowless doc (``posexplode_outer`` over the empty start array)."""
-    toks = df.select(
-        F.col(id_col).alias("id"), _token_split(text_col).alias("__t")
-    )
-    return toks.select(
-        "id",
-        "__t",
-        F.posexplode_outer(window_start_seq(F.col("__t"), n)).alias(
-            "__i", "__p"
-        ),
-    )
-
-
-def _fp_terms(n: int) -> list:
-    """The n position-keyed combine terms g(r, tok_r) =
-    xxhash64(r, xxhash64(token)) as UNROLLED plain columns over the
-    window frame — every term is whole-stage-codegen'd (the earlier
-    higher-order-function formulation evaluated each lambda on the
-    interpreted path, which is what made the first fp engine lose its
-    A/B; see the key-space block above)."""
-    return [
-        F.xxhash64(
-            F.lit(r), F.xxhash64(F.element_at(F.col("__t"), F.col("__p") + r))
-        )
-        for r in range(n)
-    ]
-
-
-def _fp_mask_terms(n: int) -> list:
-    """g(j, mask) constants — foldable literals at optimization time."""
-    return [
-        F.xxhash64(F.lit(j), F.xxhash64(F.lit(_FP_MASK))) for j in range(n)
-    ]
-
-
-def _xor_fold(cols: list):
-    acc = cols[0]
-    for c in cols[1:]:
-        acc = acc.bitwiseXOR(c)
-    return acc
-
-
-def fp_window_rows(
-    df: DataFrame, id_col: str, text_col: str, n: int, variants: bool
-) -> DataFrame:
-    """One row per n-token window — (id, __i, __fp) verbatim or
-    (id, __i, __v array<long>) masked — PLUS one NULL-window row per
-    windowless doc, so per-doc aggregates need no restore join."""
-    w = _fp_window_frame(df, id_col, text_col, n)
-    # project the n string hashes ONCE per window: each term is
-    # referenced by S and by its variant, and a multi-referenced
-    # non-cheap alias is kept as its own projection (CollapseProject's
-    # rule), so the expensive xxhash64(token) runs n times per window,
-    # not n² times re-inlined per variant
-    gcols = [f"__g{r}" for r in range(n)]
-    w = w.select(
-        "id", "__i", "__p",
-        *[t.alias(g) for t, g in zip(_fp_terms(n), gcols)],
-    )
-    s = _xor_fold([F.col(g) for g in gcols])
-    guard = F.col("__p").isNotNull()
-    if variants:
-        masks = _fp_mask_terms(n)
-        varr = F.array(
-            *[
-                s.bitwiseXOR(F.col(gcols[j])).bitwiseXOR(masks[j])
-                for j in range(n)
-            ]
-        )
-        return w.select("id", "__i", F.when(guard, varr).alias("__v"))
-    return w.select("id", "__i", F.when(guard, s).alias("__fp"))
-
-
-def _fp_keyed_rows(
-    df: DataFrame, id_col: str, text_col: str, n: int, outer: bool
-) -> DataFrame:
-    """(id, __pos, __key) variant rows via an exploded INDEX sequence.
-
-    Exploding the computed variant ARRAY triggers
-    ``InferFiltersFromGenerate``: the inferred ``size(arr) > 0``
-    predicate is pushed below the hash projection and RE-INLINES the
-    whole n²-term hash tree into a Filter that runs per window
-    (measured 2-4× the string engine's cost — the second fp A/B loss).
-    Exploding ``sequence(0, n-1)`` instead keeps the inferred filter a
-    literal-size check; the hashes stay projected exactly once."""
-    w = _fp_window_frame(df, id_col, text_col, n)
-    gcols = [f"__g{r}" for r in range(n)]
-    w = w.select(
-        "id", "__i", "__p",
-        *[t.alias(g) for t, g in zip(_fp_terms(n), gcols)],
-    )
-    s = _xor_fold([F.col(g) for g in gcols])
-    guard = F.col("__p").isNotNull()
-    jseq = F.when(guard, F.sequence(F.lit(0), F.lit(n - 1)))
-    explode_fn = F.explode_outer if outer else F.explode
-    w = w.select(
-        "id",
-        "__i",
-        s.alias("__s"),
-        F.array(*[F.col(g) for g in gcols]).alias("__ga"),
-        explode_fn(jseq).alias("__j"),
-    )
-    mask_arr = F.array(*_fp_mask_terms(n))  # foldable constants
-    key = F.when(
-        F.col("__j").isNotNull(),
-        F.col("__s")
-        .bitwiseXOR(F.element_at("__ga", F.col("__j") + 1))
-        .bitwiseXOR(F.element_at(mask_arr, F.col("__j") + 1)),
-    )
-    return w.select("id", F.col("__i").alias("__pos"), key.alias("__key"))
-
-
-def fp_variant_rows(
-    df: DataFrame, id_col: str, text_col: str, n: int
-) -> DataFrame:
-    """(id, __pos, __key) — one row per (window, masked variant), plus
-    one NULL row per windowless doc: the exploded shape both probe
-    regimes join on (``__pos`` is the window ordinal, so collapsing
-    multi-variant matches back to one window is a (id, __pos) agg)."""
-    return _fp_keyed_rows(df, id_col, text_col, n, outer=True)
-
-
-def fp_eval_keys(
-    eval_df: DataFrame, text_col: str, n: int, variants: bool
-) -> DataFrame:
-    """The distinct eval-side fingerprint set (__k long) — the probe
-    side, built through the identical construction."""
-    src = eval_df.select(F.lit(0).alias("__id0"), text_col)
-    if variants:
-        rows = _fp_keyed_rows(src, "__id0", text_col, n, outer=False)
-        return rows.select(F.col("__key").alias("__k")).distinct()
-    rows = fp_window_rows(src, "__id0", text_col, n, variants=False)
-    return (
-        rows.filter(F.col("__fp").isNotNull())
-        .select(F.col("__fp").alias("__k"))
-        .distinct()
-    )
 
 
 def gram_array(text_col: str, n: int):

@@ -905,8 +905,18 @@ def _simhash_signatures_pandas(
     )
 
     def _partial(batches):
+        import re
+        from hashlib import md5
+
+        import numpy as np
         import pandas as pd
 
+        ws = re.compile(r"\s+", re.ASCII)
+        strip = re.compile(r"[^a-z0-9\s]", re.ASCII)
+        weights = (
+            np.uint64(1) << np.arange(n_bits, dtype=np.uint64)
+        ).astype(np.uint64)
+        shifts = np.arange(n_bits, dtype=np.uint64)
         # token -> md5_60 memo, shared across batches: token vocabularies
         # repeat heavily (8.7k occurrences per distinct token on the
         # sf0.1 fixture; md5 was 0.36s per signature pass there, 0.08s
@@ -915,149 +925,34 @@ def _simhash_signatures_pandas(
         # are computed directly, values identical.
         memo: dict = {}
         for pdf in batches:
-            ids, sigs = _simhash_sig_rows(
-                pdf[id_col], pdf[text_col], n_bits, memo
-            )
+            ids, sigs = [], []
+            for doc_id, t in zip(pdf[id_col], pdf[text_col]):
+                if t is None:
+                    continue  # the JVM explode drops null-text docs too
+                toks = ws.split(strip.sub("", t.lower()))[: (1 << 21) - 1]
+                h = np.empty(len(toks), dtype=np.uint64)
+                for i, tok in enumerate(toks):
+                    v = memo.get(tok)
+                    if v is None:
+                        v = int(md5(tok.encode()).hexdigest()[:15], 16)
+                        if len(memo) < _MEMO_CAP:
+                            memo[tok] = v
+                    h[i] = v
+                ones = ((h[:, None] >> shifts) & np.uint64(1)).sum(axis=0)
+                # reinterpret as signed so bit 63 (n_bits=64) round-trips
+                # to the same negative long the JVM shiftleft produces
+                sigs.append(
+                    int(
+                        weights[2 * ones > len(toks)]
+                        .sum(dtype=np.uint64)
+                        .astype(np.int64)
+                    )
+                )
+                ids.append(doc_id)
             if ids:
                 yield pd.DataFrame({"id": ids, "sig": sigs})
 
     return df.select(id_col, text_col).mapInPandas(_partial, schema)
-
-
-def _simhash_sig_rows(
-    id_vals, text_vals, n_bits: int, memo: dict
-) -> tuple[list, list]:
-    """md5_60-family SimHash signatures for a batch of documents — the
-    ONE Python signing kernel (``_simhash_signatures_pandas`` and
-    ``simhash_pairs_onetask`` both call this, so bit-identity between
-    the distributed and one-task tiers is by construction, not by
-    parallel maintenance). Null texts are dropped, mirroring the JVM
-    explode. Returns (ids, sigs) with sigs as signed-int64 Python ints."""
-    import re
-    from hashlib import md5
-
-    import numpy as np
-
-    ws = re.compile(r"\s+", re.ASCII)
-    strip = re.compile(r"[^a-z0-9\s]", re.ASCII)
-    weights = (np.uint64(1) << np.arange(n_bits, dtype=np.uint64)).astype(
-        np.uint64
-    )
-    shifts = np.arange(n_bits, dtype=np.uint64)
-    ids, sigs = [], []
-    for doc_id, t in zip(id_vals, text_vals):
-        if t is None:
-            continue  # the JVM explode drops null-text docs too
-        toks = ws.split(strip.sub("", t.lower()))[: (1 << 21) - 1]
-        h = np.empty(len(toks), dtype=np.uint64)
-        for i, tok in enumerate(toks):
-            v = memo.get(tok)
-            if v is None:
-                v = int(md5(tok.encode()).hexdigest()[:15], 16)
-                if len(memo) < _MEMO_CAP:
-                    memo[tok] = v
-            h[i] = v
-        ones = ((h[:, None] >> shifts) & np.uint64(1)).sum(axis=0)
-        # reinterpret as signed so bit 63 (n_bits=64) round-trips
-        # to the same negative long the JVM shiftleft produces
-        sig = int(
-            weights[2 * ones > len(toks)]
-            .sum(dtype=np.uint64)
-            .astype(np.int64)
-        )
-        ids.append(doc_id)
-        sigs.append(sig)
-    return ids, sigs
-
-
-def simhash_pairs_onetask(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-    n_blocks: int = 4,
-    n_bits: int = 60,
-) -> DataFrame:
-    """The ENTIRE SimHash pipeline — sign, block-bucket, verify — in ONE
-    Arrow task, for corpora that fit one worker (md5_60 family only;
-    callers bound the input by ``BRUTE_TASK_CAP`` from parquet footers,
-    the same small-corpus tier rule as ``minhash_pairs_onetask``). The
-    100-TB path remains ``simhash_near_duplicates``' distributed plans.
-
-    Why it exists: below ~20k docs the distributed group path is one
-    Arrow signing task plus three AQE stages (block explode+exchange,
-    bucket group, pair dedup exchange) of scheduling floor around
-    <0.1s of bucket work. Semantics are identical to
-    ``simhash_near_duplicates(token_hash="md5_60")``: same signatures
-    (shared ``_simhash_sig_rows`` kernel), same pigeonhole block keys,
-    same hamming verification, duplicate pairs from multi-block
-    collisions emitted once.
-
-    Returns (id_a, id_b, hamming int), id_a < id_b.
-    """
-    assert n_bits % n_blocks == 0
-    width = n_bits // n_blocks
-    mask = (1 << width) - 1
-    u64 = (1 << 64) - 1  # unsigned view: JVM shiftrightunsigned twin
-    max_h = int(max_hamming)
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("id_a", df.schema[id_col].dataType, False),
-            StructField("id_b", df.schema[id_col].dataType, False),
-            StructField("hamming", IntegerType(), False),
-        ]
-    )
-
-    def _all(batches):
-        import pandas as pd
-
-        memo: dict = {}
-        ids: list = []
-        usigs: list = []
-        for pdf in batches:
-            bids, bsigs = _simhash_sig_rows(
-                pdf[id_col], pdf[text_col], n_bits, memo
-            )
-            ids.extend(bids)
-            usigs.extend(s & u64 for s in bsigs)
-        # per-row block values, precomputed once: blks[i][b]
-        blks = [
-            [(s >> (b * width)) & mask for b in range(n_blocks)]
-            for s in usigs
-        ]
-        buckets: dict = {}  # (blk, block value) -> [row index]
-        for i, bl in enumerate(blks):
-            for b in range(n_blocks):
-                buckets.setdefault((b, bl[b]), []).append(i)
-        ra, rb, rh = [], [], []
-        for (b, _val), grp in buckets.items():
-            if len(grp) < 2:
-                continue
-            for x in range(len(grp) - 1):
-                for y in range(x + 1, len(grp)):
-                    i, j = grp[x], grp[y]
-                    # emit a multi-block collision only from its FIRST
-                    # colliding block: O(1) extra memory per pair where
-                    # a seen-set was O(colliding pairs) — a degenerate
-                    # near-identical corpus at the task cap collides in
-                    # every block and the set held ~n²/2 tuples
-                    # (round-15 ADVICE). Same pair set by construction.
-                    bi, bj = blks[i], blks[j]
-                    if any(bi[b2] == bj[b2] for b2 in range(b)):
-                        continue
-                    h = (usigs[i] ^ usigs[j]).bit_count()
-                    if h <= max_h:
-                        # least/greatest keying, exactly the group path
-                        # (callers guarantee unique ids, as for minhash)
-                        p = (i, j) if ids[i] < ids[j] else (j, i)
-                        ra.append(ids[p[0]])
-                        rb.append(ids[p[1]])
-                        rh.append(h)
-        yield pd.DataFrame({"id_a": ra, "id_b": rb, "hamming": rh})
-
-    return df.select(id_col, text_col).coalesce(1).mapInPandas(_all, schema)
 
 
 def simhash_signatures(
@@ -1330,15 +1225,6 @@ def _jaccard_all_pairs_pandas(
 # documents above which the single-task brute plan is refused by
 # "auto": one Arrow worker must hold every shingle set + pair counters
 BRUTE_TASK_CAP = 20_000
-
-# SimHash one-task cap, calibrated at three measured points (round 16:
-# the shared 20k constant was two-point calibrated): one-task wins at
-# 5k docs (r15: 0.94→0.60s), TIES the distributed group plan at 10k
-# (1.42 vs 1.41s) and loses at 15k (2.89 vs 2.19s) — the signing pass
-# is one Arrow task either way, so the distributed plan's extra AQE
-# stages amortize faster than the kernel's single-task bucket work.
-SIMHASH_TASK_CAP = 10_000
-
 
 def jaccard_all_pairs(
     df: DataFrame,

@@ -462,7 +462,7 @@ class HistoricalQueries:
     ) -> DataFrame:
         """query.go:526-543 + positional refine query.go:473-505 (P10+P11).
 
-        The reference's two-phase plan (GIN ``<@`` containment prefilter in
+        The reference's two-phase plan (GIN ``<@`` containment pre-check in
         SQL, then a Go positional re-check) collapses into one native
         Catalyst filter — ``element_at`` conjunction — evaluated during the
         scan; no post-processing pass exists in this engine.

@@ -45,7 +45,6 @@ from pyspark.sql.types import (
 from ..operators.corpus import (
     gram_array,
     skipgram_keys,
-    skipgram_window_hits,
     skipgram_windows,
     window_variant_rows,
 )
@@ -90,7 +89,6 @@ def contamination_against(
     min_hits: int = 1,
     eval_small: bool | None = None,
     broadcast_below: int = 2_000_000,
-    eval_windows: DataFrame | None = None,
 ) -> DataFrame:
     """Per-doc contamination of *docs* against an eval gram set given
     as a one-column DataFrame (``gram``) — the scoring plan shared by
@@ -103,20 +101,7 @@ def contamination_against(
     ``eval_small`` picks the probe plan (broadcast vs shuffle hash);
     None falls back to an EAGER count over *grams* at call time —
     index callers decide from their slim partials and entry callers
-    from parquet footers precisely to avoid that job.
-
-    ``eval_windows`` (skipgram mode, broadcast regime only): the eval
-    split's window rows (``corpus.skipgram_windows`` shape) — when
-    given, the scoring routes through the pigeonhole-prefiltered
-    tagged-broadcast engine (``corpus.skipgram_window_hits``: exact,
-    results unchanged, n-variant emission only for candidate windows).
-    ``eval_windows`` MUST be the window set whose masked keys equal
-    *grams* (the scoring then reads the eval side from the windows,
-    not from *grams* — passing inconsistent frames answers for the
-    windows). Callers holding only the masked GRAM set (the persisted
-    ``EvalGramIndex``) omit it: half sets are not derivable from
-    masked keys when raw text can embed literal ``\\x01`` tokens, so
-    the index path keeps the full-volume emission."""
+    from parquet footers precisely to avoid that job."""
     if min_hits < 1:
         raise ValueError("min_hits must be positive")
     if mode not in ("ngram", "skipgram"):
@@ -146,29 +131,6 @@ def contamination_against(
                 F.sum(
                     F.coalesce("__hit", F.lit(0))
                 ).alias("n_contaminated"),
-            )
-        )
-    elif eval_windows is not None and eval_small:
-        # prefilter engine: inner-exploded window frame, so the
-        # zero-fill restore join stays for THIS branch only
-        win = skipgram_windows(spread, text_col, n, "id")
-        win_hits = skipgram_window_hits(win, eval_windows, n, "id")
-        per_doc = win_hits.groupBy("id").agg(
-            F.count(F.lit(1)).alias("n_windows"),
-            F.sum("__h").alias("n_contaminated"),
-        )
-        base = docs.select(F.col(id_col).alias("id")).distinct()
-        return (
-            base.join(per_doc, "id", "left")
-            .select(
-                "id",
-                F.coalesce("n_windows", F.lit(0)).alias("n_windows"),
-                F.coalesce("n_contaminated", F.lit(0)).alias(
-                    "n_contaminated"
-                ),
-                (
-                    F.coalesce("n_contaminated", F.lit(0)) >= min_hits
-                ).alias("contaminated"),
             )
         )
     else:

@@ -11,7 +11,9 @@ Under a log root:
   Structured Streaming re-delivers a failed epoch under the SAME id, so
   a crashed write is replaced, never doubled;
 * ``batch=retract<k>`` — a summed log's negated partials, each
-  ledgered under ``_retracted/retract<k>`` (``_retraction_guard``);
+  ledgered under ``_retracted/retract<k>`` (``_retraction_guard``); a
+  fold marks the ledger entry of every ``retract<k>`` it consumes with
+  a ``_folded`` file before it publishes;
 * ``batch=base<G>`` — compaction generation G. ``_fold_batch_dirs``
   writes the folded rows into hidden ``_compacting`` together with a
   ``_folded`` record naming the dirs it consumed, and ONE rename
@@ -205,6 +207,14 @@ def _fold_batch_dirs(
         )
     finally:
         out.close()
+    # mark consumed retractions BEFORE publishing: a retry of a marked
+    # one must not write its negated partial again (_retraction_guard)
+    for d in old:
+        name = posixpath.basename(d)[len("batch="):]
+        if name.startswith("retract"):
+            entry = Path(posixpath.join(root, "_retracted", name))
+            if fs.exists(entry):
+                fs.create(Path(entry, "_folded"), True).close()
     dest = posixpath.join(root, f"batch=base{gen}")
     if not fs.rename(Path(tmp), Path(dest)):
         raise OSError(f"compaction rename to {dest} failed")
@@ -314,8 +324,11 @@ class CounterLog:
         column) feeds the shared retraction ledger, which rejects a
         double retract before anything is written, and an
         ambiguous-failure retry passes the same *retraction_id* to
-        overwrite its own ``retract<k>`` dir."""
+        overwrite its own ``retract<k>`` dir (or do nothing once a
+        fold consumed it)."""
         target = _retraction_guard(self.spark, self.root, ids, retraction_id)
+        if target is None:
+            return
         partial.select(
             self.key, *[(-F.col(c)).alias(c) for c in self.counters]
         ).write.mode("overwrite").parquet(target)
@@ -463,10 +476,11 @@ def _retraction_guard(
     root: str,
     ids: DataFrame,
     retraction_id: int | None = None,
-) -> str:
+) -> str | None:
     """ENFORCE the at-most-once retraction contract for the
     summed-counter stores, and return the ``batch=retract<k>`` dir the
-    negated partial must be written to.
+    negated partial must be written to — or None when there is nothing
+    to write.
 
     Before this guard the contract was documented but unenforced: a
     second ``retract`` of the same doc landed a second negative partial
@@ -480,8 +494,11 @@ def _retraction_guard(
     * with an explicit *retraction_id*, retries after an ambiguous
       failure OVERWRITE the same ``retract<k>``/ledger pair instead of
       accumulating a second negated partial — the same idempotence key
-      ``append`` and ``delete`` already take. Re-using an id for a
-      DIFFERENT id-set is rejected;
+      ``append`` and ``delete`` already take. Once a fold has consumed
+      ``retract<k>`` (its ledger entry carries the fold's ``_folded``
+      mark) the retry returns None: the negated partial already sits in
+      a base, or still in its own dir if the fold crashed before
+      publishing. Re-using an id for a DIFFERENT id-set is rejected;
     * with ``retraction_id=None`` a fresh k is auto-assigned (the
       pre-guard behavior); the ledger still catches a double retract,
       so only ambiguous-failure RETRIES need the explicit id.
@@ -548,6 +565,9 @@ def _retraction_guard(
                 "different id-set — pick a fresh id (retries must carry "
                 "the exact ids of the failed attempt)"
             )
+        _, jmark = _hadoop(spark, posixpath.join(own_dir, "_folded"))
+        if fs.exists(jmark):
+            return None
     if retraction_id is None:
         target = _retract_dir(spark, root)
         k = posixpath.basename(target)[len("batch=retract"):]

@@ -409,22 +409,12 @@ def test_ngram_contamination_big_eval_routing(spark):
 
 
 def test_skipgram_prefilter_parity_with_full_emission(spark):
-    """The pigeonhole half-set prefilter (broadcast regime) must be
-    result-identical to the unfiltered full-volume emission (shuffle
-    regime) — the halves test is a NECESSARY condition, never a
-    filter on true matches. Parity is checked on the real sf0.001
-    documents fixture under the q81 split, where both pruned and
-    surviving windows occur."""
+    """The broadcast regime must be result-identical to the shuffle
+    regime's full-volume emission, on the real sf0.001 documents
+    fixture under the q81 split."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     train = docs.filter(F.col("doc_id") % 10 != 0)
     ev = docs.filter(F.col("doc_id") % 10 == 0)
-    pre = {
-        tuple(r)
-        for r in corpus.skipgram_contamination(
-            train, ev, "doc_id", "text", n=8, eval_small=True,
-            prefilter=True,
-        ).collect()
-    }
     full = {
         tuple(r)
         for r in corpus.skipgram_contamination(
@@ -437,24 +427,23 @@ def test_skipgram_prefilter_parity_with_full_emission(spark):
             train, ev, "doc_id", "text", n=8, eval_small=False
         ).collect()
     }
-    assert pre == full == shuffled
-    assert any(r[2] > 0 for r in pre)  # fixture has real contamination
+    assert full == shuffled
+    assert any(r[2] > 0 for r in full)  # fixture has real contamination
 
 
 def test_skipgram_prefilter_survivor_without_match_is_clean(spark):
     """A train window sharing a verbatim HALF with an eval window but
-    differing in ≥ 2 positions overall must survive the prefilter and
-    then be rejected by the exact masked-key join — the prefilter is a
-    candidate generator, not the verdict."""
+    differing in ≥ 2 positions overall is clean: the masked-key join
+    tolerates one substitution, not one half."""
     ev = spark.createDataFrame(
         [(0, "alpha bravo charlie delta echo foxtrot golf hotel")],
         "doc_id long, text string",
     )
     train = spark.createDataFrame(
         [
-            # first half verbatim, second half 2 subs: candidate, clean
+            # first half verbatim, second half 2 subs: clean
             (1, "alpha bravo charlie delta echo foxtrot kilo india"),
-            # no half matches: pruned, clean, window still counted
+            # no half matches: clean, window still counted
             (2, "one two three four five six seven eight"),
         ],
         "doc_id long, text string",
@@ -462,8 +451,7 @@ def test_skipgram_prefilter_survivor_without_match_is_clean(spark):
     got = {
         r["id"]: (r["n_windows"], r["n_contaminated"], r["contaminated"])
         for r in corpus.skipgram_contamination(
-            train, ev, "doc_id", "text", n=8, eval_small=True,
-            prefilter=True,
+            train, ev, "doc_id", "text", n=8, eval_small=True
         ).collect()
     }
     assert got[1] == (1, 0, False)
@@ -634,57 +622,9 @@ class TestContaminationOnetask:
         assert self._rows(one) == self._rows(dist)
 
 
-class TestFp64KeySpace:
-    """The fp64 fingerprint key space must match the byte-exact string
-    engine row-for-row (the key-space block's collision bound makes a
-    disagreement on these corpora effectively impossible — a mismatch
-    means the construction drifted)."""
-
-    @pytest.mark.parametrize("mode", ["ngram", "skipgram"])
-    @pytest.mark.parametrize("small", [True, False])
-    def test_fp64_matches_string_engine(self, docs, mode, small):
-        train = docs.filter(F.col("doc_id") % 10 != 0)
-        ev = docs.filter(F.col("doc_id") % 10 == 0)
-        fn = (
-            corpus.ngram_contamination
-            if mode == "ngram"
-            else corpus.skipgram_contamination
-        )
-        a = fn(train, ev, "doc_id", "text", n=8, eval_small=small,
-               keys="string").orderBy("id").collect()
-        b = fn(train, ev, "doc_id", "text", n=8, eval_small=small,
-               keys="fp64").orderBy("id").collect()
-        assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-    def test_fp64_handles_windowless_and_mask_tokens(self, spark):
-        df = spark.createDataFrame(
-            [
-                (0, "alpha bravo charlie delta echo foxtrot golf hotel"),
-                (10, "mask \x01 embedded literal token here extra pad"),
-                (1, "alpha bravo charlie delta echo foxtrot golf india"),
-                (5, "short"),
-                (6, ""),
-                (7, None),
-                (8, "mask stub embedded literal token here extra pad"),
-            ],
-            "doc_id long, text string",
-        )
-        train = df.filter(F.col("doc_id") % 10 != 0)
-        ev = df.filter(F.col("doc_id") % 10 == 0)
-        a = corpus.skipgram_contamination(
-            train, ev, "doc_id", "text", n=8, eval_small=True,
-            keys="string",
-        ).orderBy("id").collect()
-        b = corpus.skipgram_contamination(
-            train, ev, "doc_id", "text", n=8, eval_small=True,
-            keys="fp64",
-        ).orderBy("id").collect()
-        assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-
 class TestDupWindowOnetask:
     """The one-task duplicated-span tier must be ROW-IDENTICAL to the
-    distributed plans it strategy-routes below CONTAM_TASK_CAP."""
+    distributed plans it strategy-routes below DUPWIN_TASK_CAP."""
 
     def _rows(self, df):
         return [tuple(r) for r in df.orderBy("doc_id").collect()]

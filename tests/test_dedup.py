@@ -190,11 +190,11 @@ def test_pair_sources_identical(spark, corpus):
 
 
 def test_simhash_onetask_identical(spark, corpus):
-    """The one-Arrow-task SimHash tier must be byte-identical to BOTH
-    distributed pair sources on the md5_60 family — including the
-    hostile-text classes (empty text, whitespace-only, unicode, null,
-    punct-only) the adversarial fixture exercises, and pairs colliding
-    in more than one block (emitted once by every tier)."""
+    """Both SimHash pair sources must be byte-identical on the md5_60
+    family — including the hostile-text classes (empty text,
+    whitespace-only, unicode, null, punct-only) the adversarial fixture
+    exercises, and pairs colliding in more than one block (emitted once
+    by each source)."""
     hostile = spark.createDataFrame(
         [
             (300, ""),
@@ -208,38 +208,31 @@ def test_simhash_onetask_identical(spark, corpus):
     )
     df = corpus.unionByName(hostile)
     kw = dict(max_hamming=3, n_blocks=4)
-    one = sorted(map(tuple, dedup.simhash_pairs_onetask(
-        df, "doc_id", "text", n_bits=60, **kw).collect()))
     grp = sorted(map(tuple, dedup.simhash_near_duplicates(
         df, "doc_id", "text", token_hash="md5_60", n_bits=60,
         pair_source="group", **kw).collect()))
     jn = sorted(map(tuple, dedup.simhash_near_duplicates(
         df, "doc_id", "text", token_hash="md5_60", n_bits=60,
         pair_source="join", **kw).collect()))
-    assert one == grp == jn
-    assert (304, 305, 0) in one  # identical docs collide in all blocks
+    assert grp == jn
+    assert (304, 305, 0) in grp  # identical docs collide in all blocks
 
 
 def test_simhash_onetask_degenerate_all_blocks_collide(spark):
     """Round-15 ADVICE scenario: a corpus of identical/near-identical
-    docs collides in EVERY pigeonhole block. The one-task tier must
-    emit each pair exactly once (first-colliding-block rule, O(1)
-    memory - no seen-set of ~n^2/2 tuples) and match the distributed
-    group path."""
+    docs collides in EVERY pigeonhole block. The group pair source must
+    emit each pair exactly once."""
     from pyspark.sql import functions as F
 
     n = 60
     rows = [(i, "the same document text repeated for everyone") for i in range(n)]
     rows += [(1000 + i, f"the same document text repeated for almost {i}") for i in range(4)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    one = sorted(map(tuple, dedup.simhash_pairs_onetask(
-        df, "doc_id", "text", max_hamming=3, n_blocks=4, n_bits=60).collect()))
     grp = sorted(map(tuple, dedup.simhash_near_duplicates(
         df, "doc_id", "text", token_hash="md5_60", n_bits=60,
         max_hamming=3, n_blocks=4, pair_source="group").collect()))
-    assert one == grp
     # all identical docs pair up exactly once each at hamming 0
-    zero = [p for p in one if p[2] == 0 and p[0] < 1000 and p[1] < 1000]
+    zero = [p for p in grp if p[2] == 0 and p[0] < 1000 and p[1] < 1000]
     assert len(zero) == n * (n - 1) // 2
     assert len(set(zero)) == len(zero)
 

@@ -22,25 +22,38 @@ from evm_indexer_spark.streaming.vocab_stream import WordCountStore
 TEXT = "alpha beta gamma alpha beta gamma delta"
 
 
+# each maker returns (store, append(docs, batch_id),
+# retract(docs, retraction_id), totals())
+
+
 def _ngram_store(spark, path):
     store = NgramStatsStore(spark, path)
 
-    def append(docs, i):
-        store.append(
-            _ngram_counts_pandas(docs, "text", 2).select(
-                "ngram",
-                F.col("n_occurrences").alias("occ"),
-                F.col("n_docs").alias("docs"),
-            ),
-            batch_id=i,
+    def partial(docs):
+        return _ngram_counts_pandas(docs, "text", 2).select(
+            "ngram",
+            F.col("n_occurrences").alias("occ"),
+            F.col("n_docs").alias("docs"),
         )
 
-    return store, append, store.totals
+    return (
+        store,
+        lambda docs, i: store.append(partial(docs), batch_id=i),
+        lambda docs, k: store.retract(
+            partial(docs), docs.select("doc_id"), retraction_id=k
+        ),
+        store.totals,
+    )
 
 
 def _word_count_store(spark, path):
     store = WordCountStore(spark, path)
-    return store, lambda docs, i: store.append(docs, "text", i), store.counts
+    return (
+        store,
+        lambda docs, i: store.append(docs, "text", i),
+        lambda docs, k: store.retract(docs, "text", retraction_id=k),
+        store.counts,
+    )
 
 
 def _window_hash_index(spark, path):
@@ -48,6 +61,7 @@ def _window_hash_index(spark, path):
     return (
         ix,
         lambda docs, i: ix.append(docs, "doc_id", "text", i),
+        lambda docs, k: ix.retract(docs, "doc_id", "text", retraction_id=k),
         lambda: ix.hashes().groupBy("h").agg(F.sum("occ").alias("occ")),
     )
 
@@ -57,24 +71,28 @@ def _eval_gram_index(spark, path):
     return (
         ix,
         lambda docs, i: ix.append(docs, "text", i),
+        lambda docs, k: ix.retract(docs, "text", retraction_id=k),
         lambda: ix.partials().groupBy("gram").agg(F.sum("occ").alias("occ")),
     )
+
+
+STORES = pytest.mark.parametrize(
+    "make",
+    [_ngram_store, _word_count_store, _window_hash_index, _eval_gram_index],
+    ids=["NgramStatsStore", "WordCountStore", "WindowHashIndex", "EvalGramIndex"],
+)
 
 
 class _Crash(Exception):
     pass
 
 
-@pytest.mark.parametrize(
-    "make",
-    [_ngram_store, _word_count_store, _window_hash_index, _eval_gram_index],
-    ids=["NgramStatsStore", "WordCountStore", "WindowHashIndex", "EvalGramIndex"],
-)
+@STORES
 def test_fold_crash_after_publish_never_double_counts(
     spark, tmp_path, monkeypatch, make
 ):
     root = tmp_path / "log"
-    store, append, totals = make(spark, str(root))
+    store, append, _, totals = make(spark, str(root))
     for i in range(3):
         append(spark.createDataFrame([(i, TEXT)], "doc_id long, text string"), i)
     want = sorted(map(tuple, totals().collect()))
@@ -122,3 +140,23 @@ def test_retraction_ids_survive_compaction(spark, tmp_path):
     assert {r["word"]: r["freq"] for r in store.counts().collect()} == {
         "word1": 0, "word2": 1, "shared": 1,
     }
+
+
+@STORES
+def test_retry_of_folded_retraction_is_a_noop(spark, tmp_path, make):
+    """An explicit-id retry after compaction folded ``retract<k>``
+    away must not cancel the retracted doc a second time: the fold
+    marked the ledger entry, so the retry writes nothing."""
+    store, append, retract, totals = make(spark, str(tmp_path / "log"))
+    docs = [
+        spark.createDataFrame([(i, t)], "doc_id long, text string")
+        for i, t in enumerate(["alpha beta", "alpha gamma", "alpha delta"])
+    ]
+    for i, d in enumerate(docs):
+        append(d, i)
+    retract(docs[0], 7)
+    assert store.compact() == 3  # batch=0, batch=1, retract7
+    want = sorted(map(tuple, totals().collect()))
+    retract(docs[0], 7)
+    assert sorted(map(tuple, totals().collect())) == want
+    assert not (tmp_path / "log" / "batch=retract7").exists()

@@ -16,6 +16,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from evm_indexer_spark.functions import jpegcodec
 from evm_indexer_spark.functions.jpegcodec import (
     QUANT_LUMA,
     ZIGZAG,
@@ -27,6 +28,145 @@ from evm_indexer_spark.operators import multimodal
 from evm_indexer_spark.sources.tables import load_table
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+class _BitReader:
+    def __init__(self, data: bytes) -> None:
+        self.data = data
+        self.pos = 0
+        self._acc = 0
+        self._nbits = 0
+
+    def read_bit(self) -> int:
+        if not self._nbits:
+            if self.pos >= len(self.data):
+                raise ValueError("entropy stream exhausted")
+            byte = self.data[self.pos]
+            self.pos += 1
+            if byte == 0xFF:
+                if self.pos >= len(self.data) or self.data[self.pos] != 0x00:
+                    raise ValueError("unexpected marker inside entropy data")
+                self.pos += 1  # skip the stuffed 0x00
+            self._acc = byte
+            self._nbits = 8
+        self._nbits -= 1
+        return (self._acc >> self._nbits) & 1
+
+    def read_bits(self, n: int) -> int:
+        v = 0
+        for _ in range(n):
+            v = (v << 1) | self.read_bit()
+        return v
+
+
+def _extend(bits: int, size: int) -> int:
+    """T.81 F.2.2.1 EXTEND."""
+    if size == 0:
+        return 0
+    if bits < (1 << (size - 1)):
+        return bits - (1 << size) + 1
+    return bits
+
+
+class _HuffWalk:
+    """Canonical-code decoder: walks bits, matching against per-length
+    first-code offsets (T.81 F.2.2.3 DECODE)."""
+
+    def __init__(self, bits: list[int], vals: list[int]) -> None:
+        self.min_code = [0] * 17
+        self.max_code = [-1] * 17
+        self.val_ptr = [0] * 17
+        code = 0
+        k = 0
+        for length in range(1, 17):
+            n = bits[length - 1]
+            if n:
+                self.val_ptr[length] = k
+                self.min_code[length] = code
+                code += n
+                k += n
+                self.max_code[length] = code - 1
+            code <<= 1
+        self.vals = vals
+
+    def decode(self, reader: _BitReader) -> int:
+        code = reader.read_bit()
+        length = 1
+        while code > self.max_code[length]:
+            if length >= 16:
+                raise ValueError("invalid Huffman code in stream")
+            code = (code << 1) | reader.read_bit()
+            length += 1
+        return self.vals[self.val_ptr[length] + code - self.min_code[length]]
+
+
+def _decode_scan_bitloop(
+    scan, comps, scan_tables, htables, restart_interval, mcx, mcy
+) -> list[np.ndarray]:
+    """Reference entropy decoder: the per-bit reader + canonical-offset
+    walk (T.81 F.2.2.3 verbatim), with ``jpegcodec._decode_scan_lut``'s
+    signature and output, so a test can swap it in for the LUT path."""
+    walks = {k: _HuffWalk(d.bits, d.vals) for k, d in htables.items()}
+    reader = _BitReader(scan)
+    ncomp = len(comps)
+    out = [
+        np.zeros((mcx * mcy * hs * vs, 64), dtype=np.int64)
+        for _, _, hs, vs in comps
+    ]
+    fill = [0] * ncomp
+    preds = [0] * ncomp
+    rst = 0
+    for m in range(mcx * mcy):
+        if restart_interval and m and m % restart_interval == 0:
+            # byte-align past the pad bits, consume RSTn, reset DC preds
+            reader._nbits = 0
+            reader._acc = 0
+            if not (
+                reader.pos + 1 < len(reader.data)
+                and reader.data[reader.pos] == 0xFF
+                and 0xD0 <= reader.data[reader.pos + 1] <= 0xD7
+            ):
+                raise ValueError("expected restart marker in scan")
+            if reader.data[reader.pos + 1] & 7 != rst % 8:
+                raise ValueError("restart marker out of sequence")
+            reader.pos += 2
+            rst += 1
+            preds = [0] * ncomp
+        for ci in range(ncomp):
+            dc_dec = walks[(0, scan_tables[ci][0])]
+            ac_dec = walks[(1, scan_tables[ci][1])]
+            _, _, hs, vs = comps[ci]
+            arr = out[ci]
+            for _ in range(hs * vs):
+                zz = arr[fill[ci]]
+                fill[ci] += 1
+                size = dc_dec.decode(reader)
+                preds[ci] += _extend(reader.read_bits(size), size)
+                zz[0] = preds[ci]
+                k = 1
+                while k < 64:
+                    sym = ac_dec.decode(reader)
+                    if sym == 0x00:  # EOB
+                        break
+                    run, size = sym >> 4, sym & 0x0F
+                    if size == 0:
+                        if run != 15:
+                            raise ValueError("invalid AC symbol")
+                        k += 16  # ZRL
+                        continue
+                    k += run
+                    if k > 63:
+                        raise ValueError("AC run overflows block")
+                    zz[k] = _extend(reader.read_bits(size), size)
+                    k += 1
+    return out
+
+
+def _decode_bitloop(data: bytes, monkeypatch) -> np.ndarray:
+    """``jpeg_decode`` with the reference entropy decoder swapped in."""
+    with monkeypatch.context() as m:
+        m.setattr(jpegcodec, "_decode_scan_lut", _decode_scan_bitloop)
+        return jpeg_decode(data)
 
 
 def _blocky(vals: np.ndarray) -> np.ndarray:
@@ -284,7 +424,7 @@ def test_444_bit_identical_after_mcu_generalization():
     assert np.array_equal(jpeg_decode(jpeg_encode(img, 100)), img)
 
 
-def test_lut_entropy_path_bit_identical_to_bitloop():
+def test_lut_entropy_path_bit_identical_to_bitloop(monkeypatch):
     """The 16-bit-LUT entropy decoder (default) must produce pixels
     BIT-IDENTICAL to the per-bit scalar twin across content, quality,
     subsampling, and restart intervals — the flaccodec twin-pinning
@@ -314,23 +454,17 @@ def test_lut_entropy_path_bit_identical_to_bitloop():
             restart_interval=dri,
         )
         assert np.array_equal(
-            jpeg_decode(enc, entropy_path="lut"),
-            jpeg_decode(enc, entropy_path="bitloop"),
+            jpeg_decode(enc), _decode_bitloop(enc, monkeypatch)
         )
 
     twin()
-    # grayscale leg + the unknown-path guardrail
+    # grayscale leg
     gray = np.arange(64, dtype=np.uint8).reshape(8, 8)
     enc = jpeg_encode(gray, quality=85)
-    assert np.array_equal(
-        jpeg_decode(enc, entropy_path="lut"),
-        jpeg_decode(enc, entropy_path="bitloop"),
-    )
-    with pytest.raises(ValueError, match="entropy_path"):
-        jpeg_decode(enc, entropy_path="fast")
+    assert np.array_equal(jpeg_decode(enc), _decode_bitloop(enc, monkeypatch))
 
 
-def test_lut_path_error_parity_on_corrupt_streams():
+def test_lut_path_error_parity_on_corrupt_streams(monkeypatch):
     # both entropy paths must REFUSE the same corrupt inputs: truncated
     # scan (exhaustion) and a stray marker inside entropy data
     img = np.full((16, 16), 200, dtype=np.uint8)
@@ -338,14 +472,14 @@ def test_lut_path_error_parity_on_corrupt_streams():
     enc = jpeg_encode(img, quality=75)
     sos = enc.find(b"\xff\xda")
     cut = enc[: sos + 40]  # truncate inside the entropy segment
-    for path in ("lut", "bitloop"):
+    for decode in (jpeg_decode, lambda b: _decode_bitloop(b, monkeypatch)):
         with pytest.raises(ValueError):
-            jpeg_decode(cut, entropy_path=path)
+            decode(cut)
     # splice a bare marker into the scan: 'unexpected marker' on both
     bad = enc[: sos + 30] + b"\xff\xc8" + enc[sos + 30 :]
-    for path in ("lut", "bitloop"):
+    for decode in (jpeg_decode, lambda b: _decode_bitloop(b, monkeypatch)):
         with pytest.raises(ValueError, match="marker|exhausted"):
-            jpeg_decode(bad, entropy_path=path)
+            decode(bad)
 
 
 def test_jpeg_header_dims_no_entropy_work(spark):

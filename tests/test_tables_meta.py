@@ -271,23 +271,37 @@ class TestOnetaskByteGates:
             ONETASK_TEXT_BYTES_CAP,
         )
 
-    def test_fat_corpus_routes_distributed(self, spark, tmp_path):
+    def test_fat_corpus_routes_distributed(self, spark, tmp_path, monkeypatch):
         # rowcount-small (20 docs) but bytes-huge (~12 MB of text):
-        # the q73/q27 plans must be the distributed ones, not the
-        # Coalesce(1) + single MapInPandas kernel
+        # the q76/q27/q40/q60 plans must be the distributed ones, not
+        # the Coalesce(1) + single MapInPandas kernel
         from evm_indexer_spark import driver_queries
+        from evm_indexer_spark.operators import dedup, graph
 
         d = self._fat_docs_dir(tmp_path)
         qs = driver_queries.queries()
-        plan73 = qs["q73_dup_window_spans"](
+        plan76 = qs["q76_incremental_dup_windows"](
             spark, d
         )._jdf.queryExecution().optimizedPlan().toString()
-        assert "Repartition" in plan73  # the hash exchange of the
-        # distributed analytic-count plan (the one-task tier has none)
-        assert "MapInPandas" not in plan73
+        # the O(batch) stream plan joins the history counters; the
+        # one-task tier is one MapInPandas with no join
+        assert "Join" in plan76
+        assert "MapInPandas" not in plan76
         plan27 = qs["q27_dedup_minhash_lsh"](
             spark, d
         )._jdf.queryExecution().optimizedPlan().toString()
         # the one-task MinHash kernel is a single map over a 1-coalesce;
         # the distributed plan carries the banding join machinery
         assert "Join" in plan27
+        # q40/q60: the strategy each id<500 slice hands its operator
+        # (q60's distributed closure runs eagerly, so capture it)
+        seen = []
+
+        def capture(*a, strategy, **k):
+            seen.append(strategy)
+
+        monkeypatch.setattr(dedup, "jaccard_prefix_join", capture)
+        monkeypatch.setattr(graph, "dedup_clusters", capture)
+        qs["q40_jaccard_all_pairs"](spark, d)
+        qs["q60_dedup_clusters"](spark, d)
+        assert seen == ["prefix", "distributed"]
