@@ -50,7 +50,7 @@ from ..operators.corpus import (
 )
 from ..operators.partitioning import spread_small_scan
 from . import epochlog
-from .epochlog import CounterLog, _claim_stamp, _stream_batch_base
+from .epochlog import CounterLog, _claim_stamp
 
 GRAM_SCHEMA = StructType(
     [
@@ -299,47 +299,24 @@ def start_contamination_stream(
     min_hits: int = 1,
     stats_dir: str | None = None,
 ):
-    """Stream newline-JSON ``{<id_col>, <text_col>}`` TRAINING docs
-    from *landing_dir*; per micro-batch: write each arriving doc's
-    contamination row against the eval gram set as it stands (id /
+    """Score arriving ``{<id_col>, <text_col>}`` TRAINING docs against
+    the eval gram set as it stands: one contamination row per doc (id /
     n_windows / n_contaminated / contaminated — the q80 contract) to
-    ``<stats_dir>/batch=<batch_id>`` (default ``<index>/_stats``).
-    ``on_stats(rows, batch_id)`` opts in to a driver read-back of the
-    written epoch; the id is the STORE batch id
-    (``_stream_batch_base + epoch``), stable across checkpoint
-    lineages.
+    ``<stats_dir>/batch=<batch_id>`` (default ``<index>/_stats``), read
+    back into ``on_stats(rows, batch_id)`` on opt-in. Delivery follows
+    ``epochlog.arrival_stream``.
 
-    Train docs do NOT modify the index (contamination checking reads
-    eval state; only eval append/retract writes it), so re-delivery is
-    naturally idempotent — the epoch's stats dir is overwritten, no id
-    guard needed. A doc scored before an eval change keeps its
-    original verdict (the arrival-time answer); re-land it to rescore,
-    or run the batch operator for a full-corpus refresh."""
+    Train docs do NOT modify the index (only eval append/retract writes
+    it), so there is no id guard: a re-landed doc is scored again. A
+    doc scored before an eval change keeps its original verdict (the
+    arrival-time answer); re-land it to rescore, or run the batch
+    operator for a full-corpus refresh."""
     out_dir = stats_dir or posixpath.join(index.path, "_stats")
-    base = _stream_batch_base(spark, checkpoint_dir, [index.path, out_dir])
-    doc_schema = StructType(
-        [
-            StructField(id_col, LongType(), False),
-            StructField(text_col, StringType(), True),
-        ]
+    return epochlog.arrival_stream(
+        spark, landing_dir, epochlog.doc_schema(id_col, text_col),
+        checkpoint_dir, [index.path, out_dir],
+        lambda batch, _prior, _bid: index.contamination_for(
+            batch, id_col, text_col, min_hits
+        ),
+        sink=out_dir, on_sink=on_stats,
     )
-
-    def _process(batch: DataFrame, epoch_id: int) -> None:
-        bid = base + epoch_id
-        batch = batch.dropDuplicates([id_col])
-        if not batch.take(1):
-            return
-        rows = index.contamination_for(batch, id_col, text_col, min_hits)
-        epochlog.write(rows, out_dir, bid)
-        if on_stats is not None:
-            back = spark.read.parquet(epochlog.batch_path(out_dir, bid)).collect()
-            on_stats([r.asDict() for r in back], bid)
-
-    stream = (
-        spark.readStream.schema(doc_schema)
-        .json(landing_dir)
-        .writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
-    return stream.start()

@@ -15,11 +15,9 @@ The store is a summed-counter epoch log (``epochlog.CounterLog``):
 compaction MERGES (groupBy-sum), so it bounds both file count and row
 count at the distinct-ngram cardinality.
 
-Delivery contract: each document must land at most once across epochs
-(epoch re-delivery is safe; cross-epoch re-arrival would double-count).
-Pair this stream with ``dedup_stream``'s text store when the source
-cannot guarantee that — its arrival anti-join yields exactly the
-at-most-once flow this audit needs.
+The stream has no id guard (``epochlog.arrival_stream``): when the
+source can re-land a document, feed it through ``dedup_stream``'s text
+store, whose anti-join yields the at-most-once flow this audit needs.
 """
 
 from __future__ import annotations
@@ -36,7 +34,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.corpus import _ngram_counts_pandas
-from .epochlog import CounterLog, _stream_batch_base
+from .epochlog import CounterLog, arrival_stream, doc_schema
 
 STATS_SCHEMA = StructType(
     [
@@ -112,44 +110,29 @@ def start_ngram_stream(
     k: int = 100,
     min_count: int = 2,
 ):
-    """Stream newline-JSON ``{<id_col>, <text_col>}`` docs from
-    *landing_dir*; per micro-batch: fold the batch's n-gram partial
-    counters into *store* and report the UPDATED corpus top-k through
-    ``on_top(rows, batch_id)`` (rows are dicts with ngram /
-    n_occurrences / n_docs, already ordered).
+    """Fold each arriving batch of ``{<id_col>, <text_col>}`` docs'
+    n-gram partial counters into *store* and report the UPDATED corpus
+    top-k through ``on_top(rows, batch_id)`` (rows are dicts with ngram
+    / n_occurrences / n_docs, already ordered). Delivery follows
+    ``epochlog.arrival_stream``.
 
     After any prefix of epochs, ``store.top(k, min_count)`` equals
     ``corpus.top_ngrams`` run over every document landed so far — the
     incremental = batch equivalence pytest pins. Tokenization is the
     same Arrow partial-counter pass the batch operator uses, so the
     two can never drift."""
-    doc_schema = StructType(
-        [
-            StructField(id_col, LongType(), False),
-            StructField(text_col, StringType(), True),
-        ]
-    )
 
-    base = _stream_batch_base(spark, checkpoint_dir, [store.path])
-
-    def _process(batch: DataFrame, epoch_id: int) -> None:
-        batch = batch.dropDuplicates([id_col])
-        if not batch.take(1):
-            return
+    def step(batch: DataFrame, _prior, bid: int) -> None:
         partial = _ngram_counts_pandas(batch, text_col, n).select(
             "ngram",
             F.col("n_occurrences").alias("occ"),
             F.col("n_docs").alias("docs"),
         )
-        store.append(partial, batch_id=base + epoch_id)
+        store.append(partial, batch_id=bid)
         rows = store.top(k, min_count).collect()
-        on_top([r.asDict() for r in rows], base + epoch_id)
+        on_top([r.asDict() for r in rows], bid)
 
-    stream = (
-        spark.readStream.schema(doc_schema)
-        .json(landing_dir)
-        .writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    return arrival_stream(
+        spark, landing_dir, doc_schema(id_col, text_col), checkpoint_dir,
+        [store.path], step,
     )
-    return stream.start()

@@ -17,10 +17,7 @@ between ``compact()`` calls.
 
 The bucket rows, the text store and the pair sink are epoch logs
 (``streaming/epochlog``: overwrite-idempotent batch dirs, crash-safe
-folds, id tombstones). Pair output goes through the caller's sink
-callback with the STORE batch id (``_stream_batch_base + epoch``) so
-the sink can apply the same keying as the ``batch=<id>`` dirs — stable
-across checkpoint lineages.
+folds, id tombstones), fed by ``epochlog.arrival_stream``.
 """
 
 from __future__ import annotations
@@ -40,12 +37,7 @@ from pyspark.sql.types import (
 
 from ..operators import dedup
 from . import epochlog
-from .epochlog import (
-    _append_tombstones,
-    _claim_stamp,
-    _stream_batch_base,
-    _tombstones_df,
-)
+from .epochlog import _append_tombstones, _claim_stamp, _tombstones_df
 
 BUCKET_SCHEMA = StructType(
     [
@@ -204,82 +196,68 @@ def start_dedup_stream(
     assume_new_ids: bool = False,
     pairs_dir: str | None = None,
 ):
-    """Stream newline-JSON ``{<id_col>, <text_col>}`` docs from
-    *landing_dir*; per micro-batch: write near-dup pairs
+    """Report near-dup pairs of arriving ``{<id_col>, <text_col>}`` docs
     (new-vs-corpus + new-vs-new) to ``<pairs_dir>/batch=<batch_id>``
     (default ``<index>/_pairs``), then append the batch to the index
-    and to the text store future verifications read from.
-
-    Pair volume is O(batch near-dups) — normally tiny, but UNBOUNDED
+    and to the text store (``seen_text_dir``, default ``<index>/_text``)
+    that future verifications read. Delivery follows
+    ``epochlog.arrival_stream``; ``on_pairs(pairs, batch_id)`` is the
+    opt-in read-back for bounded batches — pair volume is unbounded
     when a batch is mostly duplicates (a crawler replay, a mirror
-    dump), so the default verdict path is an executor-side parquet
-    sink, never a driver collect. ``on_pairs(pairs, batch_id)`` is the
-    opt-in for bounded batches: when given, the epoch's WRITTEN pairs
-    are read back and collected (one computation, the sink stays the
-    source of truth; epoch re-delivery overwrites its own batch dir,
-    so the sink converges — callback side effects are the caller's to
-    idempotize, as before). The callback id is the STORE batch id
-    (``_stream_batch_base + epoch``), i.e. the ``batch=<id>`` dir the
-    pairs were written to — callers keying side effects by it stay
-    collision-free across checkpoint lineages.
+    dump), so the default verdict path is the parquet sink.
 
-    An id that re-arrives in a LATER file (not an epoch re-delivery)
-    would violate the index precondition — its buckets and text would
-    land twice and verification would merge shingles across both text
-    versions. The stream therefore anti-joins each batch against the
-    ids already in the text store (epoch re-deliveries are exempt: the
-    store read excludes the current epoch's own directory, so a crashed
-    epoch reprocesses in full). The guard costs one slim id-column scan
-    of the store per batch; sources that guarantee at-most-once ids can
-    skip it with ``assume_new_ids=True``.
+    The text store is the id guard: an id re-arriving in a LATER file
+    would break the index precondition (its buckets would land twice
+    and verification would merge shingles across both text versions),
+    so it is dropped. The guard costs one slim id scan per batch;
+    sources that guarantee at-most-once ids skip it with
+    ``assume_new_ids=True``."""
+    return _pair_stream(
+        spark, landing_dir, index, checkpoint_dir, on_pairs, id_col,
+        text_col, StringType(), jaccard_threshold,
+        seen_text_dir or posixpath.join(index.path, "_text"),
+        assume_new_ids, pairs_dir,
+    )
 
-    The text store (``seen_text_dir``, default ``<index>/_text``) uses
-    the same batch-keyed overwrite as the bucket rows, so a re-delivered
-    epoch converges instead of duplicating. ``availableNow`` + the same
-    checkpoint dir resumes across restarts (classic incremental fill).
-    Store batch ids are ``_stream_batch_base + epoch``, so a FRESH
-    checkpoint over already-filled stores starts above the existing
-    batches instead of clobbering ``batch=0``.
-    """
-    text_dir = seen_text_dir or posixpath.join(index.path, "_text")
+
+def _pair_stream(
+    spark: SparkSession,
+    landing_dir: str,
+    index,
+    checkpoint_dir: str,
+    on_pairs: Callable[[list, int], None] | None,
+    id_col: str,
+    payload_col: str,
+    payload_type,
+    threshold: float,
+    store_dir: str,
+    assume_new_ids: bool,
+    pairs_dir: str | None,
+):
+    """The bucket-index pair stream shared by the text and embedding
+    dedup streams, which differ only in the payload column: each batch
+    is scored by ``index.pairs_for`` against the payloads already in
+    *store_dir* plus its own, and then appended to the index and to
+    *store_dir*."""
     out_dir = pairs_dir or posixpath.join(index.path, "_pairs")
-    base = _stream_batch_base(
-        spark, checkpoint_dir, [index.path, text_dir, out_dir]
-    )
-    doc_schema = StructType(
-        [
-            StructField(id_col, LongType(), False),
-            StructField(text_col, StringType(), True),
-        ]
-    )
+    schema = epochlog.doc_schema(id_col, payload_col, payload_type)
 
-    def _process(batch: DataFrame, epoch_id: int) -> None:
-        bid = base + epoch_id
-        batch = batch.dropDuplicates([id_col])
-        prior = epochlog.read(spark, text_dir, doc_schema, exclude=bid)
-        if not assume_new_ids:
-            batch = batch.join(prior.select(id_col), id_col, "left_anti")
-        if not batch.take(1):
-            return
-        corpus = prior.unionByName(batch.select(id_col, text_col))
-        pairs = index.pairs_for(
-            batch, corpus, id_col, text_col, jaccard_threshold
-        )
-        pair_schema = pairs.schema
-        epochlog.write(pairs, out_dir, bid)
-        if on_pairs is not None:
-            rows = spark.read.schema(pair_schema).parquet(
-                epochlog.batch_path(out_dir, bid)
-            ).collect()
-            on_pairs([r.asDict() for r in rows], bid)
-        index.append(batch, id_col, text_col, batch_id=bid)
-        epochlog.write(batch.select(id_col, text_col), text_dir, bid)
+    def stored(bid: int) -> DataFrame:
+        return epochlog.read(spark, store_dir, schema, exclude=bid)
 
-    stream = (
-        spark.readStream.schema(doc_schema)
-        .json(landing_dir)
-        .writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    def step(batch: DataFrame, prior, bid: int) -> DataFrame:
+        if prior is None:  # unguarded: the store is still the corpus
+            prior = stored(bid)
+        corpus = prior.unionByName(batch.select(id_col, payload_col))
+        return index.pairs_for(batch, corpus, id_col, payload_col, threshold)
+
+    def absorb(batch: DataFrame, bid: int) -> None:
+        index.append(batch, id_col, payload_col, batch_id=bid)
+        epochlog.write(batch.select(id_col, payload_col), store_dir, bid)
+
+    return epochlog.arrival_stream(
+        spark, landing_dir, schema, checkpoint_dir,
+        [index.path, store_dir, out_dir], step,
+        seen=None if assume_new_ids else stored,
+        sink=out_dir, on_sink=on_pairs, absorb=absorb,
     )
-    return stream.start()

@@ -15,12 +15,9 @@ batch operator would say about those docs at that corpus state
 (pinned by test_dupwin_stream's prefix-equivalence probe and the q76
 gate identity).
 
-The index is a summed-counter epoch log (``epochlog.CounterLog``).
-
-Delivery contract: each document must land at most once across epochs.
-The stream enforces it with an id-store anti-join (epoch re-deliveries
-are exempt: the id read excludes the current epoch's own directory),
-the same guard as ``start_dedup_stream``.
+The index is a summed-counter epoch log (``epochlog.CounterLog``), fed
+by ``epochlog.arrival_stream`` with an id guard: a re-arrived doc
+would count its windows twice.
 """
 
 from __future__ import annotations
@@ -30,11 +27,11 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..operators.corpus import _window_hashes, incremental_dup_window_stats
 from . import epochlog
-from .epochlog import CounterLog, _claim_stamp, _stream_batch_base
+from .epochlog import CounterLog, _claim_stamp
 
 HASH_SCHEMA = StructType(
     [
@@ -141,62 +138,30 @@ def start_dupwin_stream(
     assume_new_ids: bool = False,
     stats_dir: str | None = None,
 ):
-    """Stream newline-JSON ``{<id_col>, <text_col>}`` docs from
-    *landing_dir*; per micro-batch: write each arriving doc's
-    duplicated-span statistics vs the corpus indexed so far (rows with
-    doc_id / n_tokens / n_windows / dup_windows / covered_tokens) to
+    """Write each arriving ``{<id_col>, <text_col>}`` doc's
+    duplicated-span statistics vs the corpus indexed so far (doc_id /
+    n_tokens / n_windows / dup_windows / covered_tokens) to
     ``<stats_dir>/batch=<batch_id>`` (default ``<index>/_stats``), then
-    append the batch's window counters to *index*. Stats volume is
-    O(batch docs) — bounded, unlike pair verdicts — but the default
-    stays the executor-side sink for uniformity with the dedup
-    streams; ``on_stats(rows, batch_id)`` opts in to a driver
-    read-back of the written epoch. The callback id is the STORE
-    batch id (``_stream_batch_base + epoch``) — the ``batch=<id>``
-    dir the stats landed in, stable across checkpoint lineages.
-
-    Cross-epoch id re-arrival would double the re-arrived doc's window
-    counters; the stream anti-joins each batch against the ids already
-    appended (epoch re-deliveries exempt — the id store read excludes
-    the current epoch's own dir, so a crashed epoch reprocesses in
-    full). ``availableNow`` + the same checkpoint dir resumes across
-    restarts."""
+    append the batch's window counters to *index* and its ids to
+    ``<index>/_ids``, the id guard (``assume_new_ids=True`` skips it).
+    Delivery follows ``epochlog.arrival_stream``; ``on_stats(rows,
+    batch_id)`` opts in to the read-back."""
     ids_dir = posixpath.join(index.path, "_ids")
     out_dir = stats_dir or posixpath.join(index.path, "_stats")
-    base = _stream_batch_base(
-        spark, checkpoint_dir, [index.path, ids_dir, out_dir]
-    )
-    doc_schema = StructType(
-        [
-            StructField(id_col, LongType(), False),
-            StructField(text_col, StringType(), True),
-        ]
-    )
     id_schema = StructType([StructField(id_col, LongType(), False)])
 
-    def _process(batch: DataFrame, epoch_id: int) -> None:
-        bid = base + epoch_id
-        batch = batch.dropDuplicates([id_col])
-        if not assume_new_ids:
-            seen = epochlog.read(spark, ids_dir, id_schema, exclude=bid)
-            batch = batch.join(seen, id_col, "left_anti")
-        if not batch.take(1):
-            return
-        stats = index.stats_for(batch, id_col, text_col, exclude_epoch=bid)
-        stat_schema = stats.schema
-        epochlog.write(stats, out_dir, bid)
-        if on_stats is not None:
-            rows = spark.read.schema(stat_schema).parquet(
-                epochlog.batch_path(out_dir, bid)
-            ).collect()
-            on_stats([r.asDict() for r in rows], bid)
+    def absorb(batch: DataFrame, bid: int) -> None:
         index.append(batch, id_col, text_col, batch_id=bid)
         epochlog.write(batch.select(id_col), ids_dir, bid)
 
-    stream = (
-        spark.readStream.schema(doc_schema)
-        .json(landing_dir)
-        .writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    return epochlog.arrival_stream(
+        spark, landing_dir, epochlog.doc_schema(id_col, text_col),
+        checkpoint_dir, [index.path, ids_dir, out_dir],
+        lambda batch, _prior, bid: index.stats_for(
+            batch, id_col, text_col, exclude_epoch=bid
+        ),
+        seen=None if assume_new_ids else (
+            lambda bid: epochlog.read(spark, ids_dir, id_schema, exclude=bid)
+        ),
+        sink=out_dir, on_sink=on_stats, absorb=absorb,
     )
-    return stream.start()

@@ -1,7 +1,7 @@
 """Embedding-dedup-on-arrival: a persisted hyperplane-LSH bucket index
 plus a streaming pipeline that reports embedding near-duplicate pairs
-as vectors land — the embedding twin of ``dedup_stream`` (text), built
-on the same epoch log (``streaming/epochlog``) and re-arrival guard.
+as vectors land — the embedding twin of ``dedup_stream`` (text), which
+differs from it only in the payload column (both run ``_pair_stream``).
 
 Why incremental: at 100 TB re-hashing the vector corpus per refresh has
 the same cost problem the MinHash index solves for text. Each arriving
@@ -32,12 +32,8 @@ from pyspark.sql.types import (
 
 from ..operators import similarity
 from . import epochlog
-from .epochlog import (
-    _append_tombstones,
-    _claim_stamp,
-    _stream_batch_base,
-    _tombstones_df,
-)
+from .dedup_stream import _pair_stream
+from .epochlog import _append_tombstones, _claim_stamp, _tombstones_df
 
 EMBED_BUCKET_SCHEMA = StructType(
     [
@@ -170,64 +166,18 @@ def start_embedding_dedup_stream(
     assume_new_ids: bool = False,
     pairs_dir: str | None = None,
 ):
-    """Stream newline-JSON ``{<id_col>, <vec_col>}`` vectors from
-    *landing_dir*; per micro-batch: write near-dup pairs
-    (new-vs-corpus + new-vs-new) to ``<pairs_dir>/batch=<batch_id>``
-    (default ``<index>/_pairs``), then append the batch to the index
-    and to the vector store future verifications read from.
-
-    Same delivery contract as ``start_dedup_stream``: cross-epoch id
-    re-arrival is dropped by an anti-join against the vector store
-    (epoch re-deliveries are exempt — the store read excludes the
-    current epoch's own directory, so a crashed epoch reprocesses in
-    full); sources that guarantee at-most-once ids skip the guard with
-    ``assume_new_ids=True``. ``availableNow`` + the same checkpoint dir
-    resumes across restarts. The verdict path is the same
-    executor-side parquet sink as ``start_dedup_stream`` (pair volume
-    is unbounded under an all-duplicates batch); ``on_pairs`` opts in
-    to a driver read-back of the written epoch for bounded batches."""
-    vec_dir = seen_vec_dir or posixpath.join(index.path, "_vecs")
-    out_dir = pairs_dir or posixpath.join(index.path, "_pairs")
-    base = _stream_batch_base(
-        spark, checkpoint_dir, [index.path, vec_dir, out_dir]
+    """``start_dedup_stream`` over ``{<id_col>, <vec_col>}`` vectors:
+    near-dup pairs (cosine-verified, new-vs-corpus + new-vs-new) go to
+    ``<pairs_dir>/batch=<batch_id>`` (default ``<index>/_pairs``), then
+    the batch is appended to the index and to the vector store
+    (``seen_vec_dir``, default ``<index>/_vecs``), which is also the id
+    guard. Delivery follows ``epochlog.arrival_stream``."""
+    return _pair_stream(
+        spark, landing_dir, index, checkpoint_dir, on_pairs, id_col,
+        vec_col, ArrayType(DoubleType()), min_cosine,
+        seen_vec_dir or posixpath.join(index.path, "_vecs"),
+        assume_new_ids, pairs_dir,
     )
-    doc_schema = StructType(
-        [
-            StructField(id_col, LongType(), False),
-            StructField(vec_col, ArrayType(DoubleType()), True),
-        ]
-    )
-
-    def _process(batch: DataFrame, epoch_id: int) -> None:
-        bid = base + epoch_id
-        batch = batch.dropDuplicates([id_col])
-        prior = epochlog.read(spark, vec_dir, doc_schema, exclude=bid)
-        if not assume_new_ids:
-            batch = batch.join(prior.select(id_col), id_col, "left_anti")
-        if not batch.take(1):
-            return
-        corpus = prior.unionByName(batch.select(id_col, vec_col))
-        pairs = index.pairs_for(
-            batch, corpus, id_col, vec_col, min_cosine
-        )
-        pair_schema = pairs.schema
-        epochlog.write(pairs, out_dir, bid)
-        if on_pairs is not None:
-            rows = spark.read.schema(pair_schema).parquet(
-                epochlog.batch_path(out_dir, bid)
-            ).collect()
-            on_pairs([r.asDict() for r in rows], bid)
-        index.append(batch, id_col, vec_col, batch_id=bid)
-        epochlog.write(batch.select(id_col, vec_col), vec_dir, bid)
-
-    stream = (
-        spark.readStream.schema(doc_schema)
-        .json(landing_dir)
-        .writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
-    return stream.start()
 
 
 def start_ann_index_stream(
@@ -239,54 +189,26 @@ def start_ann_index_stream(
     vec_col: str = "vec",
     assume_new_ids: bool = False,
 ):
-    """ANN-serving-on-arrival: stream newline-JSON ``{<id_col>,
-    <vec_col>}`` vectors from *landing_dir* into a built
-    ``similarity.IvfServingIndex`` — each micro-batch is assigned to
-    its nearest existing cells and appended under ``batch=<batch_id>``
+    """ANN-serving-on-arrival: append arriving ``{<id_col>, <vec_col>}``
+    vectors to a built ``similarity.IvfServingIndex`` — each batch is
+    assigned to its nearest existing cells under ``batch=<batch_id>``
     (O(batch) work, quantizer fixed), so ``topk``/``topk_pq`` stay
-    fresh without any rebuild.
+    fresh without any rebuild. Delivery follows
+    ``epochlog.arrival_stream``; the id guard reads the index's slim id
+    scan (``assume_new_ids=True`` skips it), and ``batch=0`` belongs to
+    the build, so arrivals start at ``batch=1`` even when the stream
+    starts before a build exists."""
 
-    Delivery contract matches the other arrival pipelines: epoch
-    re-delivery overwrites its own batch dir (converges); cross-epoch
-    id re-arrival is dropped by an anti-join against the index's slim
-    id scan excluding the current epoch (a crashed epoch reprocesses
-    in full); ``assume_new_ids=True`` skips the guard for sources that
-    guarantee at-most-once ids. ``availableNow`` + the same checkpoint
-    dir resumes across restarts. Batch ids come from the per-lineage
-    high-water mark (``_stream_batch_base``), so restarting against an
-    existing index with a FRESH checkpoint starts above every batch
-    already absorbed instead of silently overwriting ``batch=1``."""
-    doc_schema = StructType(
-        [
-            StructField(id_col, LongType(), False),
-            StructField(vec_col, ArrayType(DoubleType()), True),
-        ]
-    )
-    # batch=0 belongs to the BUILD even when the stream starts before
-    # one exists — arrivals never own it
-    base = max(
-        _stream_batch_base(spark, checkpoint_dir, [index._vectors_dir]), 1
-    )
+    def step(batch: DataFrame, _prior, bid: int) -> None:
+        index.append(batch, id_col, vec_col, batch_id=bid)
 
-    def _process(batch, epoch_id: int) -> None:
-        # stable per (lineage, epoch): re-delivery overwrites its own
-        # dir; a fresh lineage starts above the absorbed high-water mark
-        batch_id = base + epoch_id
-        batch = batch.dropDuplicates([id_col])
-        if not assume_new_ids:
-            prior = index.indexed_ids(exclude_batch=batch_id).withColumnRenamed(
-                "id", id_col
-            )
-            batch = batch.join(prior, id_col, "left_anti")
-        if not batch.take(1):
-            return
-        index.append(batch, id_col, vec_col, batch_id=batch_id)
-
-    stream = (
-        spark.readStream.schema(doc_schema)
-        .json(landing_dir)
-        .writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    return epochlog.arrival_stream(
+        spark, landing_dir,
+        epochlog.doc_schema(id_col, vec_col, ArrayType(DoubleType())),
+        checkpoint_dir, [index._vectors_dir], step,
+        seen=None if assume_new_ids else (
+            lambda bid: index.indexed_ids(exclude_batch=bid)
+            .withColumnRenamed("id", id_col)
+        ),
+        min_batch=1,
     )
-    return stream.start()

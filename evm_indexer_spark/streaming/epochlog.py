@@ -29,6 +29,10 @@ compaction merges a snapshot into the base. Row logs (bucket and
 serving indexes) mask deletes with id tombstones on read and fold them
 out in ``compact_tombstoned``.
 
+Every arrival index is fed by one driver, ``arrival_stream``; its
+docstring is the delivery contract all seven ``start_*_stream``
+functions share.
+
 All filesystem control flow (marker, listing, compaction renames) goes
 through the Hadoop FileSystem API, not ``os`` — the logs must work on
 whatever filesystem Spark writes to (HDFS, S3A, local), and rename-
@@ -39,11 +43,12 @@ from __future__ import annotations
 
 import operator
 import posixpath
+from collections.abc import Callable
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 
 def _empty(spark: SparkSession, schema) -> DataFrame:
@@ -620,6 +625,97 @@ def _assert_counters_nonnegative(
             " — the at-most-once retraction contract was violated; "
             "refusing to compact the corruption into the base"
         )
+
+
+def doc_schema(id_col: str, payload_col: str, payload_type=StringType()):
+    """The landing docs an arrival stream reads: a long id, then one
+    payload column (text unless *payload_type* says otherwise)."""
+    return StructType(
+        [
+            StructField(id_col, LongType(), False),
+            StructField(payload_col, payload_type, True),
+        ]
+    )
+
+
+def arrival_stream(
+    spark: SparkSession,
+    landing_dir: str,
+    schema: StructType,
+    checkpoint_dir: str,
+    roots: list[str],
+    step: Callable[[DataFrame, DataFrame | None, int], DataFrame | None],
+    *,
+    seen: Callable[[int], DataFrame] | None = None,
+    sink: str | None = None,
+    on_sink: Callable[[list, int], None] | None = None,
+    absorb: Callable[[DataFrame, int], None] | None = None,
+    min_batch: int = 0,
+):
+    """Start one arrival index's stream: the driver behind every
+    ``start_*_stream``, whose families supply only ``step``.
+
+    The delivery contract, shared by all of them:
+
+    * Newline-JSON docs under *schema* (its first field is the doc id)
+      are read from *landing_dir* with the ``availableNow`` trigger;
+      restarting with the same *checkpoint_dir* processes only files
+      landed since (incremental fill).
+    * Each micro-batch writes under the STORE batch id
+      ``bid = _stream_batch_base(roots) + epoch`` (never below
+      *min_batch*). A re-delivered epoch keeps its id, so it overwrites
+      its own ``batch=<bid>`` dirs and converges; a fresh checkpoint
+      over filled stores starts above every numeric batch dir in
+      *roots* and never clobbers ``batch=0``.
+    * Ids repeated inside a batch keep one arbitrary row. *seen* is the
+      id guard: ``seen(bid)`` reads the rows the stores already hold,
+      excluding the current epoch's own dir (a crashed epoch
+      reprocesses in full), and an anti-join on its id column drops
+      every cross-epoch re-arrival. Without a guard each doc must land
+      at most once: a summed store would count a re-arrival twice.
+    * A batch left empty writes nothing and calls nothing.
+    * ``step(batch, prior, bid)`` gets the batch, the ``seen`` frame
+      (None without *seen*) and the store batch id. With *sink*, the
+      frame it returns is the verdict: written to ``<sink>/batch=<bid>``
+      on the executors (its volume may be unbounded), and read back
+      with its schema into ``on_sink(rows, bid)`` when that opt-in
+      callback is given. Callback side effects are the caller's to
+      make idempotent.
+    * ``absorb(batch, bid)`` then appends the batch to the stores,
+      after the verdict is written: a crash before it leaves the stores
+      as the verdict saw them.
+    """
+    id_col = schema.fieldNames()[0]
+    base = max(_stream_batch_base(spark, checkpoint_dir, roots), min_batch)
+
+    def _process(batch: DataFrame, epoch_id: int) -> None:
+        bid = base + epoch_id
+        batch = batch.dropDuplicates([id_col])
+        prior = None if seen is None else seen(bid)
+        if prior is not None:
+            batch = batch.join(prior.select(id_col), id_col, "left_anti")
+        if not batch.take(1):
+            return
+        verdict = step(batch, prior, bid)
+        if sink is not None:
+            verdict_schema = verdict.schema
+            write(verdict, sink, bid)
+            if on_sink is not None:
+                rows = spark.read.schema(verdict_schema).parquet(
+                    batch_path(sink, bid)
+                ).collect()
+                on_sink([r.asDict() for r in rows], bid)
+        if absorb is not None:
+            absorb(batch, bid)
+
+    return (
+        spark.readStream.schema(schema)
+        .json(landing_dir)
+        .writeStream.foreachBatch(_process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def _stream_batch_base(

@@ -27,12 +27,13 @@ recoverable without double-cancelling any store.
   same handler invocation in which the doc's grams leave the counter
   stores — callers invoke it from the point that detects the reorg
   (the publish consumer seeing a known number re-arrive with a new
-  hash, or a ``foreachBatch`` wrapper around the ingest store), before
-  acknowledging the batch.
+  hash, or the ingest stream's batch handler), before acknowledging
+  the batch.
 
-The handler retracts the FIRST-ARRIVAL content (the text/vector the
-stores actually absorbed — the dedup text store and the embed vector
-store keep exactly that), not the reorged replacement.
+The handler retracts the content the stores absorbed, not the reorged
+replacement: the arrival guard (``epochlog.arrival_stream``) keeps an
+id's first arrival, which is what the dedup text store and the embed
+vector store hold.
 """
 
 from __future__ import annotations

@@ -73,6 +73,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 from ..schemas import BLOCK_BUCKET_SIZE, BLOCKS_SCHEMA, EVENTS_SCHEMA, TRANSACTIONS_SCHEMA
 from .epochlog import _empty
@@ -97,10 +98,19 @@ def _cols(table: str) -> list[str]:
 def _bucket_batch(blocks: DataFrame, txs: DataFrame, events: DataFrame):
     """Tag a batch's blocks with their bucket, and each child row with
     its parent block's bucket (every child belongs to a batch block).
+    A batch carrying two hashes for one number (a reorg inside one
+    delivery) keeps the block with the greatest hash, so a replay
+    stores the same one; the other's children drop out of the join.
     The bucketed blocks come back persisted — they feed the touched-
     bucket list, both child joins and the writes, which would otherwise
     each parse the raw batch again — and the caller unpersists them."""
-    blocks = blocks.withColumn("bucket", bucket_of(F.col("number"))).persist()
+    blocks = (
+        blocks.withColumn("_top", F.max("hash").over(Window.partitionBy("number")))
+        .filter(F.col("hash") == F.col("_top"))
+        .drop("_top")
+        .withColumn("bucket", bucket_of(F.col("number")))
+        .persist()
+    )
     key = blocks.select(F.col("hash").alias("_bh"), "bucket")
     txs, events = (
         c.join(key, c["blockhash"] == key["_bh"], "inner").drop("_bh")
@@ -297,8 +307,6 @@ class AtomicBlockStore:
         if not merge:
             paths = [p for ps in by_version.values() for p in ps]
             return self.spark.read.schema(schema).parquet(*paths)
-
-        from pyspark.sql.window import Window
 
         df = None
         for v, ps in sorted(by_version.items()):

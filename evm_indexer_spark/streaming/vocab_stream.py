@@ -13,10 +13,9 @@ below 100k words), never a corpus re-scan. Merges reported at each
 epoch equal ``bpe_train`` over all documents landed so far (pinned by
 test_vocab_stream's prefix-equivalence probe).
 
-The store is a summed-counter epoch log (``epochlog.CounterLog``).
-Delivery contract: each document lands at most once across epochs —
-pair with ``dedup_stream``'s text store when the source cannot
-guarantee that.
+The store is a summed-counter epoch log (``epochlog.CounterLog``). The
+stream has no id guard (``epochlog.arrival_stream``): feed it through
+``dedup_stream``'s text store when the source can re-land a document.
 """
 
 from __future__ import annotations
@@ -27,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..operators.tokenizer import bpe_train_from_counts, word_counts
-from .epochlog import CounterLog, _stream_batch_base
+from .epochlog import CounterLog, arrival_stream, doc_schema
 
 VOCAB_SCHEMA = StructType(
     [
@@ -92,34 +91,17 @@ def start_vocab_stream(
     num_merges: int = 8,
     min_freq: int = 1,
 ):
-    """Stream newline-JSON ``{<id_col>, <text_col>}`` docs from
-    *landing_dir*; per micro-batch: fold the batch's word counts into
-    *store* and report the UPDATED merge list through
+    """Fold each arriving batch of ``{<id_col>, <text_col>}`` docs'
+    word counts into *store* and report the UPDATED merge list through
     ``on_merges(merges, batch_id)`` (a list of (left, right, count)
     tuples, equal to batch training over everything landed so far).
-    ``availableNow`` + the same checkpoint dir resumes across
-    restarts."""
-    doc_schema = StructType(
-        [
-            StructField(id_col, LongType(), False),
-            StructField(text_col, StringType(), True),
-        ]
+    Delivery follows ``epochlog.arrival_stream``."""
+
+    def step(batch: DataFrame, _prior, bid: int) -> None:
+        store.append(batch, text_col, batch_id=bid)
+        on_merges(store.train(num_merges, min_freq), bid)
+
+    return arrival_stream(
+        spark, landing_dir, doc_schema(id_col, text_col), checkpoint_dir,
+        [store.path], step,
     )
-
-    base = _stream_batch_base(spark, checkpoint_dir, [store.path])
-
-    def _process(batch: DataFrame, epoch_id: int) -> None:
-        batch = batch.dropDuplicates([id_col])
-        if not batch.take(1):
-            return
-        store.append(batch, text_col, batch_id=base + epoch_id)
-        on_merges(store.train(num_merges, min_freq), base + epoch_id)
-
-    stream = (
-        spark.readStream.schema(doc_schema)
-        .json(landing_dir)
-        .writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
-    return stream.start()

@@ -311,41 +311,6 @@ def test_index_marker_permission_error_not_masked(spark, tmp_path):
     )
 
 
-def test_fresh_checkpoint_starts_above_existing_batches(spark, tmp_path):
-    """A FRESH checkpoint over already-filled stores must not clobber
-    batch=0 (round-10 lineage fix): new epochs land strictly above the
-    high-water batch id, and the on_pairs callback receives the STORE
-    batch id (base + epoch), matching the batch=<id> sink dirs."""
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    ix = MinHashBucketIndex(spark, str(tmp_path / "ix"), num_hashes=64, bands=64)
-    _land(str(landing), [(0, BASE + " variant 0"), (1, BASE + " variant 1")],
-          "b1.json")
-    q = start_dedup_stream(
-        spark, str(landing), ix, str(tmp_path / "ckpt1"), jaccard_threshold=0.4
-    )
-    q.awaitTermination(120)
-    first_rows = ix.buckets().filter(F.col("id").isin(0, 1)).count()
-    assert first_rows == 128
-
-    # second lineage: fresh checkpoint, same stores, new near-dup doc
-    ids: list[int] = []
-    _land(str(landing), [(2, BASE + " variant 2")], "b2.json")
-    q = start_dedup_stream(
-        spark, str(landing), ix, str(tmp_path / "ckpt2"),
-        on_pairs=lambda pairs, bid: ids.append(bid),
-        jaccard_threshold=0.4,
-    )
-    q.awaitTermination(120)
-    # lineage 1's rows survived (no batch=0 clobber) and doc 2 indexed
-    assert ix.buckets().filter(F.col("id").isin(0, 1)).count() == 128
-    assert ix.buckets().filter(F.col("id") == 2).count() == 64
-    # the callback id names a real sink dir above lineage 1's batches
-    assert ids and min(ids) >= 1
-    for bid in ids:
-        assert (tmp_path / "ix" / "_pairs" / f"batch={bid}").is_dir()
-
-
 def test_premarker_checkpoint_resumes_at_base_zero(spark, tmp_path):
     """A checkpoint created by pre-marker code (Spark offset logs
     present, no __batch_base__ marker) is a SAME-lineage resume: its

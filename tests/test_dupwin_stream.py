@@ -84,31 +84,6 @@ def test_arrival_stats_equal_batch_truth_per_prefix(spark, tmp_path):
     assert _batch_truth(spark, DOCS[:2], {1})[1][3] > 0
 
 
-def test_cross_epoch_rearrival_is_ignored(spark, tmp_path):
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    index = WindowHashIndex(spark, str(tmp_path / "idx"), window_n=N)
-    sink: list = []
-    _land(str(landing), DOCS[:2], "b0.json")
-    _run(spark, str(landing), index, ckpt, sink)
-    before = {
-        r["h"]: r["occ"]
-        for r in index.hashes().groupBy("h").agg(F.sum("occ").alias("occ")).collect()
-    }
-    # the same ids re-arrive in a LATER file (mutated text): the guard
-    # must drop them — counters unchanged, no stats reported
-    sink.clear()
-    _land(str(landing), [(0, "mutated text entirely"), (1, "same here")], "b1.json")
-    _run(spark, str(landing), index, ckpt, sink)
-    assert sink == []
-    after = {
-        r["h"]: r["occ"]
-        for r in index.hashes().groupBy("h").agg(F.sum("occ").alias("occ")).collect()
-    }
-    assert after == before
-
-
 def test_compaction_bounds_dirs_and_preserves_sums(spark, tmp_path):
     landing = tmp_path / "landing"
     landing.mkdir()

@@ -366,3 +366,40 @@ def test_delta_stream_ingest(spark, tmp_path):
     start_ingest_stream(spark, str(landing), store, ckpt).awaitTermination(120)
     assert store.blocks().count() == 5
     assert store.published().count() == 5
+
+
+
+@pytest.mark.parametrize("mode", ["cow", "delta"])
+def test_batch_with_two_hashes_for_one_number_stores_one(spark, tmp_path, mode):
+    """A micro-batch carrying two blocks numbered 1 stores one of them —
+    the greatest hash — with only its own children, and reads the same
+    block after an unrelated later commit and, under delta, after
+    compaction. Storing both let delta pick one by a tie on commit
+    order, so the answer changed with the next commit."""
+    store = AtomicBlockStore(spark, str(tmp_path / mode), commit_mode=mode)
+    twins = [raw_block(1), raw_block(1, salt="R")]
+    keep = max(b["hash"].lower() for b in twins)
+
+    def block_one():
+        hashes = [
+            r["hash"]
+            for r in store.blocks().filter(F.col("number") == 1).collect()
+        ]
+        kids = [
+            t.filter(F.col("blockhash").isin(*[b["hash"].lower() for b in twins]))
+            for t in (store.transactions(), store.events())
+        ]
+        return hashes, [
+            sorted(r["blockhash"] for r in k.select("blockhash").collect())
+            for k in kids
+        ]
+
+    want = ([keep], [[keep, keep], [keep, keep]])
+    process_raw_batch(store, make_raw(spark, [raw_block(0), *twins]))
+    assert block_one() == want
+    process_raw_batch(store, make_raw(spark, [raw_block(2)]))
+    assert block_one() == want
+    assert store.transactions().count() == 6
+    if mode == "delta":
+        store.compact()
+        assert block_one() == want
