@@ -64,33 +64,51 @@ def _dec(col, p=18, s=2):
     )
 
 
-# -- one-task tier byte gates (round 16) -------------------------------------
+# -- one-task routing ---------------------------------------------------------
 #
-# Every one-task route (q27/q35/q40/q60/q66/q67/q76/q79/q80-q83)
-# used to gate on footer ROWCOUNT alone; a corpus that lands just under
-# the row cap with pathological per-row payloads (few rows × megabyte
-# documents, or huge embedding dims) would serialize real work into one
-# Arrow task while the distributed plan handles it fine. The gates below
-# bound the task's INPUT BYTES from the same parquet footer metadata
-# (``table_column_bytes`` — zero plan-build jobs; None, i.e. footerless
-# or non-local sources, routes DISTRIBUTED, the always-correct path).
-#
-# Cap calibration (measured):
-# the text kernels process ~1.5 MB of footer text in ~0.2-0.5 s of
-# single-task Python at sf0.1 and ~15 MB in ~4 s (the sf1 single-task
-# md5 probe) — the distributed plans beat one task well before that, so
-# the text cap sits at 8 MB (~5× the sf0.1 gate volume, comfortably
-# inside the measured-win region at the sf0.3 crossover point). The
-# vector kernels are one numpy matmul whose input at sf1 is 3.5 MB of
-# footer bytes; 32 MB (~20k rows × dim 400 float32) bounds the matmul
-# and the candidate verify far below single-task pain.
+# Small-corpus entries can run their whole pipeline in one Arrow task
+# (``*_onetask`` kernels) instead of the distributed plan. The driver
+# makes that choice once, in ``_fits_one_task``, from parquet footer
+# metadata: rows AND bytes under the family's caps. Footerless or
+# non-local sources run the distributed plan, which is always correct;
+# the operators themselves default to it and never probe. Cap
+# calibration (measured crossovers per family) is in SCALE.md,
+# "One-task routing caps".
+BRUTE_TASK_CAP = 20_000
+CONTAM_TASK_CAP = 8_000
+DUPWIN_TASK_CAP = 20_000
 ONETASK_TEXT_BYTES_CAP = 8 << 20
 ONETASK_VEC_BYTES_CAP = 32 << 20
 
 
-def _onetask_bytes_ok(sf: str, table: str, col: str, cap: int) -> bool:
+def _fits_one_task(
+    sf: str,
+    table: str,
+    col: str,
+    row_cap: int | None,
+    byte_cap: int,
+    key_below: tuple[str, int] | None = None,
+) -> bool:
+    """True when footer metadata proves *table* fits one task: at most
+    *row_cap* rows (None: no row bound) and at most *byte_cap* bytes of
+    *col*. Launches no Spark job; a missing footer number is False
+    (distributed).
+
+    *key_below* ``(key, k)``: the entry reads only ``key < k`` of a
+    distinct integer key. With footer min(key) >= 0 that slice holds
+    at most k rows at every scale, so k stands in for the table's row
+    count; a missing or negative min is False."""
+    n = table_rowcount(sf, table)
     b = table_column_bytes(sf, table, col)
-    return b is not None and b <= cap
+    if n is None or b is None:
+        return False
+    if key_below is not None:
+        key, k = key_below
+        rng = table_column_range(sf, table, key)
+        if rng is None or rng[0] < 0:
+            return False
+        n = min(n, k)
+    return (row_cap is None or n <= row_cap) and b <= byte_cap
 
 
 # ---------------------------------------------------------------------------
@@ -620,8 +638,8 @@ def q27(spark, sf):
     n = table_rowcount(sf, "documents")
     n = doc.count() if n is None else n
     nh, b = dedup.banding_for_corpus(n)
-    if n <= dedup.BRUTE_TASK_CAP and _onetask_bytes_ok(
-        sf, "documents", "text", ONETASK_TEXT_BYTES_CAP
+    if _fits_one_task(
+        sf, "documents", "text", BRUTE_TASK_CAP, ONETASK_TEXT_BYTES_CAP
     ):
         # one-Arrow-task tier: the distributed plan is 11 AQE jobs of
         # ~0.2s scheduling floor against ~0.5s of compute at this scale
@@ -1079,12 +1097,10 @@ def q35(spark, sf):
     # Six tables put the expected misses at << 1 through sf10 while the
     # exact verification stage keeps precision at 1.0.
     n = table_rowcount(sf, "embeddings")
-    if (
-        n is not None
-        and 2 * n <= dedup.BRUTE_TASK_CAP
-        and _onetask_bytes_ok(
-            sf, "embeddings", "embedding", ONETASK_VEC_BYTES_CAP // 2
-        )
+    # the corpus doubles (original + perturbed copy), so both caps halve
+    if _fits_one_task(
+        sf, "embeddings", "embedding",
+        BRUTE_TASK_CAP // 2, ONETASK_VEC_BYTES_CAP // 2,
     ):
         # one-Arrow-task tier (the q27/q66/q83 routing applied to
         # embeddings): 1.39s -> ~0.45s warm at sf0.1 (round-15 medians)
@@ -1229,24 +1245,20 @@ def q40(spark, sf):
     id cap only keeps the small-SF benchmark comparable across rounds;
     the operator itself needs no cap.
 
-    Footer-proven lazy routing (the q80/q81 pattern): doc_id is a
-    distinct integer key, so with footer min >= 0 the ``doc_id < 500``
-    filter keeps at most 500 rows — strictly under the 2000-row brute
-    threshold at EVERY SF — and the brute tier can be passed explicitly
-    with zero plan-build jobs, unless the footer text bytes exceed the
-    one-task byte gate (then the prefix join runs). Footerless sources
-    keep the live limit-count probe; the auto router itself stays
-    pytest-exercised (tests/test_dedup)."""
+    Footer-proven routing (``_fits_one_task``): doc_id is a distinct
+    integer key, so with footer min >= 0 the ``doc_id < 500`` slice
+    keeps at most 500 rows at EVERY SF, and the one-task brute tier
+    runs unless the footer text bytes exceed the byte cap. Everything
+    else (fat text, footerless source, negative ids) runs the prefix
+    join."""
     doc = load_table(spark, sf, "documents").filter(F.col("doc_id") < 500)
-    rng = table_column_range(sf, "documents", "doc_id")
-    if rng is None or rng[0] < 0:
-        strategy = "auto"
-    elif _onetask_bytes_ok(sf, "documents", "text", ONETASK_TEXT_BYTES_CAP):
-        strategy = "brute"
-    else:
-        strategy = "prefix"
+    one_task = _fits_one_task(
+        sf, "documents", "text", BRUTE_TASK_CAP, ONETASK_TEXT_BYTES_CAP,
+        key_below=("doc_id", 500),
+    )
     return dedup.jaccard_prefix_join(
-        doc, "doc_id", "text", threshold=0.5, strategy=strategy
+        doc, "doc_id", "text", threshold=0.5,
+        strategy="brute" if one_task else "prefix",
     )
 
 
@@ -1736,22 +1748,20 @@ def q59(spark, sf):
 )
 def q60(spark, sf):
     """Near-dup clustering over the id<500 slice (the cap keeps the
-    small-SF benchmark comparable across rounds). The slice is
-    structurally ≤500 docs, so routing picks the one-Arrow-task tier
-    from footer stats — zero probe jobs — unless the footer text bytes
-    exceed the one-task byte gate; "auto" (which pays one limit-probe
-    job) covers sources without footer stats."""
+    small-SF benchmark comparable across rounds). Routed as q40: the
+    slice is structurally ≤500 docs, so the one-Arrow-task tier runs
+    unless the footer text bytes exceed the byte cap; fat, footerless
+    or negative-id sources run the distributed closure."""
     from .operators import graph
 
     doc = load_table(spark, sf, "documents").filter(F.col("doc_id") < 500)
-    if table_rowcount(sf, "documents") is None:
-        strategy = "auto"
-    elif _onetask_bytes_ok(sf, "documents", "text", ONETASK_TEXT_BYTES_CAP):
-        strategy = "onetask"
-    else:
-        strategy = "distributed"
+    one_task = _fits_one_task(
+        sf, "documents", "text", BRUTE_TASK_CAP, ONETASK_TEXT_BYTES_CAP,
+        key_below=("doc_id", 500),
+    )
     return graph.dedup_clusters(
-        doc, "doc_id", "text", threshold=0.5, strategy=strategy
+        doc, "doc_id", "text", threshold=0.5,
+        strategy="onetask" if one_task else "distributed",
     )
 
 
@@ -1828,25 +1838,29 @@ def q63(spark, sf):
     scale path generates candidates with the exact q-gram count/prefix
     filter (``dedup.editdist_candidates`` — content-bounded, measured
     3.6s vs 33s blocking at 5k same-length docs and near-linear to
-    20k), while below 2000 docs the auto router keeps plain
+    20k), while the small id<300 slice keeps plain
     adjacent-length-bucket blocking, whose quadratic is cheaper than
     the prefix plan's window/shuffle stages at that size. Both
     candidate generators are provably lossless — the prefix tier is
     hash-green against this same oracle (round-9 gate replica, entry
     temporarily forced) and byte-equal to the bucket tier in
     tests/test_dedup.py — so routing changes the plan, not the
-    answer. Routing is footer-proven lazy exactly as q40: the
-    ``doc_id < 300`` cap bounds the kept rows at 300 < 2000 whenever
-    footer min(doc_id) >= 0, so the bucket tier passes explicitly with
-    zero plan-build jobs (footerless sources keep the live probe)."""
+    answer. Routing is footer-proven exactly as q40: the
+    ``doc_id < 300`` slice keeps at most 300 rows whenever footer
+    min(doc_id) >= 0, and the bucket tier (which broadcasts full
+    texts) also needs the footer text bytes under the byte cap. Those
+    are whole-table bytes (the driver parquet is one row group), so
+    at sf1 the slice takes the prefix tier."""
     from .operators import dedup
 
     doc = load_table(spark, sf, "documents").filter(F.col("doc_id") < 300)
-    rng = table_column_range(sf, "documents", "doc_id")
-    strategy = "bucket" if rng is not None and rng[0] >= 0 else "auto"
+    small = _fits_one_task(
+        sf, "documents", "text", BRUTE_TASK_CAP, ONETASK_TEXT_BYTES_CAP,
+        key_below=("doc_id", 300),
+    )
     return dedup.editdist_near_duplicates(
         doc, "doc_id", "text", max_dist=40, bucket_width=50,
-        strategy=strategy,
+        strategy="bucket" if small else "prefix",
     )
 
 
@@ -1966,8 +1980,8 @@ def q66(spark, sf):
         n, rng = row.n, (row.lo, row.hi)
     split = (int(rng[0]) + int(rng[1]) + 1) // 2
     nh, b = dedup.banding_for_corpus(n)
-    if n <= dedup.BRUTE_TASK_CAP and _onetask_bytes_ok(
-        sf, "documents", "text", ONETASK_TEXT_BYTES_CAP
+    if _fits_one_task(
+        sf, "documents", "text", BRUTE_TASK_CAP, ONETASK_TEXT_BYTES_CAP
     ):
         # one-Arrow-task tier (same routing as q27): the flagged bucket
         # pass runs in-task over the whole small corpus — 2.8s → 1.0s
@@ -2039,12 +2053,10 @@ def q67(spark, sf):
     )
     corpus = emb.unionByName(perturbed)
     n = table_rowcount(sf, "embeddings")
-    if (
-        n is not None
-        and 2 * n <= dedup.BRUTE_TASK_CAP
-        and _onetask_bytes_ok(
-            sf, "embeddings", "embedding", ONETASK_VEC_BYTES_CAP // 2
-        )
+    # the corpus doubles (original + perturbed copy), as in q35
+    if _fits_one_task(
+        sf, "embeddings", "embedding",
+        BRUTE_TASK_CAP // 2, ONETASK_VEC_BYTES_CAP // 2,
     ):
         # one-Arrow-task tier (the q66 routing applied to embeddings):
         # the flagged bucket pass runs in-task over the whole small
@@ -2441,14 +2453,15 @@ def q74(spark, sf):
 
     doc = load_table(spark, sf, "documents")
     # vocabulary bytes <= total text bytes, so the footer byte cap
-    # bounds the broadcast build side; past the cap the join strategy
-    # stays the optimizer's (round 16, guide section 3.1: the static
-    # planner otherwise broadcasts the post-explode TOKEN STREAM -
-    # strictly larger than the distinct-term table)
+    # bounds the broadcast build side (no row bound: only bytes reach
+    # the driver); past the cap (or without a footer) the term join is
+    # a shuffled hash join — never a broadcast of the post-explode
+    # TOKEN STREAM, which the static planner would otherwise pick
+    # (guide section 3.1)
     return ranking.dsir_scores(
         doc, "doc_id", "text", F.col("lang") == "en",
-        broadcast_vocab=_onetask_bytes_ok(
-            sf, "documents", "text", ONETASK_TEXT_BYTES_CAP
+        broadcast_vocab=_fits_one_task(
+            sf, "documents", "text", None, ONETASK_TEXT_BYTES_CAP
         ),
     ).select(F.col("id").alias("doc_id"), "n_tokens", "dsir_score")
 
@@ -2573,13 +2586,8 @@ def q76(spark, sf):
     # one-task kernel applies when history rides along unflagged (the
     # identity incremental_dup_window_stats' docstring derives). The
     # REAL O(batch) stream plan runs above the cap, sf1-gated.
-    n_docs = table_rowcount(sf, "documents")
-    if (
-        n_docs is not None
-        and n_docs <= corpus.DUPWIN_TASK_CAP
-        and _onetask_bytes_ok(
-            sf, "documents", "text", ONETASK_TEXT_BYTES_CAP
-        )
+    if _fits_one_task(
+        sf, "documents", "text", DUPWIN_TASK_CAP, ONETASK_TEXT_BYTES_CAP
     ):
         from .operators.corpus import dup_window_spans_onetask
 
@@ -2883,8 +2891,9 @@ def q79(spark, sf):
     # plan pinned in tests/test_similarity.py; the distributed
     # train->encode->ADC->re-rank plan stays the at-scale path and is
     # gated by the sf1 replica (20k vectors, above this cap).
-    if n <= dedup.BRUTE_TASK_CAP // 2 and _onetask_bytes_ok(
-        sf, "embeddings", "embedding", ONETASK_VEC_BYTES_CAP
+    if _fits_one_task(
+        sf, "embeddings", "embedding",
+        BRUTE_TASK_CAP // 2, ONETASK_VEC_BYTES_CAP,
     ):
         return similarity.pq_ann_onetask(
             emb, "vec_id", "embedding", _query_vec(spark, sf),
@@ -3032,13 +3041,8 @@ def q80(spark, sf):
     # task (corpus.contamination_onetask — identity pytest-pinned);
     # the distributed broadcast/shuffle plan is the 100-TB path and
     # stays gated by the sf1 replica.
-    n_docs = table_rowcount(sf, "documents")
-    if (
-        n_docs is not None
-        and n_docs <= corpus.CONTAM_TASK_CAP
-        and _onetask_bytes_ok(
-            sf, "documents", "text", ONETASK_TEXT_BYTES_CAP
-        )
+    if _fits_one_task(
+        sf, "documents", "text", CONTAM_TASK_CAP, ONETASK_TEXT_BYTES_CAP
     ):
         flagged = doc.select(
             "doc_id", "text", (F.col("doc_id") % 10 == 0).alias("__ev")
@@ -3114,13 +3118,8 @@ def q81(spark, sf):
     end to end."""
     doc = load_table(spark, sf, "documents")
     # STRATEGY-routed small-corpus tier (round 15) — see q80
-    n_docs = table_rowcount(sf, "documents")
-    if (
-        n_docs is not None
-        and n_docs <= corpus.CONTAM_TASK_CAP
-        and _onetask_bytes_ok(
-            sf, "documents", "text", ONETASK_TEXT_BYTES_CAP
-        )
+    if _fits_one_task(
+        sf, "documents", "text", CONTAM_TASK_CAP, ONETASK_TEXT_BYTES_CAP
     ):
         flagged = doc.select(
             "doc_id", "text", (F.col("doc_id") % 10 == 0).alias("__ev")
@@ -3222,13 +3221,8 @@ def q82(spark, sf):
     # REAL O(batch) stream plan (contamination_against, the exact plan
     # EvalGramIndex.contamination_for runs) executes above the cap and
     # stays gated by the sf1 replica.
-    n_docs = table_rowcount(sf, "documents")
-    if (
-        n_docs is not None
-        and n_docs <= corpus.CONTAM_TASK_CAP
-        and _onetask_bytes_ok(
-            sf, "documents", "text", ONETASK_TEXT_BYTES_CAP
-        )
+    if _fits_one_task(
+        sf, "documents", "text", CONTAM_TASK_CAP, ONETASK_TEXT_BYTES_CAP
     ):
         flagged = ev.select(
             "doc_id", "text", F.lit(True).alias("__ev")
@@ -3311,8 +3305,8 @@ def q83(spark, sf):
         n = doc.count()
     nh, b = dedup.banding_for_corpus(n)
     survivors = doc.filter(F.col("doc_id") % 37 != 5)
-    if n <= dedup.BRUTE_TASK_CAP and _onetask_bytes_ok(
-        sf, "documents", "text", ONETASK_TEXT_BYTES_CAP
+    if _fits_one_task(
+        sf, "documents", "text", BRUTE_TASK_CAP, ONETASK_TEXT_BYTES_CAP
     ):
         return dedup.minhash_pairs_onetask(
             survivors, "doc_id", "text",

@@ -640,19 +640,6 @@ def _token_split(text_col: str):
     )
 
 
-# Small-corpus one-task tier row caps, calibrated at THREE measured
-# points per family (round 16: sf0.1=5k, 2x=10k, 3x=15k docs of the
-# gate corpus — the round-15 single 20k constant was two-point
-# calibrated and overshot for the contamination kernels):
-# - contamination: one-task wins at 5k (r15: 1.00→0.43s), loses at 10k
-#   (ngram 1.04 vs 0.92s, skipgram 3.67 vs 2.31s distributed) → cap 8k.
-# - dup-window spans: one-task still wins at 15k (1.99 vs 2.53s) and
-#   the r15 sf1 point (50k) is distributed-faster → cap stays 20k.
-#   Only q76 routes here; q73 runs its distributed plan at every
-#   scale (the one-task kernel did not beat it at sf0.1).
-CONTAM_TASK_CAP = 8_000
-DUPWIN_TASK_CAP = 20_000
-
 # Train-side probe chunk for contamination_onetask, in WINDOWS: bounds
 # the per-chunk variant matrix at 2^18 × n_var uint64 (~16 MB at n=8)
 # plus same-order sliding temps, instead of a corpus-sized matrix
@@ -674,9 +661,9 @@ def contamination_onetask(
 ) -> DataFrame:
     """The ENTIRE contamination check — eval key-set build + train
     window probe — in ONE Arrow task, for corpora that fit one worker
-    (callers bound the input by ``CONTAM_TASK_CAP`` from parquet
-    footers; the q27/q66 small-corpus tier rule applied to the
-    contamination family).
+    (the driver bounds the input by ``CONTAM_TASK_CAP`` from parquet
+    footers in ``driver_queries._fits_one_task``; the q27/q66
+    small-corpus tier rule applied to the contamination family).
 
     Why it exists: below ~20k docs the distributed plan is five AQE
     stages (spread exchange, eval distinct, broadcast build, window
@@ -1251,8 +1238,8 @@ def dup_window_spans_onetask(
     window_n: int = 8,
 ) -> DataFrame:
     """The duplicated-span audit in ONE Arrow task, for corpora under
-    ``CONTAM_TASK_CAP`` (the q27/q66/q80 small-corpus tier applied to
-    q73/q76). *docs* carries history AND batch rows with
+    ``driver_queries.DUPWIN_TASK_CAP`` (the q27/q66/q80 small-corpus
+    tier applied to q76). *docs* carries history AND batch rows with
     *batch_flag_col* true on the scored (batch) side; a batch window is
     flagged iff its hash count over history + batch exceeds one —
     with every row flagged batch this is exactly

@@ -755,9 +755,9 @@ def minhash_pairs_onetask(
     new_flag_col: str | None = None,
 ) -> DataFrame:
     """The ENTIRE MinHash pipeline — sign, band, bucket, exact-verify —
-    in ONE Arrow task, for corpora that fit one worker (callers bound
-    the input by ``BRUTE_TASK_CAP`` from parquet footers; same tier
-    rule as ``jaccard_all_pairs``'s brute path).
+    in ONE Arrow task, for corpora that fit one worker (the driver
+    bounds the input from parquet footers — ``BRUTE_TASK_CAP`` in
+    ``driver_queries._fits_one_task``).
 
     Why it exists: below ~20k docs the distributed pipeline is pure
     stage-scheduling floor — 11 AQE jobs at ~0.2s each against ~0.5s of
@@ -1162,10 +1162,9 @@ def _jaccard_all_pairs_pandas(
 ) -> DataFrame:
     """All-pairs Jaccard in ONE Arrow task: coalesce(1) → shingle sets →
     inverted shingle index → pair intersection counters. Correct only
-    because the callers bound the corpus (brute tier ≤ ``brute_below``
-    docs) — the whole input must fit one worker. 0.37s vs 1.49s for the
-    six-stage JVM plan on the 500-doc slice (the cost there is stage
-    scheduling, not compute).
+    because the callers bound the corpus — the whole input must fit one
+    worker. 0.37s vs 1.49s for the six-stage JVM plan on the 500-doc
+    slice (the cost there is stage scheduling, not compute).
 
     Hash parity detail: Spark's ``round(x, 4)`` rounds HALF_UP on the
     double's shortest decimal representation (BigDecimal.valueOf) —
@@ -1222,35 +1221,28 @@ def _jaccard_all_pairs_pandas(
     return df.select(id_col, text_col).coalesce(1).mapInPandas(_all, schema)
 
 
-# documents above which the single-task brute plan is refused by
-# "auto": one Arrow worker must hold every shingle set + pair counters
-BRUTE_TASK_CAP = 20_000
-
 def jaccard_all_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
     shingle_n: int = 3,
     threshold: float = 0.1,
-    strategy: str = "auto",
+    strategy: str = "expr",
 ) -> DataFrame:
     """Exact all-pairs n-gram Jaccard over a SMALL corpus.
 
-    This is the brute tier: callers bound the input (``brute_below``
-    docs in ``jaccard_prefix_join``; sliced entries elsewhere) — the
+    This is the brute tier: callers bound the input (the sliced q40
+    entry, via ``jaccard_prefix_join(strategy="brute")``) — the
     corpus-scale exact join is ``jaccard_prefix_join``'s prefix plan,
     and LSH verification is ``verify_jaccard_pairs``. Output:
     (id_a, id_b, jaccard double rounded to 4) with id_a < id_b.
 
-    ``strategy``: ``"pandas"`` = one Arrow task with an inverted
-    shingle index (``_jaccard_all_pairs_pandas``) — at the scales this
-    operator is for, the six-stage JVM plan is pure scheduling floor
-    (1.49s vs 0.37s on the 500-doc slice); ``"expr"`` = the
-    distributed shingle self-join below, for inputs near the brute
-    cutoff on deployments without Python workers; ``"auto"`` (default)
-    limit-probes the corpus and refuses the single-task plan above
-    ``BRUTE_TASK_CAP`` docs (falls back to ``"expr"``) — bounded
-    internal callers pass ``"pandas"`` to skip the probe.
+    ``strategy``: ``"expr"`` (default) = the distributed shingle
+    self-join below, correct at any size; ``"pandas"`` = one Arrow
+    task with an inverted shingle index (``_jaccard_all_pairs_pandas``)
+    for inputs the caller has proven fit one worker — at those scales
+    the six-stage JVM plan is pure scheduling floor (1.49s vs 0.37s on
+    the 500-doc slice).
 
     Expr shape: one tokenization, one id-shuffle — shingles explode
     into groupBy(id).collect_set (set semantics AND per-doc size in one
@@ -1269,17 +1261,8 @@ def jaccard_all_pairs(
     the PYTHON path it is: one task, no stages, compute measured in
     tens of milliseconds.
     """
-    if strategy not in ("auto", "pandas", "expr"):
+    if strategy not in ("pandas", "expr"):
         raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy == "auto":
-        # the single-task plan is only safe when the corpus fits one
-        # worker; bounded callers (jaccard_prefix_join's brute tier)
-        # pass "pandas" having already counted — a direct public call
-        # pays one limit-probe (scan short-circuits at the cap) and
-        # degrades to the distributed plan instead of serializing an
-        # unbounded corpus through coalesce(1)
-        small = df.limit(BRUTE_TASK_CAP + 1).count() <= BRUTE_TASK_CAP
-        strategy = "pandas" if small else "expr"
     if strategy == "pandas":
         return _jaccard_all_pairs_pandas(
             df, id_col, text_col, shingle_n, threshold
@@ -1310,19 +1293,18 @@ def jaccard_prefix_join(
     text_col: str,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    strategy: str = "auto",
-    brute_below: int = 2000,
+    strategy: str = "prefix",
 ) -> DataFrame:
     """EXACT Jaccard similarity self-join via prefix filtering — the
     scale-safe replacement for a corpus-wide ``jaccard_all_pairs``.
 
-    ``strategy``: ``"prefix"`` forces the filtered plan, ``"brute"``
-    delegates to ``jaccard_all_pairs``, ``"auto"`` (default) counts the
-    input and picks brute below *brute_below* documents — the same
-    cost-based reasoning Spark applies choosing broadcast vs shuffle
-    joins: the prefix plan's extra stages only pay for themselves once
-    the quadratic candidate space dwarfs them. Output is identical
-    either way (the filter is provably lossless).
+    ``strategy``: ``"prefix"`` (default) = the filtered plan, correct
+    at any size; ``"brute"`` = ``jaccard_all_pairs``' one-Arrow-task
+    kernel, for inputs the caller has proven fit one worker (the q40
+    slice, routed from parquet footers): the prefix plan's extra
+    stages only pay for themselves once the quadratic candidate space
+    dwarfs them. Output is identical either way (the filter is
+    provably lossless).
 
     Prefix-filter principle (Bayardo et al. "Scaling Up All Pairs
     Similarity Search"; PPJoin): order every document's shingles by
@@ -1339,14 +1321,9 @@ def jaccard_prefix_join(
     """
     from pyspark.sql import Window as W
 
-    if strategy == "auto":
-        # limit-count probe: reads at most brute_below rows (LocalLimit
-        # short-circuits the scan) — same decision as a full count at a
-        # fraction of the probe job's cost
-        strategy = "brute" if df.limit(brute_below).count() < brute_below else "prefix"
+    if strategy not in ("prefix", "brute"):
+        raise ValueError(f"unknown strategy {strategy!r}")
     if strategy == "brute":
-        # size already probed above (or asserted by the caller forcing
-        # "brute") — pass "pandas" so the brute tier doesn't re-probe
         return jaccard_all_pairs(
             df, id_col, text_col, shingle_n, threshold, strategy="pandas"
         )
@@ -1486,9 +1463,9 @@ def _editdist_bucket_candidates(
     refinement inside matched buckets is exact
     (|len(a) − len(b)| > max_dist ⇒ dist > max_dist).
 
-    ``small_bounded=True`` (callers whose input is bounded, e.g. the
-    bucket strategy behind its ≤``brute_below`` router) broadcasts the
-    right side and round-robin-spreads the left: the shuffle join hung
+    ``small_bounded=True`` (the bucket strategy, whose callers prove
+    the input small in rows AND bytes) broadcasts the right side and
+    round-robin-spreads the left: the shuffle join hung
     every candidate's thresholded levenshtein on ~10 length-bucket
     keys (≤10 tasks no matter the core count), while the broadcast
     form verifies across the full executor pool in ONE stage — 0.573s
@@ -1711,22 +1688,22 @@ def editdist_near_duplicates(
     text_col: str,
     max_dist: int = 40,
     bucket_width: int = 50,
-    strategy: str = "auto",
+    strategy: str = "prefix",
     qgram: int = 4,
-    brute_below: int = 2000,
 ) -> DataFrame:
     """Edit-distance near-dup pairs, candidate-bounded by content.
 
-    ``strategy``: ``"prefix"`` (the scale path) generates candidates
-    with the exact q-gram count/prefix filter (``editdist_candidates``)
-    so candidate volume tracks content similarity — a corpus whose
+    ``strategy``: ``"prefix"`` (default, the scale path) generates
+    candidates with the exact q-gram count/prefix filter
+    (``editdist_candidates``) so candidate volume tracks content
+    similarity — a corpus whose
     documents all share one length lands each doc's rarest grams in
     near-unique buckets instead of one quadratic blob. ``"bucket"``
     keeps plain adjacent-length-bucket blocking: exact and cheapest
     when the corpus is small enough that the prefix plan's extra
-    window/shuffle stages cost more than the quadratic they avoid.
-    ``"auto"`` (default) probes with a short-circuiting limit-count and
-    picks bucket below *brute_below* docs — the q40 cost routing.
+    window/shuffle stages cost more than the quadratic they avoid. It
+    broadcasts full texts, so callers pass it only for inputs proven
+    small in rows and bytes (q63 routes it from parquet footers).
     Output is identical under every strategy (both candidate
     generators are provably lossless; verification is exact).
 
@@ -1737,10 +1714,6 @@ def editdist_near_duplicates(
 
     Returns (id_a, id_b, dist) with id_a < id_b, dist <= max_dist.
     """
-    if strategy == "auto":
-        strategy = (
-            "bucket" if df.limit(brute_below).count() < brute_below else "prefix"
-        )
     if strategy == "prefix":
         matched = editdist_candidates(df, id_col, text_col, max_dist, qgram)
     elif strategy == "bucket":
@@ -1757,8 +1730,8 @@ def editdist_near_duplicates(
             F.length(text_col).alias("len"),
             F.floor(F.length(text_col) / bucket_width).alias("bkt"),
         )
-        # the bucket strategy is only ever routed below brute_below
-        # docs, so the broadcast side is bounded by construction
+        # callers pick the bucket strategy only for inputs proven
+        # small, so the broadcast side is bounded
         matched = _editdist_bucket_candidates(base, max_dist, small_bounded=True)
     else:
         raise ValueError(f"unknown strategy {strategy!r}")

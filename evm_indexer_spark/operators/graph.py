@@ -214,8 +214,8 @@ def _dedup_clusters_onetask(
     worker: inverted-shingle-index exact Jaccard pairs (the same pair
     law as ``dedup.jaccard_all_pairs``), union-find closure, and
     singleton labeling, all in-task — the distributed form pays ~8 AQE
-    jobs of scheduling floor on a 500-doc input (probe, union-find
-    probe, anti-join, collect) against milliseconds of compute.
+    jobs of scheduling floor on a 500-doc input (union-find probe,
+    anti-join, collect) against milliseconds of compute.
     Callers bound the input (footer row counts / structural filters);
     the corpus-scale path is ``dedup_clusters``'s distributed plan."""
     import re
@@ -288,8 +288,7 @@ def dedup_clusters(
     text_col: str,
     threshold: float = 0.5,
     shingle_n: int = 3,
-    strategy: str = "auto",
-    brute_below: int = 2000,
+    strategy: str = "distributed",
 ) -> DataFrame:
     """Group near-duplicate documents: exact prefix-filtered Jaccard
     pairs (``dedup.jaccard_prefix_join``) → transitive closure → one
@@ -310,27 +309,23 @@ def dedup_clusters(
     checkpointed for the result's lifetime — long-lived services should
     ``release_cached(result)`` once done with it.
 
-    ``strategy``: ``"onetask"`` = the whole pipeline in one Arrow task
-    (``_dedup_clusters_onetask``) — for inputs the caller has already
-    bounded (footer row counts / structural filters); ``"distributed"``
-    forces the full plan; ``"auto"`` (default) limit-probes the corpus
-    once and picks onetask below *brute_below* docs — one probe job
-    against the ~8 scheduling-floor jobs the distributed shape pays on
-    tiny inputs (1.16s → 0.35s warm for the 500-doc q60 slice at sf1,
-    r7 medians)."""
+    ``strategy``: ``"distributed"`` (default) = the full plan, correct
+    at any size; ``"onetask"`` = the whole pipeline in one Arrow task
+    (``_dedup_clusters_onetask``) for inputs the caller has proven fit
+    one worker — it skips the ~8 scheduling-floor jobs the distributed
+    shape pays on tiny inputs (1.16s → 0.35s warm for the 500-doc q60
+    slice at sf1, r7 medians). q60 routes it from parquet footers."""
     from . import dedup
 
-    if strategy not in ("auto", "onetask", "distributed"):
+    if strategy not in ("onetask", "distributed"):
         raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy == "auto":
-        small = doc.limit(brute_below + 1).count() <= brute_below
-        strategy = "onetask" if small else "distributed"
     if strategy == "onetask":
         return _dedup_clusters_onetask(
             doc, id_col, text_col, threshold, shingle_n
         )
     pairs = dedup.jaccard_prefix_join(
-        doc, id_col, text_col, shingle_n=shingle_n, threshold=threshold
+        doc, id_col, text_col, shingle_n=shingle_n, threshold=threshold,
+        strategy="prefix",
     ).select("id_a", "id_b")
     # single consumer: the closure materializes eagerly (driver
     # union-find below the threshold, localCheckpoint rounds above), and

@@ -177,7 +177,8 @@ def dsir_scores(
     at sf0.1 (0.835s → 0.542s noop median with the hint). Callers
     gate the hint on corpus byte bounds (vocabulary ≤ total text
     bytes, so a footer byte cap on the text column bounds the
-    broadcast); unhinted, strategy stays the optimizer's."""
+    broadcast); ``False`` pins a shuffled hash join built on the
+    vocab instead, so the token stream is never broadcast."""
     tok = df.select(
         F.col(id_col).alias("id"),
         target.cast("int").alias("tgt"),
@@ -193,7 +194,11 @@ def dsir_scores(
         F.count("*").cast("double").alias("v"),
     )
     return (
-        tok.join(F.broadcast(vocab) if broadcast_vocab else vocab, "term")
+        tok.join(
+            F.broadcast(vocab) if broadcast_vocab
+            else vocab.hint("shuffle_hash"),
+            "term",
+        )
         .crossJoin(F.broadcast(totals))
         .groupBy("id")
         .agg(

@@ -304,8 +304,9 @@ def embedding_pairs_onetask(
 ) -> DataFrame:
     """The ENTIRE hyperplane-LSH near-dup pipeline — bucket, collide,
     exact-verify — in ONE Arrow task, for corpora that fit one worker
-    (callers bound the input by ``dedup.BRUTE_TASK_CAP`` from parquet
-    footers — the q27/q66/q83 small-corpus tier applied to embeddings).
+    (the driver bounds the input by ``BRUTE_TASK_CAP`` from parquet
+    footers in ``driver_queries._fits_one_task`` — the q27/q66/q83
+    small-corpus tier applied to embeddings).
 
     Why it exists (round 15): below the cap the distributed pipeline is
     stage floors, not compute — q35's plan ships the vectors across the

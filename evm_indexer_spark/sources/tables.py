@@ -218,8 +218,8 @@ def table_column_bytes(sf_dir: str, name: str, col: str) -> int | None:
     footers record leaves as ``col.list.element`` paths, so a bare
     ``col`` lookup matches any leaf under the column's path prefix
     (round 16: the one-task byte gates need ``embeddings.embedding``).
-    Returns None for non-local/footerless sources — callers keep the
-    live probe."""
+    Returns None for non-local/footerless sources — callers then take
+    the distributed plan."""
     key = (sf_dir, name, col, fixture_stamp(sf_dir, name))
     if key in _COLBYTES_CACHE:
         return _COLBYTES_CACHE[key]

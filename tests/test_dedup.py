@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from evm_indexer_spark.operators import dedup
+from evm_indexer_spark.operators import dedup, graph
 
 WORDS = [f"w{i}" for i in range(400)]
 
@@ -322,7 +322,9 @@ def test_minhash_no_corpus_wide_shingle_sets(spark):
 
 def test_editdist_straddling_buckets_found(spark):
     """Pairs whose lengths straddle a bucket boundary (len 49 vs 51,
-    dist 2) must be found — same-bucket-only blocking missed them."""
+    dist 2) must be found — same-bucket-only blocking missed them.
+    Pinned on both plans: the bucket plan with q63's width, and the
+    prefix plan, whose short-doc fallback picks its own width."""
     docs = [
         (1, "a" * 49),
         (2, "a" * 51),          # adjacent bucket (0 vs 1), dist 2
@@ -331,18 +333,21 @@ def test_editdist_straddling_buckets_found(spark):
         (5, "z" * 300),         # far from everything
     ]
     df = spark.createDataFrame(docs, "id long, text string")
-    out = {(r["id_a"], r["id_b"]): r["dist"] for r in
-           dedup.editdist_near_duplicates(df, "id", "text",
-                                          max_dist=40, bucket_width=50).collect()}
-    assert out[(1, 2)] == 2
-    assert out[(3, 4)] == 2
-    assert all(5 not in p for p in out)
-    # each pair exactly once (the exploded neighbor keys must not dupe)
-    assert len(out) == 2
+    for strategy in ("bucket", "prefix"):
+        out = {(r["id_a"], r["id_b"]): r["dist"] for r in
+               dedup.editdist_near_duplicates(
+                   df, "id", "text", max_dist=40, bucket_width=50,
+                   strategy=strategy).collect()}
+        assert out[(1, 2)] == 2, strategy
+        assert out[(3, 4)] == 2, strategy
+        assert all(5 not in p for p in out), strategy
+        # each pair exactly once (the exploded neighbor keys must not dupe)
+        assert len(out) == 2, strategy
 
     with pytest.raises(ValueError):
         dedup.editdist_near_duplicates(df, "id", "text",
-                                       max_dist=50, bucket_width=50)
+                                       max_dist=50, bucket_width=50,
+                                       strategy="bucket")
     with pytest.raises(ValueError):
         dedup.editdist_near_duplicates(df, "id", "text", strategy="nope")
     # the prefix plan never uses bucket_width (its short fallback
@@ -483,17 +488,43 @@ def test_bucket_pairs_group_excludes_self_pairs(spark):
         assert got == [(1, 2)], src
 
 
-def test_jaccard_auto_refuses_single_task_above_cap(spark, corpus, monkeypatch):
-    # "auto" must degrade to the distributed plan above the brute cap
-    # instead of serializing the corpus through coalesce(1)
-    monkeypatch.setattr(dedup, "BRUTE_TASK_CAP", 2)
+def test_jaccard_default_is_distributed_plan(spark, corpus):
+    # the default never serializes the corpus through coalesce(1): it
+    # is the distributed self-join, with the one-task kernel's rows
     out = dedup.jaccard_all_pairs(corpus, "doc_id", "text", threshold=0.5)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "MapInPandas" not in plan
     expected = dedup.jaccard_all_pairs(
-        corpus, "doc_id", "text", threshold=0.5, strategy="expr"
+        corpus, "doc_id", "text", threshold=0.5, strategy="pandas"
     )
     assert sorted(map(tuple, out.collect())) == sorted(
         map(tuple, expected.collect())
     )
+
+
+def test_default_plans_launch_no_job(spark, corpus):
+    """The pair operators pick their plan without a probe: building
+    each with default arguments schedules no Spark job, and none of
+    them (nor ``graph.dedup_clusters``) accepts the old probing
+    "auto" strategy."""
+    sc = spark.sparkContext
+    group = "pair-operator-plan-build"
+    sc.setJobGroup(group, group, False)
+    try:
+        dedup.jaccard_all_pairs(corpus, "doc_id", "text")
+        dedup.jaccard_prefix_join(corpus, "doc_id", "text")
+        dedup.editdist_near_duplicates(corpus, "doc_id", "text")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    for op in (
+        dedup.jaccard_all_pairs,
+        dedup.jaccard_prefix_join,
+        dedup.editdist_near_duplicates,
+        graph.dedup_clusters,
+    ):
+        with pytest.raises(ValueError):
+            op(corpus, "doc_id", "text", strategy="auto")
 
 
 def test_minhash_onetask_matches_distributed(spark, corpus):

@@ -249,59 +249,158 @@ class TestOnetaskByteGates:
         return str(tmp_path)
 
     def test_helper_rejects_fat_and_footerless(self, tmp_path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
         from evm_indexer_spark.driver_queries import (
+            BRUTE_TASK_CAP,
             ONETASK_TEXT_BYTES_CAP,
-            _onetask_bytes_ok,
+            _fits_one_task,
         )
 
+        caps = (BRUTE_TASK_CAP, ONETASK_TEXT_BYTES_CAP)
         d = self._fat_docs_dir(tmp_path)
         assert table_rowcount(d, "documents") == 20
         tb = table_column_bytes(d, "documents", "text")
         assert tb is not None and tb > ONETASK_TEXT_BYTES_CAP
-        assert not _onetask_bytes_ok(
-            d, "documents", "text", ONETASK_TEXT_BYTES_CAP
+        assert not _fits_one_task(d, "documents", "text", *caps)
+        assert not _fits_one_task(
+            d, "documents", "text", None, ONETASK_TEXT_BYTES_CAP
         )
         # footerless/missing source: distributed (never one task)
-        assert not _onetask_bytes_ok(
-            d, "no_such_table", "text", ONETASK_TEXT_BYTES_CAP
-        )
+        assert not _fits_one_task(d, "no_such_table", "text", *caps)
         # the gate fixtures themselves stay comfortably inside the cap
-        assert _onetask_bytes_ok(
+        assert _fits_one_task(
             "/root/testdata/sf0.1", "documents", "text",
-            ONETASK_TEXT_BYTES_CAP,
+            *caps,
         )
+        # rows are capped too, unless a distinct non-negative key bounds
+        # the slice the entry reads; a negative footer min voids that
+        for lo, fits_slice in ((0, True), (-5, False)):
+            small = tmp_path / f"ids{lo}"
+            small.mkdir()
+            pq.write_table(
+                pa.table({"doc_id": pa.array(range(lo, lo + 10), pa.int64()),
+                          "text": pa.array(["short text"] * 10)}),
+                str(small / "documents.parquet"),
+            )
+            cap5 = (str(small), "documents", "text", 5, ONETASK_TEXT_BYTES_CAP)
+            assert _fits_one_task(str(small), "documents", "text", *caps)
+            assert not _fits_one_task(*cap5)
+            # no row cap (q74's broadcast gate): bytes alone decide
+            assert _fits_one_task(
+                str(small), "documents", "text", None, ONETASK_TEXT_BYTES_CAP
+            )
+            assert _fits_one_task(
+                *cap5, key_below=("doc_id", 5)
+            ) is fits_slice
+
+    @staticmethod
+    def _plan(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
 
     def test_fat_corpus_routes_distributed(self, spark, tmp_path, monkeypatch):
         # rowcount-small (20 docs) but bytes-huge (~12 MB of text):
-        # the q76/q27/q40/q60 plans must be the distributed ones, not
-        # the Coalesce(1) + single MapInPandas kernel
+        # every routed entry must build its distributed plan, not the
+        # Coalesce(1) + single MapInPandas kernel
         from evm_indexer_spark import driver_queries
         from evm_indexer_spark.operators import dedup, graph
 
         d = self._fat_docs_dir(tmp_path)
         qs = driver_queries.queries()
-        plan76 = qs["q76_incremental_dup_windows"](
-            spark, d
-        )._jdf.queryExecution().optimizedPlan().toString()
+        plan76 = self._plan(qs["q76_incremental_dup_windows"](spark, d))
         # the O(batch) stream plan joins the history counters; the
         # one-task tier is one MapInPandas with no join
         assert "Join" in plan76
         assert "MapInPandas" not in plan76
-        plan27 = qs["q27_dedup_minhash_lsh"](
+        # the one-task MinHash and contamination kernels are a single
+        # map over a 1-coalesce; the distributed plans carry the
+        # banding / eval-gram join machinery
+        for name in (
+            "q27_dedup_minhash_lsh",
+            "q66_incremental_dedup",
+            "q80_ngram_contamination",
+            "q81_skipgram_contamination",
+            "q82_contamination_on_arrival",
+            "q83_retraction_reorg",
+        ):
+            assert "Join" in self._plan(qs[name](spark, d)), name
+        # q74: above the byte cap the vocab may not be broadcast, and
+        # the token stream must not become the broadcast side instead
+        plan74 = qs["q74_dsir_scores"](
             spark, d
-        )._jdf.queryExecution().optimizedPlan().toString()
-        # the one-task MinHash kernel is a single map over a 1-coalesce;
-        # the distributed plan carries the banding join machinery
-        assert "Join" in plan27
-        # q40/q60: the strategy each id<500 slice hands its operator
-        # (q60's distributed closure runs eagerly, so capture it)
+        )._jdf.queryExecution().sparkPlan().toString()
+        assert "BroadcastHashJoin" not in plan74
+        assert "ShuffledHashJoin" in plan74
+        # q40/q60/q63: the strategy each id slice hands its operator
+        # (q60's distributed closure runs eagerly, so capture it; q63's
+        # "prefix" is the tier that does not broadcast full texts)
         seen = []
 
         def capture(*a, strategy, **k):
             seen.append(strategy)
 
         monkeypatch.setattr(dedup, "jaccard_prefix_join", capture)
+        monkeypatch.setattr(dedup, "editdist_near_duplicates", capture)
         monkeypatch.setattr(graph, "dedup_clusters", capture)
         qs["q40_jaccard_all_pairs"](spark, d)
         qs["q60_dedup_clusters"](spark, d)
-        assert seen == ["prefix", "distributed"]
+        qs["q63_editdist_near_dup"](spark, d)
+        assert seen == ["prefix", "distributed", "prefix"]
+
+    def test_fat_corpus_q60_runs_no_one_task_kernel(
+        self, spark, tmp_path, monkeypatch
+    ):
+        # the whole q60 pipeline, not just its top-level strategy: the
+        # distributed closure's pair stage must not fall back to the
+        # one-task Jaccard kernel either
+        from evm_indexer_spark import driver_queries
+        from evm_indexer_spark.operators import dedup, graph
+
+        calls = []
+
+        def spy(mod, name):
+            real = getattr(mod, name)
+
+            def wrapper(*a, **k):
+                calls.append(name)
+                return real(*a, **k)
+
+            monkeypatch.setattr(mod, name, wrapper)
+
+        spy(dedup, "_jaccard_all_pairs_pandas")
+        spy(graph, "_dedup_clusters_onetask")
+        d = self._fat_docs_dir(tmp_path)
+        out = driver_queries.queries()["q60_dedup_clusters"](spark, d)
+        assert out.count() == 20
+        assert calls == []
+
+
+def test_no_probe_job_or_brute_below_in_package():
+    """Routing is the driver's footer check: no operator may launch a
+    ``.limit(k).count()`` probe job or take a ``brute_below`` knob."""
+    import ast
+    import pathlib
+
+    import evm_indexer_spark
+
+    pkg = pathlib.Path(evm_indexer_spark.__file__).parent
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            probe = (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "count"
+                and isinstance(node.func.value, ast.Call)
+                and isinstance(node.func.value.func, ast.Attribute)
+                and node.func.value.func.attr == "limit"
+            )
+            name = (
+                getattr(node, "id", None)
+                or getattr(node, "arg", None)
+                or getattr(node, "attr", None)
+            )
+            if probe or name == "brute_below":
+                hits.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert hits == []
