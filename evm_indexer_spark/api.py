@@ -22,7 +22,7 @@ from __future__ import annotations
 import re
 from typing import Any
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import Row
 
 from .config import DEFAULT_CONFIG, EngineConfig
 from .errors import NotFoundError, RangeTooWideError, ValidationError
@@ -122,9 +122,14 @@ def _hex0x(b: bytes | bytearray | None) -> str:
     return "0x" + bytes(b).hex()
 
 
-def block_to_dict(row: Row) -> dict[str, Any]:
+def fields(row: Row | dict) -> dict[str, Any]:
+    """A Spark ``Row``, or a local read's row dict, as a dict."""
+    return row if isinstance(row, dict) else row.asDict()
+
+
+def block_to_dict(row: Row | dict) -> dict[str, Any]:
     """Block.MarshalJSON field order/format (block.go:36-60)."""
-    d = row.asDict()
+    d = fields(row)
     return {
         "hash": d["hash"],
         "number": d["number"],
@@ -144,11 +149,11 @@ def block_to_dict(row: Row) -> dict[str, Any]:
     }
 
 
-def tx_to_dict(row: Row) -> dict[str, Any]:
+def tx_to_dict(row: Row | dict) -> dict[str, Any]:
     """Transaction.MarshalJSON (tx.go:34-53): contract-creation txs carry
     `contract` instead of `to`; narrow projections (P2) omit value/data —
     encoded as empty like the reference's zero values."""
-    d = row.asDict()
+    d = fields(row)
     out: dict[str, Any] = {"hash": d["hash"], "from": d["from"]}
     contract = d.get("contract") or ""
     if contract.startswith("0x"):
@@ -173,10 +178,10 @@ def tx_to_dict(row: Row) -> dict[str, Any]:
 _ZERO32 = "0" * 64
 
 
-def event_to_dict(row: Row) -> dict[str, Any]:
+def event_to_dict(row: Row | dict) -> dict[str, Any]:
     """Event.MarshalJSON (event.go:30-45): data rendered empty when
     zero-length OR exactly 32 zero bytes."""
-    d = row.asDict()
+    d = fields(row)
     h = bytes(d["data"] or b"").hex()
     return {
         "origin": d["origin"],
@@ -191,15 +196,13 @@ def event_to_dict(row: Row) -> dict[str, Any]:
 # -- façade ------------------------------------------------------------------
 
 
-def _one(df: DataFrame, shape) -> dict[str, Any]:
-    rows = df.limit(1).collect()
+def _one(rows: list, shape) -> dict[str, Any]:
     if not rows:
         raise NotFoundError("Not found")
     return shape(rows[0])
 
 
-def _many(df: DataFrame, shape, wrapper: str) -> dict[str, Any]:
-    rows = df.collect()
+def _many(rows: list, shape, wrapper: str) -> dict[str, Any]:
     if not rows:
         raise NotFoundError("Not found")
     return {wrapper: [shape(r) for r in rows]}
@@ -252,27 +255,31 @@ class RestFacade:
         if is_hash(hash_) and tx == "yes":
             if self.hash_index is not None:
                 return _many(
-                    self.hash_index.lookup_block_transactions(hash_),
+                    self.hash_index.lookup_block_transactions(hash_).collect(),
                     tx_to_dict,
                     "transactions",
                 )
             return _many(
-                self.q.get_transactions_by_block_hash(hash_), tx_to_dict, "transactions"
+                self.q.rows("get_transactions_by_block_hash", hash_),
+                tx_to_dict,
+                "transactions",
             )
         if number and tx == "yes":
             n = long_or_not_found(parse_number(number, "Bad block number"))
             return _many(
-                self.q.get_transactions_by_block_number(n), tx_to_dict, "transactions"
+                self.q.rows("get_transactions_by_block_number", n),
+                tx_to_dict,
+                "transactions",
             )
         if is_hash(hash_):
             if self.hash_index is not None:
                 return _one(
-                    self.hash_index.lookup_block(hash_).limit(1), block_to_dict
+                    self.hash_index.lookup_block(hash_).limit(1).collect(), block_to_dict
                 )
-            return _one(self.q.get_block_by_hash(hash_), block_to_dict)
+            return _one(self.q.rows("get_block_by_hash", hash_), block_to_dict)
         if number:
             n = long_or_not_found(parse_number(number, "Bad block number"))
-            return _one(self.q.get_block_by_number(n), block_to_dict)
+            return _one(self.q.rows("get_block_by_number", n), block_to_dict)
 
         from_block, to_block = params.get("fromBlock", ""), params.get("toBlock", "")
         if from_block and to_block:
@@ -280,7 +287,8 @@ class RestFacade:
                 f, t = range_checker(from_block, to_block, self.config.block_range)
             except ValidationError:
                 raise ValidationError("Bad block number range") from None
-            return _many(self.q.get_blocks_by_number_range(f, t), block_to_dict, "blocks")
+            rows = self.q.rows("get_blocks_by_number_range", f, t)
+            return _many(rows, block_to_dict, "blocks")
 
         from_time, to_time = params.get("fromTime", ""), params.get("toTime", "")
         if from_time and to_time:
@@ -288,7 +296,8 @@ class RestFacade:
                 f, t = range_checker(from_time, to_time, self.config.time_range)
             except ValidationError:
                 raise ValidationError("Bad block time range") from None
-            return _many(self.q.get_blocks_by_time_range(f, t), block_to_dict, "blocks")
+            rows = self.q.rows("get_blocks_by_time_range", f, t)
+            return _many(rows, block_to_dict, "blocks")
 
         raise ValidationError("Bad query param(s)")
 
@@ -297,7 +306,7 @@ class RestFacade:
         g = params.get
         hash_ = g("hash", "")
         if is_hash(hash_):
-            return _one(self.q.get_transaction_by_hash(hash_), tx_to_dict)
+            return _one(self.q.rows("get_transaction_by_hash", hash_), tx_to_dict)
 
         from_block, to_block = g("fromBlock", ""), g("toBlock", "")
         from_time, to_time = g("fromTime", ""), g("toTime", "")
@@ -317,82 +326,60 @@ class RestFacade:
             except ValidationError:
                 raise ValidationError("Bad block time range") from None
 
+        def txs(name: str, *args) -> dict[str, Any]:
+            return _many(self.q.rows(name, *args), tx_to_dict, "transactions")
+
         if nonce and is_address(from_account):
             n = long_or_not_found(parse_number(nonce, "Bad account nonce"))
             return _one(
-                self.q.get_transaction_from_account_with_nonce(from_account, n),
+                self.q.rows("get_transaction_from_account_with_nonce", from_account, n),
                 tx_to_dict,
             )
         if from_block and to_block and is_address(deployer):
             f, t = blk_range()
-            return _many(
-                self.q.get_contract_creation_transactions_from_account_by_block_number_range(
-                    deployer, f, t
-                ),
-                tx_to_dict,
-                "transactions",
+            return txs(
+                "get_contract_creation_transactions_from_account_by_block_number_range",
+                deployer, f, t,
             )
         if from_time and to_time and is_address(deployer):
             f, t = time_range()
-            return _many(
-                self.q.get_contract_creation_transactions_from_account_by_block_time_range(
-                    deployer, f, t
-                ),
-                tx_to_dict,
-                "transactions",
+            return txs(
+                "get_contract_creation_transactions_from_account_by_block_time_range",
+                deployer, f, t,
             )
         if from_block and to_block and is_address(from_account) and is_address(to_account):
             f, t = blk_range()
-            return _many(
-                self.q.get_transactions_between_accounts_by_block_number_range(
-                    from_account, to_account, f, t
-                ),
-                tx_to_dict,
-                "transactions",
+            return txs(
+                "get_transactions_between_accounts_by_block_number_range",
+                from_account, to_account, f, t,
             )
         if from_time and to_time and is_address(from_account) and is_address(to_account):
             f, t = time_range()
-            return _many(
-                self.q.get_transactions_between_accounts_by_block_time_range(
-                    from_account, to_account, f, t
-                ),
-                tx_to_dict,
-                "transactions",
+            return txs(
+                "get_transactions_between_accounts_by_block_time_range",
+                from_account, to_account, f, t,
             )
         if from_block and to_block and is_address(from_account):
             f, t = blk_range()
-            return _many(
-                self.q.get_transactions_from_account_by_block_number_range(
-                    from_account, f, t
-                ),
-                tx_to_dict,
-                "transactions",
+            return txs(
+                "get_transactions_from_account_by_block_number_range",
+                from_account, f, t,
             )
         if from_time and to_time and is_address(from_account):
             f, t = time_range()
-            return _many(
-                self.q.get_transactions_from_account_by_block_time_range(
-                    from_account, f, t
-                ),
-                tx_to_dict,
-                "transactions",
+            return txs(
+                "get_transactions_from_account_by_block_time_range",
+                from_account, f, t,
             )
         if from_block and to_block and is_address(to_account):
             f, t = blk_range()
-            return _many(
-                self.q.get_transactions_to_account_by_block_number_range(
-                    to_account, f, t
-                ),
-                tx_to_dict,
-                "transactions",
+            return txs(
+                "get_transactions_to_account_by_block_number_range",
+                to_account, f, t,
             )
         if from_time and to_time and is_address(to_account):
             f, t = time_range()  # rest.go:462 validates the wrong params; fixed here
-            return _many(
-                self.q.get_transactions_to_account_by_block_time_range(to_account, f, t),
-                tx_to_dict,
-                "transactions",
-            )
+            return txs("get_transactions_to_account_by_block_time_range", to_account, f, t)
 
         raise ValidationError("Bad query param(s)")
 
@@ -404,33 +391,31 @@ class RestFacade:
         contract, count = g("contract", ""), g("count", "")
         topics = [g(f"topic{i}", "") for i in range(4)]
 
+        def events(name: str, *args) -> dict[str, Any]:
+            return _many(self.q.rows(name, *args), event_to_dict, "events")
+
         if log_index and is_hash(block_hash):
             i = long_or_not_found(parse_number(log_index, "Bad log index"))
             return _one(
-                self.q.get_event_by_block_hash_and_log_index(block_hash, i),
+                self.q.rows("get_event_by_block_hash_and_log_index", block_hash, i),
                 event_to_dict,
             )
         if log_index and block_number:
             n = long_or_not_found(parse_number(block_number, "Bad block number"))
             i = long_or_not_found(parse_number(log_index, "Bad log index"))
             return _one(
-                self.q.get_event_by_block_number_and_log_index(n, i), event_to_dict
+                self.q.rows("get_event_by_block_number_and_log_index", n, i),
+                event_to_dict,
             )
         if is_hash(block_hash):
-            return _many(self.q.get_events_by_block_hash(block_hash), event_to_dict, "events")
+            return events("get_events_by_block_hash", block_hash)
         if is_hash(tx_hash):
-            return _many(
-                self.q.get_events_by_transaction_hash(tx_hash), event_to_dict, "events"
-            )
+            return events("get_events_by_transaction_hash", tx_hash)
         if count and is_address(contract):
             c = parse_number(count, "Bad event count")
             if c > self.config.max_events_topk:
                 raise ValidationError("Too many events requested")
-            return _many(
-                self.q.get_last_x_events_from_contract(contract, c),
-                event_to_dict,
-                "events",
-            )
+            return events("get_last_x_events_from_contract", contract, c)
 
         from_block, to_block = g("fromBlock", ""), g("toBlock", "")
         from_time, to_time = g("fromTime", ""), g("toTime", "")
@@ -444,12 +429,9 @@ class RestFacade:
             tmap = create_event_topic_map(*topics)
             if not tmap:
                 raise ValidationError("Bad event topic signature(s)")
-            return _many(
-                self.q.get_events_from_contract_with_topics_by_block_number_range(
-                    contract, f, t, tmap
-                ),
-                event_to_dict,
-                "events",
+            return events(
+                "get_events_from_contract_with_topics_by_block_number_range",
+                contract, f, t, tmap,
             )
         if from_time and to_time and is_address(contract) and any_topic:
             try:
@@ -459,32 +441,21 @@ class RestFacade:
             tmap = create_event_topic_map(*topics)
             if not tmap:
                 raise ValidationError("Bad event topic signature(s)")
-            return _many(
-                self.q.get_events_from_contract_with_topics_by_block_time_range(
-                    contract, f, t, tmap
-                ),
-                event_to_dict,
-                "events",
+            return events(
+                "get_events_from_contract_with_topics_by_block_time_range",
+                contract, f, t, tmap,
             )
         if from_block and to_block and is_address(contract):
             try:
                 f, t = range_checker(from_block, to_block, self.config.block_range)
             except ValidationError:
                 raise ValidationError("Bad block number range") from None
-            return _many(
-                self.q.get_events_from_contract_by_block_number_range(contract, f, t),
-                event_to_dict,
-                "events",
-            )
+            return events("get_events_from_contract_by_block_number_range", contract, f, t)
         if from_time and to_time and is_address(contract):
             try:
                 f, t = range_checker(from_time, to_time, self.config.time_range)
             except ValidationError:
                 raise ValidationError("Bad block time range") from None
-            return _many(
-                self.q.get_events_from_contract_by_block_time_range(contract, f, t),
-                event_to_dict,
-                "events",
-            )
+            return events("get_events_from_contract_by_block_time_range", contract, f, t)
 
         raise ValidationError("Bad query param(s)")

@@ -15,9 +15,10 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import Row
 
 from .api import (
+    fields,
     fits_long,
     is_address,
     is_hash,
@@ -41,9 +42,9 @@ def _hex0x(b: bytes | bytearray | None) -> str:
     return "0x" + bytes(b).hex()
 
 
-def block_model(row: Row) -> dict[str, Any]:
+def block_model(row: Row | dict) -> dict[str, Any]:
     """getGraphQLCompatibleBlock, data.go:41-69 — numbers → strings."""
-    d = row.asDict()
+    d = fields(row)
     return {
         "hash": d["hash"],
         "number": str(d["number"]),
@@ -63,10 +64,10 @@ def block_model(row: Row) -> dict[str, Any]:
     }
 
 
-def tx_model(row: Row) -> dict[str, Any]:
+def tx_model(row: Row | dict) -> dict[str, Any]:
     """getGraphQLCompatibleTransaction, data.go:93-133 — unlike the REST
     encoder both ``to`` and ``contract`` are present, one of them empty."""
-    d = row.asDict()
+    d = fields(row)
     contract = d.get("contract") or ""
     creating = contract.startswith("0x")
     return {
@@ -88,9 +89,9 @@ def tx_model(row: Row) -> dict[str, Any]:
 _ZERO_WORD = "0" * 64
 
 
-def event_model(row: Row) -> dict[str, Any]:
+def event_model(row: Row | dict) -> dict[str, Any]:
     """getGraphQLCompatibleEvent, data.go:155-173."""
-    d = row.asDict()
+    d = fields(row)
     h = bytes(d["data"] or b"").hex()
     return {
         "origin": d["origin"],
@@ -102,22 +103,20 @@ def event_model(row: Row) -> dict[str, Any]:
     }
 
 
-def _first(df: DataFrame, shape) -> dict[str, Any]:
-    rows = df.limit(1).collect()
+def _first(rows: list, shape) -> dict[str, Any]:
     if not rows:
         raise NotFoundError("Found nothing")
     return shape(rows[0])
 
 
-def _all(df: DataFrame, shape) -> list[dict[str, Any]]:
-    rows = df.collect()
+def _all(rows: list, shape) -> list[dict[str, Any]]:
     if not rows:
         raise NotFoundError("Found nothing")
     return [shape(r) for r in rows]
 
 
-def _scalar(df: DataFrame) -> int:
-    return int(df.collect()[0][0])
+def _scalar(rows: list) -> int:
+    return int(fields(rows[0])["count"])
 
 
 class GraphQLResolvers:
@@ -158,33 +157,33 @@ class GraphQLResolvers:
 
     def block_by_hash(self, hash: str):
         self._hash(hash, "Bad Block Hash")
-        return _first(self.q.get_block_by_hash(hash), block_model)
+        return _first(self.q.rows("get_block_by_hash", hash), block_model)
 
     def block_by_number(self, number: str):
         n = long_or_not_found(parse_number(number, "Bad Block Number"))
-        return _first(self.q.get_block_by_number(n), block_model)
+        return _first(self.q.rows("get_block_by_number", n), block_model)
 
     def blocks_by_number_range(self, frm: str, to: str):
         f, t = self._blk_range(frm, to)
-        return _all(self.q.get_blocks_by_number_range(f, t), block_model)
+        return _all(self.q.rows("get_blocks_by_number_range", f, t), block_model)
 
     def blocks_by_time_range(self, frm: str, to: str):
         f, t = self._time_range(frm, to)
-        return _all(self.q.get_blocks_by_time_range(f, t), block_model)
+        return _all(self.q.rows("get_blocks_by_time_range", f, t), block_model)
 
     # -- transactions (schema.resolvers.go:56-370) -------------------------
 
     def transaction(self, hash: str):
         self._hash(hash, "Bad Transaction Hash")
-        return _first(self.q.get_transaction_by_hash(hash), tx_model)
+        return _first(self.q.rows("get_transaction_by_hash", hash), tx_model)
 
     def transaction_count_by_block_hash(self, hash: str) -> int:
         self._hash(hash, "Bad Block Hash")
-        return _scalar(self.q.get_transaction_count_by_block_hash(hash))
+        return _scalar(self.q.rows("get_transaction_count_by_block_hash", hash))
 
     def transactions_by_block_hash(self, hash: str):
         self._hash(hash, "Bad Block Hash")
-        return _all(self.q.get_transactions_by_block_hash(hash), tx_model)
+        return _all(self.q.rows("get_transactions_by_block_hash", hash), tx_model)
 
     def transaction_count_by_block_number(self, number: str) -> int:
         # counts answer 0 for absent blocks — a number above the signed-64
@@ -192,24 +191,23 @@ class GraphQLResolvers:
         n = parse_number(number, "Bad Block Number")
         if not fits_long(n):
             return 0
-        return _scalar(self.q.get_transaction_count_by_block_number(n))
+        return _scalar(self.q.rows("get_transaction_count_by_block_number", n))
 
     def transactions_by_block_number(self, number: str):
         n = long_or_not_found(parse_number(number, "Bad Block Number"))
-        return _all(self.q.get_transactions_by_block_number(n), tx_model)
+        return _all(self.q.rows("get_transactions_by_block_number", n), tx_model)
 
     def _acct_window(
         self, account: str, frm: str, to: str, by_time: bool, count: bool, kind: str
     ):
         self._addr(account, "Bad Account Address")
         f, t = self._time_range(frm, to) if by_time else self._blk_range(frm, to)
-        fn = getattr(
-            self.q,
+        rows = self.q.rows(
             f"get_transaction{'_count' if count else 's'}_{kind}_account_by_block_"
             f"{'time' if by_time else 'number'}_range",
+            account, f, t,
         )
-        df = fn(account, f, t)
-        return _scalar(df) if count else _all(df, tx_model)
+        return _scalar(rows) if count else _all(rows, tx_model)
 
     def transaction_count_from_account_by_number_range(self, account, frm, to):
         return self._acct_window(account, frm, to, False, True, "from")
@@ -241,13 +239,12 @@ class GraphQLResolvers:
         if not is_address(to_account):
             raise ValidationError("Bad To Account Address")
         f, t = self._time_range(frm, to) if by_time else self._blk_range(frm, to)
-        fn = getattr(
-            self.q,
+        rows = self.q.rows(
             f"get_transaction{'_count' if count else 's'}_between_accounts_by_block_"
             f"{'time' if by_time else 'number'}_range",
+            from_account, to_account, f, t,
         )
-        df = fn(from_account, to_account, f, t)
-        return _scalar(df) if count else _all(df, tx_model)
+        return _scalar(rows) if count else _all(rows, tx_model)
 
     def transaction_count_between_accounts_by_number_range(self, fa, ta, frm, to):
         return self._between(fa, ta, frm, to, False, True)
@@ -265,7 +262,8 @@ class GraphQLResolvers:
         self._addr(account, "Bad Account Address")
         f, t = self._blk_range(frm, to)
         return _all(
-            self.q.get_contract_creation_transactions_from_account_by_block_number_range(
+            self.q.rows(
+                "get_contract_creation_transactions_from_account_by_block_number_range",
                 account, f, t
             ),
             tx_model,
@@ -275,7 +273,8 @@ class GraphQLResolvers:
         self._addr(account, "Bad Account Address")
         f, t = self._time_range(frm, to)
         return _all(
-            self.q.get_contract_creation_transactions_from_account_by_block_time_range(
+            self.q.rows(
+                "get_contract_creation_transactions_from_account_by_block_time_range",
                 account, f, t
             ),
             tx_model,
@@ -285,7 +284,7 @@ class GraphQLResolvers:
         self._addr(account, "Bad Account Address")
         n = long_or_not_found(parse_number(nonce, "Bad Account Nonce"))
         return _first(
-            self.q.get_transaction_from_account_with_nonce(account, n), tx_model
+            self.q.rows("get_transaction_from_account_with_nonce", account, n), tx_model
         )
 
     # -- events (schema.resolvers.go:373-497) ------------------------------
@@ -294,7 +293,7 @@ class GraphQLResolvers:
         self._addr(contract, "Bad Contract Address")
         f, t = self._blk_range(frm, to)
         return _all(
-            self.q.get_events_from_contract_by_block_number_range(contract, f, t),
+            self.q.rows("get_events_from_contract_by_block_number_range", contract, f, t),
             event_model,
         )
 
@@ -302,17 +301,17 @@ class GraphQLResolvers:
         self._addr(contract, "Bad Contract Address")
         f, t = self._time_range(frm, to)
         return _all(
-            self.q.get_events_from_contract_by_block_time_range(contract, f, t),
+            self.q.rows("get_events_from_contract_by_block_time_range", contract, f, t),
             event_model,
         )
 
     def events_by_block_hash(self, hash: str):
         self._hash(hash, "Bad Block Hash")
-        return _all(self.q.get_events_by_block_hash(hash), event_model)
+        return _all(self.q.rows("get_events_by_block_hash", hash), event_model)
 
     def events_by_tx_hash(self, hash: str):
         self._hash(hash, "Bad Transaction Hash")
-        return _all(self.q.get_events_by_transaction_hash(hash), event_model)
+        return _all(self.q.rows("get_events_by_transaction_hash", hash), event_model)
 
     def _topics_map(self, topics: list[str]) -> dict[int, str]:
         padded = fill_up_topic_array(topics)
@@ -324,7 +323,8 @@ class GraphQLResolvers:
         self._addr(contract, "Bad Contract Address")
         f, t = self._blk_range(frm, to)
         return _all(
-            self.q.get_events_from_contract_with_topics_by_block_number_range(
+            self.q.rows(
+                "get_events_from_contract_with_topics_by_block_number_range",
                 contract, f, t, self._topics_map(topics)
             ),
             event_model,
@@ -334,7 +334,8 @@ class GraphQLResolvers:
         self._addr(contract, "Bad Contract Address")
         f, t = self._time_range(frm, to)
         return _all(
-            self.q.get_events_from_contract_with_topics_by_block_time_range(
+            self.q.rows(
+                "get_events_from_contract_with_topics_by_block_time_range",
                 contract, f, t, self._topics_map(topics)
             ),
             event_model,
@@ -344,20 +345,21 @@ class GraphQLResolvers:
         self._addr(contract, "Bad Contract Address")
         if not x <= self.config.max_events_topk:
             raise ValidationError("Too Many Events Requested")
-        return _all(self.q.get_last_x_events_from_contract(contract, x), event_model)
+        rows = self.q.rows("get_last_x_events_from_contract", contract, x)
+        return _all(rows, event_model)
 
     def event_by_block_hash_and_log_index(self, hash: str, index: str):
         self._hash(hash, "Bad Block Hash")
         i = long_or_not_found(parse_number(index, "Bad Log Index"))
         return _first(
-            self.q.get_event_by_block_hash_and_log_index(hash, i), event_model
+            self.q.rows("get_event_by_block_hash_and_log_index", hash, i), event_model
         )
 
     def event_by_block_number_and_log_index(self, number: str, index: str):
         n = long_or_not_found(parse_number(number, "Bad Block Number"))
         i = long_or_not_found(parse_number(index, "Bad Log Index"))
         return _first(
-            self.q.get_event_by_block_number_and_log_index(n, i), event_model
+            self.q.rows("get_event_by_block_number_and_log_index", n, i), event_model
         )
 
 

@@ -9,18 +9,25 @@ broadcast it explicitly — on a 1000-executor cluster the fact-table scan
 then proceeds with zero shuffle (broadcast-hash join), and the
 number/time range predicate prunes partitions before any IO.
 
+Serving: the facades read through ``HistoricalQueries.rows``. A method
+marked ``@_served_locally`` carries a twin that answers from the store's
+object files on the driver (``AtomicBlockStore.local_rows``) with the
+plan's own rule; the plan runs when there is no store or the store
+declines (delta chain, byte cap, unbounded bucket set).
+
 Naming: methods keep the reference names in snake_case so the judge can
 diff the catalog line-by-line against ``query.go``.
 """
 
 from __future__ import annotations
 
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions.topics import topic_match
-from ..schemas import EVENT_COLS, TX_NARROW_COLS
+from ..schemas import BLOCKS_SCHEMA, EVENT_COLS, TRANSACTIONS_SCHEMA, TX_NARROW_COLS
 
 
 def _lc(s: str) -> str:
@@ -28,12 +35,30 @@ def _lc(s: str) -> str:
     return s.lower()
 
 
+def _served_locally(twin):
+    """Mark a catalog method as one ``HistoricalQueries.rows`` may answer
+    without Spark: ``twin(queries, *args)`` returns the rows the
+    collected plan would, read through the store, or None to run the
+    plan."""
+
+    def mark(method):
+        method.local = twin
+        return method
+
+    return mark
+
+
+def _counted(rows: list | None) -> list | None:
+    """A local twin's rows as the ``count`` aggregate's one row."""
+    return None if rows is None else [{"count": len(rows)}]
+
+
 class HistoricalQueries:
     """Query catalog over the three core tables.
 
-    Pure DataFrame→DataFrame: validation/guardrails live in ``api.facade``
-    (mirroring the reference split where ``rest.go`` validates and
-    ``query.go`` queries).
+    Each ``get_*`` method is DataFrame→DataFrame: validation/guardrails
+    live in ``api.facade`` (mirroring the reference split where
+    ``rest.go`` validates and ``query.go`` queries).
     """
 
     #: beyond this many buckets a window read falls back to the full
@@ -48,8 +73,7 @@ class HistoricalQueries:
         events: DataFrame,
         config: EngineConfig = DEFAULT_CONFIG,
         bucket_size: int | None = None,
-        bucket_reader=None,
-        time_bucket_resolver=None,
+        store=None,
     ) -> None:
         """*bucket_size*: when the tables come from the block store (and
         still carry its ``bucket`` column), number ranges additionally
@@ -59,45 +83,60 @@ class HistoricalQueries:
         ``AtomicBlockStore.historical_queries()`` to get a correctly wired
         instance.
 
-        *bucket_reader*: optional ``(table_name, [bucket, ...]) ->
-        DataFrame`` resolving ONLY the named buckets' storage paths
-        before the scan (``AtomicBlockStore.read_buckets``) — true
-        path-level pruning for number-window and point-by-number reads,
-        the columnar analog of the reference's B-tree point-read
-        economics (``model.go:16-18``). Without it, pruning relies on
-        the ``bucket`` predicate reaching partition/row-group stats.
+        *store*: the ``AtomicBlockStore`` the tables come from. With it:
 
-        *time_bucket_resolver*: optional ``(frm, to) -> list[int] |
-        None`` mapping a TIME window to the buckets whose zone-map
-        bounds intersect it (``AtomicBlockStore.buckets_for_time_range``).
-        Number windows prune by arithmetic; time windows need recorded
-        min/max stats — without this, a by-time read scans the chain."""
+        - number-window and point-by-number plans scan ONLY the touched
+          buckets' storage paths (``read_buckets``) — true path-level
+          pruning, the columnar analog of the reference's B-tree
+          point-read economics (``model.go:16-18``);
+        - TIME windows resolve their buckets from the manifest zone maps
+          (``buckets_for_time_range``) — number windows prune by
+          arithmetic, time windows need recorded min/max stats;
+        - ``rows`` answers the bounded families from the buckets' object
+          files on the driver (``local_rows``), with no Spark job.
+
+        Without it, pruning relies on the ``bucket`` predicate reaching
+        partition/row-group stats, and every read runs its Spark plan."""
         self.blocks = blocks
         self.transactions = transactions
         self.events = events
         self.config = config
         self.bucket_size = bucket_size
-        self.bucket_reader = bucket_reader
-        self.time_bucket_resolver = time_bucket_resolver
+        self.store = store
+
+    def rows(self, name: str, *args) -> list:
+        """The rows catalog method *name* returns for *args*: read on the
+        driver through the store when the method is
+        ``_served_locally`` and the store answers, else collected from
+        the method's Spark plan."""
+        twin = getattr(getattr(type(self), name), "local", None)
+        rows = None if twin is None or self.store is None else twin(self, *args)
+        return getattr(self, name)(*args).collect() if rows is None else rows
+
+    def _number_buckets(self, frm: int, to: int) -> list[int] | None:
+        """The bucket set of a number window, or None when it is too wide
+        to list."""
+        lo, hi = frm // self.bucket_size, to // self.bucket_size
+        if hi - lo + 1 > self.MAX_PRUNED_BUCKETS:
+            return None
+        return list(range(lo, hi + 1))
 
     def _bucketed(self, table: str, frm: int, to: int) -> DataFrame:
         """The *table* source for a number window [frm, to]: manifest
-        path-pruned when a bucket_reader is wired, else the full table
-        (whose callers add the bucket-column predicate)."""
+        path-pruned when a store is wired, else the full table (whose
+        callers add the bucket-column predicate)."""
         full = getattr(self, table)
-        if not self.bucket_reader or not self.bucket_size or frm > to:
+        if not self.store or not self.bucket_size or frm > to:
             return full
-        lo, hi = frm // self.bucket_size, to // self.bucket_size
-        if hi - lo + 1 > self.MAX_PRUNED_BUCKETS:
-            return full
-        return self.bucket_reader(table, list(range(lo, hi + 1)))
+        buckets = self._number_buckets(frm, to)
+        return full if buckets is None else self.store.read_buckets(table, buckets)
 
     # -- internal join helpers ---------------------------------------------
 
     def _blocks_in_number_range(self, frm: int, to: int) -> DataFrame:
         """Range predicate on number (P5); with a known bucket layout the
         equivalent bucket range is added for partition pruning, and a
-        wired bucket_reader resolves only the touched buckets' paths."""
+        wired store resolves only the touched buckets' paths."""
         src = self._bucketed("blocks", frm, to)
         out = src.filter(F.col("number").between(frm, to))
         if self.bucket_size and "bucket" in src.columns:
@@ -106,32 +145,95 @@ class HistoricalQueries:
             )
         return out
 
-    def _time_buckets(self, frm: int, to: int) -> list[int] | None:
-        """Zone-map bucket set for a time window, or None when pruning
-        is unavailable (no resolver / no stats yet / set too wide)."""
-        if not self.time_bucket_resolver or frm > to:
+    def _time_buckets(
+        self, frm: int, to: int, manifest: dict | None = None
+    ) -> list[int] | None:
+        """Zone-map bucket set for a time window (from *manifest* when
+        given), or None when pruning is unavailable (no store / no stats
+        yet / set too wide)."""
+        if self.store is None or frm > to:
             return None
-        buckets = self.time_bucket_resolver(frm, to)
+        buckets = self.store.buckets_for_time_range(frm, to, manifest)
         if buckets is None or len(buckets) > self.MAX_PRUNED_BUCKETS:
             return None
         return buckets
 
-    def _time_pruned(self, table: str, buckets: list[int]) -> DataFrame:
-        """*table*'s source restricted to the zone-map bucket set:
-        path-level when a bucket_reader is wired (manifest store), else
-        a ``bucket IN (...)`` partition filter (hive layout)."""
-        if self.bucket_reader is not None:
-            return self.bucket_reader(table, buckets)
-        full = getattr(self, table)
-        if "bucket" in full.columns:
-            return full.filter(F.col("bucket").isin(buckets))
-        return full
+    def _local_window(
+        self,
+        frm: int,
+        to: int,
+        by_time: bool,
+        table: str = "blocks",
+        where: tuple = (),
+        columns: list[str] | None = None,
+    ) -> list[dict] | None:
+        """*table*'s rows for a number or time window, read through
+        ``store.local_rows`` under ONE manifest snapshot: the window's
+        blocks ordered by number, or the fact rows whose ``blockhash`` is
+        among those blocks' hashes, in the same buckets and matching
+        every expression in *where* (``_join_blocks``'s rule). None when
+        the store declines a read."""
+        m = self.store._manifest()
+        if by_time:
+            key, buckets = "time", self._time_buckets(frm, to, m)
+        else:
+            key, buckets = "number", self._number_buckets(frm, to)
+        in_window = (ds.field(key) >= frm) & (ds.field(key) <= to)
+        if table == "blocks":
+            blocks = self.store.local_rows(
+                "blocks", buckets, in_window, BLOCKS_SCHEMA.names, m
+            )
+            return None if blocks is None else sorted(blocks, key=lambda r: r["number"])
+        blocks = self.store.local_rows("blocks", buckets, in_window, ["hash"], m)
+        if not blocks:
+            return blocks  # declined (None), or no block and so no child
+        cond = ds.field("blockhash").isin([b["hash"] for b in blocks])
+        for w in where:
+            cond = cond & w
+        return self.store.local_rows(table, buckets, cond, columns, m)
+
+    def _local_block_txs(self, number: int) -> list[dict] | None:
+        """``_txs_for_block_number`` on the local path."""
+        return self._local_window(
+            number, number, False, "transactions", (), TRANSACTIONS_SCHEMA.names
+        )
+
+    def _local_txs(
+        self,
+        frm: int,
+        to: int,
+        by_time: bool,
+        from_account: str | None = None,
+        to_account: str | None = None,
+        creations_only: bool = False,
+    ) -> list[dict] | None:
+        """``_account_window_txs`` narrowed (P2), on the local path."""
+        where = []
+        if from_account is not None:
+            where.append(ds.field("from") == _lc(from_account))
+        if to_account is not None:
+            where.append(ds.field("to") == _lc(to_account))
+        if creations_only:
+            where.append(ds.field("contract") != "")
+        return self._local_window(
+            frm, to, by_time, "transactions", tuple(where), TX_NARROW_COLS
+        )
+
+    def _local_events(
+        self, frm: int, to: int, by_time: bool, contract: str
+    ) -> list[dict] | None:
+        """``_events_window`` narrowed (P3), on the local path."""
+        return self._local_window(
+            frm, to, by_time, "events", (ds.field("origin") == _lc(contract),), EVENT_COLS
+        )
 
     def _blocks_in_time_range(self, frm: int, to: int) -> DataFrame:
         """Time-range predicate (P6); with zone maps only the buckets
         whose recorded [min,max] time intersects the window are read."""
         buckets = self._time_buckets(frm, to)
-        src = self.blocks if buckets is None else self._time_pruned("blocks", buckets)
+        src = self.blocks
+        if buckets is not None:
+            src = self.store.read_buckets("blocks", buckets)
         return src.filter(F.col("time").between(frm, to))
 
     def _join_blocks(self, fact: DataFrame, blocks_small: DataFrame) -> DataFrame:
@@ -173,8 +275,9 @@ class HistoricalQueries:
         """query.go:79-89 — point lookup by PK (P4/W3)."""
         return self.blocks.filter(F.col("hash") == _lc(hash_)).limit(1)
 
+    @_served_locally(lambda q, n: q._local_window(n, n, False))
     def get_block_by_number(self, number: int) -> DataFrame:
-        """query.go:92-105 — with a bucket_reader this is a ONE-bucket
+        """query.go:92-105 — with a store this is a ONE-bucket
         scan, the B-tree-point-read analog."""
         return (
             self._bucketed("blocks", number, number)
@@ -182,10 +285,12 @@ class HistoricalQueries:
             .limit(1)
         )
 
+    @_served_locally(lambda q, f, t: q._local_window(f, t, False))
     def get_blocks_by_number_range(self, frm: int, to: int) -> DataFrame:
         """query.go:109-121 — ORDER BY number asc."""
         return self._blocks_in_number_range(frm, to).orderBy(F.asc("number"))
 
+    @_served_locally(lambda q, f, t: q._local_window(f, t, True))
     def get_blocks_by_time_range(self, frm: int, to: int) -> DataFrame:
         """query.go:125-135 (P6)."""
         return self._blocks_in_time_range(frm, to).orderBy(F.asc("number"))
@@ -210,6 +315,7 @@ class HistoricalQueries:
             .select("hash")
         )
 
+    @_served_locally(lambda q, n: _counted(q._local_block_txs(n)))
     def get_transaction_count_by_block_number(self, number: int) -> DataFrame:
         """query.go:167-177 — scalar-subquery semi-join on blocks (J4)."""
         txs = self._txs_for_block_number(number)
@@ -223,6 +329,7 @@ class HistoricalQueries:
             bh, self.transactions["blockhash"] == bh["hash"], "left_semi"
         )
 
+    @_served_locally(lambda q, n: q._local_block_txs(n))
     def get_transactions_by_block_number(self, number: int) -> DataFrame:
         """query.go:181-191."""
         return self._txs_for_block_number(number)
@@ -267,7 +374,7 @@ class HistoricalQueries:
         layout, so number-window queries prune fact partitions directly —
         without this the hash join would scan every fact partition
         (the join key is not the partition column, so dynamic pruning
-        does not apply). With a bucket_reader the fact source itself is
+        does not apply). With a store the fact source itself is
         path-pruned from the manifest first. TIME windows prune through
         the zone-map bucket set instead (children live in their parent
         block's bucket, so the blocks zone maps cover them too)."""
@@ -279,10 +386,10 @@ class HistoricalQueries:
             buckets = self._time_buckets(frm, to)
             if buckets is None or name is None:
                 return fact
-            return self._time_pruned(name, buckets)
+            return self.store.read_buckets(name, buckets)
         if not self.bucket_size or "bucket" not in fact.columns:
             return fact
-        if self.bucket_reader is not None and name is not None:
+        if self.store is not None and name is not None:
             fact = self._bucketed(name, frm, to)
         return fact.filter(
             F.col("bucket").between(frm // self.bucket_size, to // self.bucket_size)
@@ -296,24 +403,32 @@ class HistoricalQueries:
         return joined.agg(F.count(F.lit(1)).alias("count"))
 
     # from-account
+    @_served_locally(
+        lambda q, a, f, t: _counted(q._local_txs(f, t, False, from_account=a))
+    )
     def get_transaction_count_from_account_by_block_number_range(
         self, account: str, frm: int, to: int
     ) -> DataFrame:
         """query.go:206-216 (A2/J1)."""
         return self._count(self._account_window_txs(frm, to, False, from_account=account))
 
+    @_served_locally(lambda q, a, f, t: q._local_txs(f, t, False, from_account=a))
     def get_transactions_from_account_by_block_number_range(
         self, account: str, frm: int, to: int
     ) -> DataFrame:
         """query.go:220-230 (J1/P2)."""
         return self._narrow(self._account_window_txs(frm, to, False, from_account=account))
 
+    @_served_locally(
+        lambda q, a, f, t: _counted(q._local_txs(f, t, True, from_account=a))
+    )
     def get_transaction_count_from_account_by_block_time_range(
         self, account: str, frm: int, to: int
     ) -> DataFrame:
         """query.go:234-244 (A2/J2)."""
         return self._count(self._account_window_txs(frm, to, True, from_account=account))
 
+    @_served_locally(lambda q, a, f, t: q._local_txs(f, t, True, from_account=a))
     def get_transactions_from_account_by_block_time_range(
         self, account: str, frm: int, to: int
     ) -> DataFrame:
@@ -321,24 +436,32 @@ class HistoricalQueries:
         return self._narrow(self._account_window_txs(frm, to, True, from_account=account))
 
     # to-account
+    @_served_locally(
+        lambda q, a, f, t: _counted(q._local_txs(f, t, False, to_account=a))
+    )
     def get_transaction_count_to_account_by_block_number_range(
         self, account: str, frm: int, to: int
     ) -> DataFrame:
         """query.go:262-272."""
         return self._count(self._account_window_txs(frm, to, False, to_account=account))
 
+    @_served_locally(lambda q, a, f, t: q._local_txs(f, t, False, to_account=a))
     def get_transactions_to_account_by_block_number_range(
         self, account: str, frm: int, to: int
     ) -> DataFrame:
         """query.go:276-286."""
         return self._narrow(self._account_window_txs(frm, to, False, to_account=account))
 
+    @_served_locally(
+        lambda q, a, f, t: _counted(q._local_txs(f, t, True, to_account=a))
+    )
     def get_transaction_count_to_account_by_block_time_range(
         self, account: str, frm: int, to: int
     ) -> DataFrame:
         """query.go:290-300."""
         return self._count(self._account_window_txs(frm, to, True, to_account=account))
 
+    @_served_locally(lambda q, a, f, t: q._local_txs(f, t, True, to_account=a))
     def get_transactions_to_account_by_block_time_range(
         self, account: str, frm: int, to: int
     ) -> DataFrame:
@@ -346,6 +469,7 @@ class HistoricalQueries:
         return self._narrow(self._account_window_txs(frm, to, True, to_account=account))
 
     # between accounts
+    @_served_locally(lambda q, a, b, f, t: _counted(q._local_txs(f, t, False, a, b)))
     def get_transaction_count_between_accounts_by_block_number_range(
         self, from_account: str, to_account: str, frm: int, to: int
     ) -> DataFrame:
@@ -356,6 +480,7 @@ class HistoricalQueries:
             )
         )
 
+    @_served_locally(lambda q, a, b, f, t: q._local_txs(f, t, False, a, b))
     def get_transactions_between_accounts_by_block_number_range(
         self, from_account: str, to_account: str, frm: int, to: int
     ) -> DataFrame:
@@ -366,6 +491,7 @@ class HistoricalQueries:
             )
         )
 
+    @_served_locally(lambda q, a, b, f, t: _counted(q._local_txs(f, t, True, a, b)))
     def get_transaction_count_between_accounts_by_block_time_range(
         self, from_account: str, to_account: str, frm: int, to: int
     ) -> DataFrame:
@@ -376,6 +502,7 @@ class HistoricalQueries:
             )
         )
 
+    @_served_locally(lambda q, a, b, f, t: q._local_txs(f, t, True, a, b))
     def get_transactions_between_accounts_by_block_time_range(
         self, from_account: str, to_account: str, frm: int, to: int
     ) -> DataFrame:
@@ -387,6 +514,9 @@ class HistoricalQueries:
         )
 
     # contract creations
+    @_served_locally(
+        lambda q, a, f, t: q._local_txs(f, t, False, a, creations_only=True)
+    )
     def get_contract_creation_transactions_from_account_by_block_number_range(
         self, account: str, frm: int, to: int
     ) -> DataFrame:
@@ -397,6 +527,9 @@ class HistoricalQueries:
             )
         )
 
+    @_served_locally(
+        lambda q, a, f, t: q._local_txs(f, t, True, a, creations_only=True)
+    )
     def get_contract_creation_transactions_from_account_by_block_time_range(
         self, account: str, frm: int, to: int
     ) -> DataFrame:
@@ -437,12 +570,14 @@ class HistoricalQueries:
         )
         return self._join_blocks(ev, blocks_small)
 
+    @_served_locally(lambda q, c, f, t: q._local_events(f, t, False, c))
     def get_events_from_contract_by_block_number_range(
         self, contract: str, frm: int, to: int
     ) -> DataFrame:
         """query.go:413-425 (J3)."""
         return self._event_cols(self._events_window(frm, to, False, contract))
 
+    @_served_locally(lambda q, c, f, t: q._local_events(f, t, True, c))
     def get_events_from_contract_by_block_time_range(
         self, contract: str, frm: int, to: int
     ) -> DataFrame:
@@ -508,6 +643,9 @@ class HistoricalQueries:
             .limit(1)
         )
 
+    @_served_locally(lambda q, n, i: q._local_window(
+            n, n, False, "events", (ds.field("index") == i,), EVENT_COLS
+        ))
     def get_event_by_block_number_and_log_index(
         self, number: int, index: int
     ) -> DataFrame:

@@ -61,6 +61,14 @@ amplification. Write amplification per commit drops from
 O(bucket_size) to O(batch) — at 100 TB with thousands of commits per
 bucket lifetime, that is the difference between sustainable ingest and
 rewriting the table continuously.
+
+Serving reads. A guardrail-bounded REST/GraphQL read touches one or two
+buckets, and the manifest names their object files before any job
+starts. ``local_rows`` reads those files with ``pyarrow.dataset`` on the
+driver, with the filter pushed down, so such a read launches no Spark
+job. It declines (returns None) when a touched bucket carries a delta
+chain or the files exceed ``LOCAL_READ_BYTE_CAP``; the caller then runs
+the Spark plan.
 """
 
 from __future__ import annotations
@@ -70,6 +78,7 @@ import os
 import shutil
 import uuid
 
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -84,6 +93,10 @@ _SCHEMAS = {
     "events": EVENTS_SCHEMA,
 }
 _TABLES = ("blocks", "transactions", "events")
+
+#: the most object bytes one ``local_rows`` call reads on the driver;
+#: above it the read goes to the Spark plan (calibration: SCALE.md)
+LOCAL_READ_BYTE_CAP = 64 << 20
 
 
 def bucket_of(number_col):
@@ -341,13 +354,16 @@ class AtomicBlockStore:
         blocks) touches 1-2 directories regardless of chain length."""
         return self._read_table(table, self._manifest(), buckets=buckets)
 
-    def buckets_for_time_range(self, frm: int, to: int) -> list[int] | None:
+    def buckets_for_time_range(
+        self, frm: int, to: int, manifest: dict | None = None
+    ) -> list[int] | None:
         """Buckets whose recorded [min,max] block time intersects
         [frm, to] — the manifest zone-map lookup backing by-time path
         pruning. Returns None when the manifest predates zone maps
         (caller falls back to a full scan); buckets missing stats are
-        conservatively included."""
-        m = self._manifest()
+        conservatively included. *manifest*: resolve against this
+        snapshot instead of reading the current one."""
+        m = self._manifest() if manifest is None else manifest
         stats = m.get("stats", {}).get("blocks")
         if not stats:
             return None
@@ -363,6 +379,51 @@ class AtomicBlockStore:
                 out.append(int(b))
         return sorted(out)
 
+    def local_rows(
+        self,
+        table: str,
+        buckets: list[int] | None,
+        where=None,
+        columns: list[str] | None = None,
+        manifest: dict | None = None,
+    ) -> list[dict] | None:
+        """*table*'s rows in *buckets* that match the ``pyarrow.dataset``
+        expression *where*, read on the driver straight from the
+        manifest's object files (projected to *columns*): no Spark job.
+        A bucket missing from the manifest contributes no rows. Returns
+        None, and the caller runs the Spark plan, when the bucket set is
+        unbounded (None), a touched bucket carries deltas (merge-on-read
+        is the Spark plan's job), or the files total more than
+        ``LOCAL_READ_BYTE_CAP`` (sizes from ``os.stat``, so the manifest
+        format is unchanged)."""
+        if buckets is None:
+            return None
+        m = self._manifest() if manifest is None else manifest
+        entries = m["tables"].get(table, {})
+        files = []
+        for b in buckets:
+            entry = entries.get(str(int(b)))
+            if entry is None:
+                continue
+            versions, merge = self._entry_versions(entry)
+            if merge:
+                return None
+            d = self._obj_dir(table, int(b), versions[0])
+            files += [
+                os.path.join(d, f)
+                for f in sorted(os.listdir(d))
+                if f.endswith(".parquet")
+            ]
+        if sum(os.stat(f).st_size for f in files) > LOCAL_READ_BYTE_CAP:
+            return None
+        if not files:
+            return []
+        return (
+            ds.dataset(files, format="parquet")
+            .to_table(columns=columns, filter=where)
+            .to_pylist()
+        )
+
     def blocks(self) -> DataFrame:
         return self.read("blocks").drop("bucket")
 
@@ -373,12 +434,13 @@ class AtomicBlockStore:
         return self.read("events").drop("bucket")
 
     def historical_queries(self, config=None):
-        """HistoricalQueries wired for MANIFEST PATH PRUNING: number
-        windows and point-by-number reads resolve only the touched
-        buckets' object dirs via ``read_buckets`` — the scan never even
-        lists the rest of the chain's files — and TIME windows resolve
-        their bucket set through the manifest zone maps
-        (``buckets_for_time_range``)."""
+        """HistoricalQueries wired to this store: number windows and
+        point-by-number reads resolve only the touched buckets' object
+        dirs via ``read_buckets`` — the scan never even lists the rest
+        of the chain's files — TIME windows resolve their bucket set
+        through the manifest zone maps (``buckets_for_time_range``), and
+        ``HistoricalQueries.rows`` serves bounded reads through
+        ``local_rows``."""
         from ..config import DEFAULT_CONFIG
         from ..operators.historical import HistoricalQueries
 
@@ -388,8 +450,7 @@ class AtomicBlockStore:
             self.read("events"),
             config or DEFAULT_CONFIG,
             bucket_size=BLOCK_BUCKET_SIZE,
-            bucket_reader=self.read_buckets,
-            time_bucket_resolver=self.buckets_for_time_range,
+            store=self,
         )
 
     def rest_facade(self, config=None):
@@ -790,11 +851,13 @@ class HashIndex:
     def lookup_block(self, block_hash: str) -> DataFrame:
         """P4 point read pruned through the index: resolve the bucket,
         then scan ONLY that bucket of ``blocks``. Falls back to the full
-        scan when the hash is unindexed (pre-index history)."""
+        scan when the hash is unindexed (pre-index history). Stored
+        hashes are lowercase (``sources.normalize``), so the bare column
+        comparison reaches the parquet scan as a pushed filter."""
         b = self.bucket_of_hash(block_hash)
         return (
             self._bucket_slice("blocks", b)
-            .filter(F.lower(F.col("hash")) == block_hash.lower())
+            .filter(F.col("hash") == block_hash.lower())
             .drop("bucket")
         )
 
@@ -805,7 +868,7 @@ class HashIndex:
         b = self.bucket_of_hash(block_hash)
         return (
             self._bucket_slice("transactions", b)
-            .filter(F.lower(F.col("blockhash")) == block_hash.lower())
+            .filter(F.col("blockhash") == block_hash.lower())
             .drop("bucket")
         )
 

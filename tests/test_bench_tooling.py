@@ -9,6 +9,7 @@ pipeline (bench.py's verdict helper, tools/bench_median.py's fold).
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 from pathlib import Path
@@ -237,3 +238,22 @@ def test_net_loc_counts_code_apart_from_docs_and_comments(tmp_path):
         "tests/": (1, 1),
         "tools/": (0, 0),
     }
+
+
+def test_gate_replica_checks_its_own_checkout(tmp_path):
+    """A copy of ``gate_replica.py`` in another checkout imports that
+    checkout's entry module, even run from here with this checkout on
+    ``PYTHONPATH``."""
+    (tmp_path / "tools").mkdir()
+    copy = tmp_path / "tools" / "gate_replica.py"
+    copy.write_text((REPO / "tools" / "gate_replica.py").read_text())
+    (tmp_path / "__spark_entry__.py").write_text('CHECKOUT = "copy"\n')
+    p = subprocess.run(
+        [sys.executable, "-c",
+         f"import runpy; e = runpy.run_path({str(copy)!r})['_entry'](); "
+         "print(getattr(e, 'CHECKOUT', e.__file__))"],
+        capture_output=True, text=True, cwd=REPO,
+        env={**os.environ, "PYTHONPATH": str(REPO)},
+    )
+    assert p.returncode == 0, p.stderr
+    assert p.stdout.strip() == "copy"

@@ -18,11 +18,14 @@ import hashlib
 import json
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
 SF_DIR = __import__("os").environ.get("GATE_SF_DIR", "/root/testdata/sf0.01")
+#: the checkout this script belongs to; its package is the one checked
+ROOT = Path(__file__).resolve().parents[1]
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -46,6 +49,15 @@ def _hash(df: pd.DataFrame) -> str:
     return h.hexdigest()
 
 
+def _entry():
+    """The driver entry module of this script's own checkout, whatever
+    the working directory or ``PYTHONPATH``."""
+    sys.path.insert(0, str(ROOT))
+    import __spark_entry__
+
+    return __spark_entry__
+
+
 def main() -> None:
     from pyspark.sql import SparkSession
 
@@ -66,9 +78,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as entry_mod
-
+    entry_mod = _entry()
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
 
