@@ -216,20 +216,14 @@ class RestFacade:
     """
 
     def __init__(
-        self,
-        queries: HistoricalQueries,
-        config: EngineConfig = DEFAULT_CONFIG,
-        hash_index=None,
+        self, queries: HistoricalQueries, config: EngineConfig = DEFAULT_CONFIG
     ) -> None:
-        """*hash_index*: optional ``streaming.txstore.HashIndex`` —
-        wired by default via ``AtomicBlockStore.rest_facade()``. Point
-        reads by block hash then resolve the bucket from the slim side
-        index and scan one bucket instead of the chain (the reference's B-tree point-read
-        economics, ``model.go:16-18``); unindexed hashes fall back to
-        the catalog path unchanged."""
         self.q = queries
         self.config = config
-        self.hash_index = hash_index
+        # the store whose ``bucket_of_hash`` the by-hash reads resolve
+        # through (None without a store): the reference's B-tree point-
+        # read economics, ``model.go:16-18``
+        self.hash_index = queries.store
 
     # rest.go:69-91
     def synced(self, latest_block_number: int, elapsed_seconds: float) -> dict[str, Any]:
@@ -253,12 +247,6 @@ class RestFacade:
         tx = params.get("tx", "")
 
         if is_hash(hash_) and tx == "yes":
-            if self.hash_index is not None:
-                return _many(
-                    self.hash_index.lookup_block_transactions(hash_).collect(),
-                    tx_to_dict,
-                    "transactions",
-                )
             return _many(
                 self.q.rows("get_transactions_by_block_hash", hash_),
                 tx_to_dict,
@@ -272,10 +260,6 @@ class RestFacade:
                 "transactions",
             )
         if is_hash(hash_):
-            if self.hash_index is not None:
-                return _one(
-                    self.hash_index.lookup_block(hash_).limit(1).collect(), block_to_dict
-                )
             return _one(self.q.rows("get_block_by_hash", hash_), block_to_dict)
         if number:
             n = long_or_not_found(parse_number(number, "Bad block number"))

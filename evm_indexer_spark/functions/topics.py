@@ -43,12 +43,6 @@ def topic_match(topics_col: Column | str, topic_map: dict[int, str]) -> Column:
     return pred
 
 
-def build_topic_map(*topics: str | None) -> dict[int, str]:
-    """Positional map skipping empties — CreateEventTopicMap
-    (app/common/common.go:26-48); used by facade + streaming filters."""
-    return {i: t for i, t in enumerate(topics) if t}
-
-
 def tx_subscription_match(
     from_col: Column | str, to_col: Column | str, want_from: str, want_to: str
 ) -> Column:

@@ -588,7 +588,3 @@ class GraphQLExecutor:
                 raise GraphQLExecutionError(f"missing argument {p!r}")
             call_args.append(args[p])
         return method(*call_args)
-
-
-def serialize_json(payload: dict[str, Any]) -> bytes:
-    return json.dumps(payload).encode()

@@ -115,27 +115,6 @@ def _derive_hash(h: Column, k: int) -> Column:
     return F.xxhash64(h, F.lit(k))
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 64) -> Column:
-    """K minhashes per row: min over shingles of a_k*xxhash64(s)+b_k.
-
-    One JVM-native string xxhash64 per shingle; the K-family rehashes
-    that fixed-width long — constant-time per member instead of K full
-    string hashes, keeping runtime and generated whole-stage code small.
-    Returns array<bigint> of length K.
-
-    Per-row expression form — fine for ad-hoc use on narrow data; the
-    dedup pipeline uses the explode/groupBy form in
-    ``_minhash_signatures`` which partial-aggregates map-side.
-    """
-    hashes = F.transform(shingle_col, lambda s: F.xxhash64(s))
-    return F.array(
-        *[
-            F.array_min(F.transform(hashes, lambda h: _derive_hash(h, k)))
-            for k in range(num_hashes)
-        ]
-    )
-
-
 def _minhash_signatures(
     df: DataFrame, id_col: str, text_col: str, num_hashes: int, shingle_n: int
 ) -> DataFrame:
@@ -1132,24 +1111,6 @@ def simhash_near_duplicates(
         # stream is the larger of the two by construction)
         paired.filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
-    )
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Exact n-gram Jaccard over candidate pairs found by LSH — thin
-    wrapper that runs the full MinHash pipeline with a high threshold."""
-    return minhash_near_duplicates(
-        df,
-        id_col,
-        text_col,
-        shingle_n=shingle_n,
-        jaccard_threshold=threshold,
     )
 
 

@@ -12,8 +12,10 @@ number/time range predicate prunes partitions before any IO.
 Serving: the facades read through ``HistoricalQueries.rows``. A method
 marked ``@_served_locally`` carries a twin that answers from the store's
 object files on the driver (``AtomicBlockStore.local_rows``) with the
-plan's own rule; the plan runs when there is no store or the store
-declines (delta chain, byte cap, unbounded bucket set).
+plan's own rule; by-hash twins first resolve the hash's buckets through
+the store's hash index (``bucket_of_hash``). The plan runs when there is
+no store or the store declines (delta chain, byte cap, unbounded bucket
+set, no hash index).
 
 Naming: methods keep the reference names in snake_case so the judge can
 diff the catalog line-by-line against ``query.go``.
@@ -51,6 +53,11 @@ def _served_locally(twin):
 def _counted(rows: list | None) -> list | None:
     """A local twin's rows as the ``count`` aggregate's one row."""
     return None if rows is None else [{"count": len(rows)}]
+
+
+def _first(rows: list | None) -> list | None:
+    """A local twin's rows under the plan's ``limit(1)``."""
+    return None if rows is None else rows[:1]
 
 
 class HistoricalQueries:
@@ -192,6 +199,27 @@ class HistoricalQueries:
             cond = cond & w
         return self.store.local_rows(table, buckets, cond, columns, m)
 
+    def _local_by_hash(
+        self,
+        table: str,
+        key: str,
+        hash_: str,
+        kind: str,
+        columns: list[str],
+        where: tuple = (),
+    ) -> list[dict] | None:
+        """*table*'s rows whose *key* column equals *hash_* (and that
+        match every expression in *where*), read through
+        ``store.local_rows`` from the buckets the hash index names for
+        *hash_* as a *kind* hash, under ONE manifest snapshot. None when
+        the store declines (no index, byte cap, delta chain)."""
+        m = self.store._manifest()
+        buckets = self.store.bucket_of_hash(hash_, kind, m)
+        cond = ds.field(key) == _lc(hash_)
+        for w in where:
+            cond = cond & w
+        return self.store.local_rows(table, buckets, cond, columns, m)
+
     def _local_block_txs(self, number: int) -> list[dict] | None:
         """``_txs_for_block_number`` on the local path."""
         return self._local_window(
@@ -271,6 +299,9 @@ class HistoricalQueries:
         metadata-only."""
         return self.blocks.agg(F.count(F.lit(1)).alias("count"))
 
+    @_served_locally(lambda q, h: _first(
+            q._local_by_hash("blocks", "hash", h, "block", BLOCKS_SCHEMA.names)
+        ))
     def get_block_by_hash(self, hash_: str) -> DataFrame:
         """query.go:79-89 — point lookup by PK (P4/W3)."""
         return self.blocks.filter(F.col("hash") == _lc(hash_)).limit(1)
@@ -297,6 +328,9 @@ class HistoricalQueries:
 
     # -- transactions by block (query.go:139-202) ---------------------------
 
+    @_served_locally(lambda q, h: _counted(
+            q._local_by_hash("transactions", "blockhash", h, "block", ["hash"])
+        ))
     def get_transaction_count_by_block_hash(self, block_hash: str) -> DataFrame:
         """query.go:139-149 (A1)."""
         return (
@@ -304,6 +338,9 @@ class HistoricalQueries:
             .agg(F.count(F.lit(1)).alias("count"))
         )
 
+    @_served_locally(lambda q, h: q._local_by_hash(
+            "transactions", "blockhash", h, "block", TRANSACTIONS_SCHEMA.names
+        ))
     def get_transactions_by_block_hash(self, block_hash: str) -> DataFrame:
         """query.go:153-163."""
         return self.transactions.filter(F.col("blockhash") == _lc(block_hash))
@@ -334,6 +371,9 @@ class HistoricalQueries:
         """query.go:181-191."""
         return self._txs_for_block_number(number)
 
+    @_served_locally(lambda q, h: _first(
+            q._local_by_hash("transactions", "hash", h, "tx", TRANSACTIONS_SCHEMA.names)
+        ))
     def get_transaction_by_hash(self, hash_: str) -> DataFrame:
         """query.go:194-202 (P4/W3)."""
         return self.transactions.filter(F.col("hash") == _lc(hash_)).limit(1)
@@ -584,10 +624,16 @@ class HistoricalQueries:
         """query.go:429-441."""
         return self._event_cols(self._events_window(frm, to, True, contract))
 
+    @_served_locally(lambda q, h: q._local_by_hash(
+            "events", "blockhash", h, "block", EVENT_COLS
+        ))
     def get_events_by_block_hash(self, block_hash: str) -> DataFrame:
         """query.go:444-454."""
         return self.events.filter(F.col("blockhash") == _lc(block_hash))
 
+    @_served_locally(lambda q, h: q._local_by_hash(
+            "events", "txhash", h, "tx", EVENT_COLS
+        ))
     def get_events_by_transaction_hash(self, tx_hash: str) -> DataFrame:
         """query.go:457-469."""
         return self.events.filter(F.col("txhash") == _lc(tx_hash))
@@ -632,6 +678,9 @@ class HistoricalQueries:
             .select(*EVENT_COLS)
         )
 
+    @_served_locally(lambda q, h, i: _first(q._local_by_hash(
+            "events", "blockhash", h, "block", EVENT_COLS, (ds.field("index") == i,)
+        )))
     def get_event_by_block_hash_and_log_index(
         self, block_hash: str, index: int
     ) -> DataFrame:

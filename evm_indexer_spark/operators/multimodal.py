@@ -140,12 +140,6 @@ def decode_image_batch(payloads: pd.Series) -> pd.DataFrame:
     )
 
 
-def resize_image(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Alias of ``resize_image_payloads`` (BMP, PNG and baseline
-    JPEG)."""
-    return resize_image_payloads(df, width, height)
-
-
 # -- feature extraction (real, vectorized) ----------------------------------
 
 

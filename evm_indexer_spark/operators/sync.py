@@ -1,8 +1,7 @@
-"""Sync-state operators (SURVEY §2.4 A3-A6, §2.3 J6, §2.8 T6/T7).
+"""Sync-state operators (SURVEY §2.3 J6, §2.8 T4/T7).
 
-The reference tracks sync progress with min/max/count aggregates
-(``app/db/query.go:33-74``) and repairs gaps by diffing the expected
-number range against present numbers — a Go binary search per candidate
+The reference repairs gaps by diffing the expected number range against
+present numbers — a Go binary search per candidate
 (``FindMissingBlocksInRange``, ``app/block/syncer.go:21-37``). On Spark the
 same computation is a single distributed anti-join: ``spark.range`` is a
 zero-IO virtual table, the probe side carries only the 8-byte ``number``
@@ -27,39 +26,6 @@ def find_missing_blocks_in_range(
     expected = spark.range(frm, to + 1).select(F.col("id").alias("number"))
     present = blocks.select("number").filter(F.col("number").between(frm, to))
     return expected.join(present, "number", "left_anti").orderBy("number")
-
-
-def sync_progress(blocks: DataFrame, latest_block_number: int) -> DataFrame:
-    """Percent-complete derivation — app/rest/rest.go:71-89 (A6).
-
-    ``progress = count / (latest + 1) * 100``; count/min/max computed in a
-    single aggregate pass (parquet footer stats answer all three).
-    """
-    agg = blocks.agg(
-        F.count(F.lit(1)).alias("block_count"),
-        F.min("number").alias("oldest"),
-        F.max("number").alias("head"),
-    )
-    return agg.select(
-        "block_count",
-        "oldest",
-        "head",
-        (F.col("block_count") / F.lit(latest_block_number + 1) * 100).alias(
-            "progress_pct"
-        ),
-    )
-
-
-def backfill_chunks(frm: int, to: int, step: int = 10_000) -> list[tuple[int, int]]:
-    """Chunked backfill ranges — SyncBlocksByRange, app/block/syncer.go:107-148
-    (step hardcoded 10_000 at syncer.go:65)."""
-    chunks = []
-    lo = frm
-    while lo <= to:
-        hi = min(lo + step - 1, to)
-        chunks.append((lo, hi))
-        lo = hi + 1
-    return chunks
 
 
 class FibonacciBackoff:

@@ -269,12 +269,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in DRIVER_TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all driver tables as temp views for spark.sql use."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def load_evm_tables(spark: SparkSession, fixture_dir: str) -> dict[str, DataFrame]:
     """Read the EVM fixture tables (see ``sources.fixtures``)."""
     return {

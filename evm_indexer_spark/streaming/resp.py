@@ -369,27 +369,6 @@ def consume_loop(
     return delivered
 
 
-def publish_partitioned(payloads, host: str, port: int, channel: str) -> None:
-    """Publish a DataFrame's ``payload`` column to a RESP channel from
-    the EXECUTORS — one connection per partition, rows never collect to
-    the driver (the scale shape of S12: the reference's single-process
-    ``PublishBlock`` loop becomes partition-parallel fan-out; ordering
-    is per-partition, matching the reference's per-worker ordering)."""
-
-    def _part(rows) -> None:
-        client = None
-        try:
-            for row in rows:
-                if client is None:  # connect lazily: empty partitions skip
-                    client = RespClient(host, port)
-                client.publish(channel, row["payload"])
-        finally:
-            if client is not None:
-                client.close()
-
-    payloads.select("payload").foreachPartition(_part)
-
-
 def publish_channels(frames, host: str, port: int) -> None:
     """Publish SEVERAL channels' payload frames in ONE Spark action:
     *frames* is ``[(channel, df_with_payload_col), ...]``; the frames

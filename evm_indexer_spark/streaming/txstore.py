@@ -69,6 +69,23 @@ driver, with the filter pushed down, so such a read launches no Spark
 job. It declines (returns None) when a touched bucket carries a delta
 chain or the files exceed ``LOCAL_READ_BYTE_CAP``; the caller then runs
 the Spark plan.
+
+Hash index. A hash says nothing about its bucket, so by-hash reads
+(P4, the reference's ``hash char(66)`` PKs and ``txhash`` index) need
+one more lookup first. Each commit also writes its batch's
+``(hash, kind, bucket)`` rows — block hashes as ``kind="block"``, the
+transaction hashes of its transactions and events as ``kind="tx"`` —
+to ``objects/hashes/c{version}/shard=<first hex digit>/``, sorted on
+``hash``, before the manifest swap; the manifest's ``"hashes"`` key
+lists the versions holding index objects. The index is thus written,
+time-travelled and vacuumed with the data, and a crash before the swap
+leaves none of its rows visible. It is append-only: survivors are never
+re-indexed, and a stale entry (a reorged-away hash, a tx's old bucket)
+only names a bucket whose read finds no row. ``bucket_of_hash`` reads
+one shard on the driver; ``compact()`` folds the version list into one
+object set. A store whose manifest predates the index (non-zero
+version, no ``"hashes"`` key) never starts one, since it could not be
+complete: its by-hash reads stay on the Spark plan.
 """
 
 from __future__ import annotations
@@ -76,7 +93,9 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import string
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
@@ -98,6 +117,10 @@ _TABLES = ("blocks", "transactions", "events")
 #: above it the read goes to the Spark plan (calibration: SCALE.md)
 LOCAL_READ_BYTE_CAP = 64 << 20
 
+#: the hash-index shards a lookup reads (a hash's first character after
+#: ``0x``): the ones Spark writes into a ``shard=`` dir name unescaped
+_SHARDS = frozenset(string.ascii_lowercase + string.digits)
+
 
 def bucket_of(number_col):
     return (number_col / BLOCK_BUCKET_SIZE).cast("long")
@@ -114,9 +137,10 @@ def _bucket_batch(blocks: DataFrame, txs: DataFrame, events: DataFrame):
     A batch carrying two hashes for one number (a reorg inside one
     delivery) keeps the block with the greatest hash, so a replay
     stores the same one; the other's children drop out of the join.
-    The bucketed blocks come back persisted — they feed the touched-
-    bucket list, both child joins and the writes, which would otherwise
-    each parse the raw batch again — and the caller unpersists them."""
+    All three come back persisted — the blocks feed the touched-bucket
+    list, both child joins and the writes, and the children feed the
+    table writes and the hash-index write, which would otherwise each
+    parse the raw batch again — and the caller unpersists them."""
     blocks = (
         blocks.withColumn("_top", F.max("hash").over(Window.partitionBy("number")))
         .filter(F.col("hash") == F.col("_top"))
@@ -126,10 +150,62 @@ def _bucket_batch(blocks: DataFrame, txs: DataFrame, events: DataFrame):
     )
     key = blocks.select(F.col("hash").alias("_bh"), "bucket")
     txs, events = (
-        c.join(key, c["blockhash"] == key["_bh"], "inner").drop("_bh")
+        c.join(key, c["blockhash"] == key["_bh"], "inner").drop("_bh").persist()
         for c in (txs, events)
     )
     return blocks, txs, events
+
+
+def _read_local(dirs: list[str], where, columns: list[str] | None) -> list[dict] | None:
+    """The rows matching *where* in the parquet files of *dirs* (a
+    missing dir holds none), read with ``pyarrow.dataset`` on the
+    driver; None when the files total more than ``LOCAL_READ_BYTE_CAP``."""
+    files = [
+        os.path.join(d, f)
+        for d in dirs
+        if os.path.isdir(d)
+        for f in sorted(os.listdir(d))
+        if f.endswith(".parquet")
+    ]
+    if sum(os.stat(f).st_size for f in files) > LOCAL_READ_BYTE_CAP:
+        return None
+    if not files:
+        return []
+    return (
+        ds.dataset(files, format="parquet")
+        .to_table(columns=columns, filter=where)
+        .to_pylist()
+    )
+
+
+def _indexed(manifest: dict) -> bool:
+    """Whether a commit onto *manifest* writes hash-index rows: a fresh
+    store starts the index, and a store older than it never does."""
+    return manifest["version"] == 0 or "hashes" in manifest
+
+
+def _subdirs(path: str) -> list[str]:
+    """The full paths of *path*'s subdirectories; none when it is
+    missing."""
+    try:
+        return [e.path for e in os.scandir(path) if e.is_dir()]
+    except FileNotFoundError:
+        return []
+
+
+def _hash_rows(blocks: DataFrame, txs: DataFrame, events: DataFrame) -> DataFrame:
+    """A bucketed batch's hash-index rows: its block hashes, and the
+    transaction hashes of its transactions and of its events (an
+    event's transaction row may be missing from the batch)."""
+    return (
+        blocks.select("hash", F.lit("block").alias("kind"), "bucket")
+        .unionByName(txs.select("hash", F.lit("tx").alias("kind"), "bucket"))
+        .unionByName(
+            events.select(
+                F.col("txhash").alias("hash"), F.lit("tx").alias("kind"), "bucket"
+            )
+        )
+    )
 
 
 def _swap_in(rows: DataFrame, path: str) -> None:
@@ -177,7 +253,7 @@ class AtomicBlockStore:
         os.makedirs(root, exist_ok=True)
 
     def _path(self, name: str) -> str:
-        """Side-table path (publish log, hash index)."""
+        """Side-table path (the publish log)."""
         return os.path.join(self.root, name)
 
     # -- manifest ----------------------------------------------------------
@@ -268,6 +344,9 @@ class AtomicBlockStore:
     def _obj_dir(self, table: str, bucket: int, version: int) -> str:
         return os.path.join(self.root, "objects", table, f"b{bucket}", f"c{version}")
 
+    def _hash_dir(self, version: int) -> str:
+        return os.path.join(self.root, "objects", "hashes", f"c{version}")
+
     def _write_object(
         self, df: DataFrame, table: str, bucket: int | str, version: int
     ) -> None:
@@ -278,6 +357,53 @@ class AtomicBlockStore:
         df.sortWithinPartitions(sort_key).coalesce(1).write.mode("overwrite").parquet(
             self._obj_dir(table, int(bucket), version)
         )
+
+    def _write_hashes(self, rows: DataFrame, version: int) -> None:
+        """Write hash-index *rows* (hash, kind, bucket), deduplicated,
+        as object set *version*: one shuffle puts each shard (the
+        hash's first hex digit) in one task, so each shard dir gets one
+        file, sorted on ``hash`` (overwrite: a crashed attempt's partial
+        dir is replaced on replay)."""
+        (
+            rows.withColumn("shard", F.substring("hash", 3, 1))
+            .repartition("shard")
+            .distinct()
+            .sortWithinPartitions("shard", "hash")
+            .write.mode("overwrite")
+            .partitionBy("shard")
+            .parquet(self._hash_dir(version))
+        )
+
+    def _write_version(
+        self,
+        tables: dict[str, DataFrame],
+        touched: list[int],
+        version: int,
+        hashes: DataFrame | None,
+    ) -> None:
+        """Write object version *version* of every touched bucket of
+        *tables* (name -> bucketed rows) and, unless None, the
+        hash-index rows *hashes*. Each lands in its own object dirs, so
+        the write jobs are independent and run concurrently: Spark
+        sessions are thread-safe, FIFO-scheduled tiny jobs overlap
+        their scheduling floors instead of stacking them, and a bucket
+        write is one task (``coalesce(1)``)."""
+
+        def write(item) -> None:
+            table, df = item
+            if table == "hashes":
+                self._write_hashes(df, version)
+                return
+            for b in touched:
+                self._write_object(
+                    df.filter(F.col("bucket") == b), table, b, version
+                )
+
+        items = list(tables.items())
+        if hashes is not None:
+            items.append(("hashes", hashes))
+        with ThreadPoolExecutor(max_workers=len(items)) as ex:
+            list(ex.map(write, items))
 
     # -- reads -------------------------------------------------------------
 
@@ -394,13 +520,12 @@ class AtomicBlockStore:
         None, and the caller runs the Spark plan, when the bucket set is
         unbounded (None), a touched bucket carries deltas (merge-on-read
         is the Spark plan's job), or the files total more than
-        ``LOCAL_READ_BYTE_CAP`` (sizes from ``os.stat``, so the manifest
-        format is unchanged)."""
+        ``LOCAL_READ_BYTE_CAP`` (sizes from ``os.stat``)."""
         if buckets is None:
             return None
         m = self._manifest() if manifest is None else manifest
         entries = m["tables"].get(table, {})
-        files = []
+        dirs = []
         for b in buckets:
             entry = entries.get(str(int(b)))
             if entry is None:
@@ -408,21 +533,31 @@ class AtomicBlockStore:
             versions, merge = self._entry_versions(entry)
             if merge:
                 return None
-            d = self._obj_dir(table, int(b), versions[0])
-            files += [
-                os.path.join(d, f)
-                for f in sorted(os.listdir(d))
-                if f.endswith(".parquet")
-            ]
-        if sum(os.stat(f).st_size for f in files) > LOCAL_READ_BYTE_CAP:
+            dirs.append(self._obj_dir(table, int(b), versions[0]))
+        return _read_local(dirs, where, columns)
+
+    def bucket_of_hash(
+        self, hash_: str, kind: str, manifest: dict | None = None
+    ) -> list[int] | None:
+        """The sorted buckets the hash index names for *hash_* as a
+        block hash (*kind* ``"block"``) or a transaction hash
+        (``"tx"``): one shard's objects, read on the driver, no Spark
+        job. Entries are never removed, so a bucket may no longer hold
+        the hash (a reorg), and a re-included tx names every bucket it
+        was committed to; the caller's read keeps the live rows. None
+        when the store has no index, the hash's shard is not one of
+        ``_SHARDS``, or the shard's objects exceed
+        ``LOCAL_READ_BYTE_CAP``."""
+        m = self._manifest() if manifest is None else manifest
+        h = hash_.lower()
+        if "hashes" not in m or h[2:3] not in _SHARDS:
             return None
-        if not files:
-            return []
-        return (
-            ds.dataset(files, format="parquet")
-            .to_table(columns=columns, filter=where)
-            .to_pylist()
+        rows = _read_local(
+            [os.path.join(self._hash_dir(v), f"shard={h[2]}") for v in m["hashes"]],
+            (ds.field("hash") == h) & (ds.field("kind") == kind),
+            ["bucket"],
         )
+        return None if rows is None else sorted({r["bucket"] for r in rows})
 
     def blocks(self) -> DataFrame:
         return self.read("blocks").drop("bucket")
@@ -454,17 +589,13 @@ class AtomicBlockStore:
         )
 
     def rest_facade(self, config=None):
-        """RestFacade with every point-read optimization on by default:
-        manifest path pruning for windows/point-by-number, and the
-        hash→bucket hint index for point-by-hash."""
+        """RestFacade over ``historical_queries``: manifest path pruning
+        for windows and point reads, local reads for bounded and by-hash
+        requests."""
         from ..api import RestFacade
         from ..config import DEFAULT_CONFIG
 
-        return RestFacade(
-            self.historical_queries(config),
-            config or DEFAULT_CONFIG,
-            hash_index=HashIndex(self),
-        )
+        return RestFacade(self.historical_queries(config), config or DEFAULT_CONFIG)
 
     # -- atomic upsert -----------------------------------------------------
 
@@ -494,7 +625,8 @@ class AtomicBlockStore:
         try:
             self._cow_write(manifest, next_version, blocks, txs, events)
         finally:
-            blocks.unpersist()
+            for df in (blocks, txs, events):
+                df.unpersist()
 
     def _cow_write(
         self,
@@ -534,36 +666,38 @@ class AtomicBlockStore:
             "events": merge_children("events", events),
         }
 
-        new_entries: dict[str, dict[str, int]] = {t: {} for t in _TABLES}
-        time_stats: dict[str, list] = {}
-        for table, df in merged.items():
-            # one write per touched bucket (the manifest maps buckets to
-            # versions, so each bucket needs its own directory) — persist
-            # the merged frame across the loop or every bucket write
-            # re-runs the snapshot read + replace/survivor joins
-            df = df.persist()
-            try:
-                if table == "blocks":
-                    # zone map: exact [min,max] block time per rewritten
-                    # bucket (the frame IS the bucket's full new content,
-                    # so bounds never go stale). O(touched) rows collected.
-                    time_stats = {
-                        str(int(r["bucket"])): [r["tmin"], r["tmax"]]
-                        for r in df.groupBy("bucket")
-                        .agg(F.min("time").alias("tmin"), F.max("time").alias("tmax"))
-                        .collect()
-                    }
-                for b in touched:
-                    self._write_object(
-                        df.filter(F.col("bucket") == b), table, b, next_version
-                    )
-                    new_entries[table][str(int(b))] = next_version
-            finally:
+        # persist the merged frames across the writes or every bucket
+        # write re-runs the snapshot read + replace/survivor joins
+        merged = {t: df.persist() for t, df in merged.items()}
+        indexed = _indexed(manifest)
+        try:
+            # zone map: exact [min,max] block time per rewritten bucket
+            # (the frame IS the bucket's full new content, so bounds
+            # never go stale). O(touched) rows collected.
+            time_stats = {
+                str(int(r["bucket"])): [r["tmin"], r["tmax"]]
+                for r in merged["blocks"]
+                .groupBy("bucket")
+                .agg(F.min("time").alias("tmin"), F.max("time").alias("tmax"))
+                .collect()
+            }
+            self._write_version(
+                merged,
+                touched,
+                next_version,
+                _hash_rows(blocks, txs, events) if indexed else None,
+            )
+        finally:
+            for df in merged.values():
                 df.unpersist()
+        if indexed:
+            manifest.setdefault("hashes", []).append(next_version)
 
         # data durable → swap the manifest (the only mutation readers see)
         for t in _TABLES:
-            manifest["tables"].setdefault(t, {}).update(new_entries[t])
+            manifest["tables"].setdefault(t, {}).update(
+                {str(int(b)): next_version for b in touched}
+            )
         manifest.setdefault("stats", {}).setdefault("blocks", {}).update(time_stats)
         manifest["version"] = next_version
         self._commit_manifest(manifest)
@@ -603,25 +737,19 @@ class AtomicBlockStore:
             "transactions": txs.select(*_cols("transactions")),
             "events": events.select(*_cols("events")),
         }
+        indexed = _indexed(manifest)
         try:
-            # the three tables land in DISJOINT object dirs, so their
-            # write jobs are independent — submit them concurrently
-            # (Spark sessions are thread-safe; FIFO-scheduled tiny jobs
-            # overlap their scheduling floors instead of stacking them:
-            # three sequential writes were the other latency floor)
-            from concurrent.futures import ThreadPoolExecutor
-
-            def _write(item) -> None:
-                table, df = item
-                for b in touched:
-                    self._write_object(
-                        df.filter(F.col("bucket") == b), table, b, next_version
-                    )
-
-            with ThreadPoolExecutor(max_workers=3) as ex:
-                list(ex.map(_write, batch.items()))
+            self._write_version(
+                batch,
+                touched,
+                next_version,
+                _hash_rows(blocks, txs, events) if indexed else None,
+            )
         finally:
-            blocks.unpersist()
+            for df in (blocks, txs, events):
+                df.unpersist()
+        if indexed:
+            manifest.setdefault("hashes", []).append(next_version)
 
         for t in _TABLES:
             tab = manifest["tables"].setdefault(t, {})
@@ -657,7 +785,9 @@ class AtomicBlockStore:
         only for *buckets*). One atomic commit; readers of compacted
         buckets return to the zero-merge fast path, and blocks zone
         maps are recomputed exact (delta commits only widen them).
-        Returns the number of (table, bucket) chains folded."""
+        Without *buckets*, the hash index's object sets also fold into
+        one. Returns the number of chains folded, counting the hash
+        index as one."""
         manifest = self._manifest()
         next_version = manifest["version"] + 1
         keep = None if buckets is None else {int(b) for b in buckets}
@@ -669,9 +799,24 @@ class AtomicBlockStore:
             ]
             for t in _TABLES
         }
-        folded = sum(len(v) for v in targets.values())
+        fold_hashes = keep is None and len(manifest.get("hashes", [])) > 1
+        folded = sum(len(v) for v in targets.values()) + fold_hashes
         if not folded:
             return 0
+        if fold_hashes:
+            # each shard dir is read as a root of its own: Spark cannot
+            # discover ``shard=`` partitions under several roots at once
+            shard_dirs = [
+                d for v in manifest["hashes"] for d in _subdirs(self._hash_dir(v))
+            ]
+            schema = "hash string, kind string, bucket long"
+            self._write_hashes(
+                self.spark.read.schema(schema).parquet(*shard_dirs)
+                if shard_dirs
+                else _empty(self.spark, schema),
+                next_version,
+            )
+            manifest["hashes"] = [next_version]
         for t in _TABLES:
             for bs in targets[t]:
                 df = self._read_table(t, manifest, buckets=[int(bs)]).persist()
@@ -737,8 +882,9 @@ class AtomicBlockStore:
     def vacuum(
         self, min_age_seconds: float = 3600.0, retain_snapshots: int = 2
     ) -> int:
-        """Delete object dirs referenced by neither the current manifest
-        nor the *retain_snapshots* most recent archived snapshots, and
+        """Delete object dirs (table bucket versions and hash-index
+        object sets) referenced by neither the current manifest nor the
+        *retain_snapshots* most recent archived snapshots, and
         older than *min_age_seconds*. Returns dirs removed. Archived
         manifests falling out of retention are dropped too, so
         ``snapshots()`` reflects what ``read_at`` can actually serve.
@@ -762,6 +908,7 @@ class AtomicBlockStore:
                 for b, e in buckets.items()
                 for v in self._entry_versions(e)[0]
             }
+            live |= {self._hash_dir(v) for v in m.get("hashes", [])}
         # drop out-of-retention archives (their objects may go below)
         for v in self.snapshots():
             if v not in retained:
@@ -772,111 +919,20 @@ class AtomicBlockStore:
         removed = 0
         cutoff = time.time() - min_age_seconds
         objroot = os.path.join(self.root, "objects")
-        for table in _TABLES:
-            tdir = os.path.join(objroot, table)
-            if not os.path.isdir(tdir):
+        version_dirs = [
+            c
+            for t in _TABLES
+            for b in _subdirs(os.path.join(objroot, t))
+            for c in _subdirs(b)
+        ] + _subdirs(os.path.join(objroot, "hashes"))
+        for full in version_dirs:
+            if full in live:
                 continue
-            for bdir in os.listdir(tdir):
-                full_b = os.path.join(tdir, bdir)
-                for cdir in os.listdir(full_b):
-                    full = os.path.join(full_b, cdir)
-                    if full in live:
-                        continue
-                    try:
-                        if os.path.getmtime(full) > cutoff:
-                            continue
-                    except OSError:
-                        continue
-                    shutil.rmtree(full, ignore_errors=True)
-                    removed += 1
+            try:
+                if os.path.getmtime(full) > cutoff:
+                    continue
+            except OSError:
+                continue
+            shutil.rmtree(full, ignore_errors=True)
+            removed += 1
         return removed
-
-
-# -- hash→bucket hint index (SURVEY §7 risk 3) ------------------------------
-#
-# Point lookups by hash (P4: GetBlockByHash / GetTransactionByHash) can't
-# prune the number-bucketed layout — the hash says nothing about the
-# bucket. The reference leans on a Postgres B-tree; the columnar analog
-# is a SLIM append-only side index (hash, bucket): ~50 bytes/block, so
-# even a 20M-block chain indexes in ~1 GB of narrow parquet that scans
-# in a trice vs. the full fact tables, and the bucket it yields turns
-# the point read into a one-bucket scan. Compacted like the publish log.
-
-
-class HashIndex:
-    """Append-only (hash, bucket) hint index over an ``AtomicBlockStore``."""
-
-    def __init__(self, store: AtomicBlockStore) -> None:
-        self.store = store
-
-    def _path(self) -> str:
-        return self.store._path("_hashidx")
-
-    def append(self, blocks: DataFrame) -> None:
-        """Record a batch's block hashes (call right after
-        ``upsert_batch`` with the same normalized blocks)."""
-        blocks.select(
-            F.lower("hash").alias("hash"), bucket_of(F.col("number")).alias("bucket")
-        ).write.mode("append").parquet(self._path())
-
-    def read(self) -> DataFrame:
-        if not os.path.isdir(self._path()):
-            return _empty(self.store.spark, "hash string, bucket long")
-        return self.store.spark.read.parquet(self._path())
-
-    def bucket_of_hash(self, block_hash: str) -> int | None:
-        """Resolve a block hash to its bucket; None if unindexed. One
-        scan of the slim index — never of the fact tables — and no Spark
-        job at all while the index has never been written. Reorged-away
-        hashes may linger (like the publish log); the caller's point
-        read simply finds no row in the bucket, which is correct."""
-        if not os.path.isdir(self._path()):
-            return None
-        rows = (
-            self.read()
-            .filter(F.col("hash") == block_hash.lower())
-            .select("bucket")
-            .limit(1)
-            .collect()
-        )
-        return int(rows[0][0]) if rows else None
-
-    def _bucket_slice(self, table: str, bucket: int | None) -> DataFrame:
-        """The *table* rows for one bucket, path-pruned through the
-        manifest; the whole table when the bucket is unknown."""
-        if bucket is None:
-            return self.store.read(table)
-        return self.store.read_buckets(table, [bucket])
-
-    def lookup_block(self, block_hash: str) -> DataFrame:
-        """P4 point read pruned through the index: resolve the bucket,
-        then scan ONLY that bucket of ``blocks``. Falls back to the full
-        scan when the hash is unindexed (pre-index history). Stored
-        hashes are lowercase (``sources.normalize``), so the bare column
-        comparison reaches the parquet scan as a pushed filter."""
-        b = self.bucket_of_hash(block_hash)
-        return (
-            self._bucket_slice("blocks", b)
-            .filter(F.col("hash") == block_hash.lower())
-            .drop("bucket")
-        )
-
-    def lookup_block_transactions(self, block_hash: str) -> DataFrame:
-        """Transactions of one block, bucket-pruned through the index:
-        fact rows live in their parent block's bucket, so the block's
-        bucket prunes the tx scan too."""
-        b = self.bucket_of_hash(block_hash)
-        return (
-            self._bucket_slice("transactions", b)
-            .filter(F.col("blockhash") == block_hash.lower())
-            .drop("bucket")
-        )
-
-    def compact(self) -> None:
-        """Dedup + rewrite through the same rename swap as the publish
-        log (the index is advisory, so a lost index only costs
-        performance, never correctness)."""
-        path = self._path()
-        if not os.path.isdir(path):
-            return
-        _swap_in(self.read().dropDuplicates(["hash"]), path)

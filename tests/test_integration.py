@@ -10,7 +10,7 @@ from evm_indexer_spark.api import RestFacade
 from evm_indexer_spark.operators.historical import HistoricalQueries
 from evm_indexer_spark.sources.rawgen import raw_block_doc, write_landing_files
 from evm_indexer_spark.streaming.ingest import start_ingest_stream
-from evm_indexer_spark.streaming.txstore import AtomicBlockStore, HashIndex
+from evm_indexer_spark.streaming.txstore import AtomicBlockStore
 
 N_BLOCKS = 120
 
@@ -83,7 +83,6 @@ def test_grand_loop_all_components(spark, tmp_path):
     component composed in one run, publish-exactly-once throughout."""
     import json
 
-    from evm_indexer_spark.sources.normalize import normalize_blocks, RAW_BLOCK_SCHEMA
     from evm_indexer_spark.streaming.ingest import (
         confirmed_mismatches,
         process_raw_batch,
@@ -116,8 +115,6 @@ def test_grand_loop_all_components(spark, tmp_path):
         start_ingest_stream(
             spark, str(landing), store, ckpt, publish=publish
         ).awaitTermination(180)
-        idx = HashIndex(store)
-        idx.append(normalize_blocks(make_raw(spark, [raw_block(n) for n in (0, 1, 2, 4, 5)])))
 
         assert [r[0] for r in repair_gaps(spark, store, 0, 5).collect()] == [3]
         notif = 0
@@ -146,10 +143,14 @@ def test_grand_loop_all_components(spark, tmp_path):
         process_raw_batch(store, make_raw(spark, [raw_block(1, salt="DEEP")]))
         assert confirmed_mismatches(store, refetched).count() == 0
 
-        # hash index still resolves a surviving block; the reorged-away
-        # old hash finds no row (stale hint is harmless)
-        assert idx.lookup_block(raw_block(2)["hash"]).count() == 1
-        assert idx.lookup_block(raw_block(5)["hash"]).count() == 0
+        # the hash index the commits wrote still resolves a surviving
+        # block; the reorged-away old hash keeps its bucket but finds
+        # no row (a stale entry is harmless)
+        q = store.historical_queries()
+        assert store.bucket_of_hash(raw_block(2)["hash"], "block") == [0]
+        assert len(q.rows("get_block_by_hash", raw_block(2)["hash"])) == 1
+        assert store.bucket_of_hash(raw_block(5)["hash"], "block") == [0]
+        assert q.rows("get_block_by_hash", raw_block(5)["hash"]) == []
 
         # publish-once globally: no duplicate (number, hash) ever
         pairs = [(r["number"], r["hash"]) for r in store.published().collect()]

@@ -13,7 +13,7 @@ from evm_indexer_spark.schemas import BLOCK_BUCKET_SIZE
 from evm_indexer_spark.sources.rawgen import raw_block_doc
 from evm_indexer_spark.sources.normalize import RAW_BLOCK_SCHEMA
 from evm_indexer_spark.streaming.ingest import process_raw_batch
-from evm_indexer_spark.streaming.txstore import AtomicBlockStore, HashIndex
+from evm_indexer_spark.streaming.txstore import AtomicBlockStore
 
 
 @pytest.fixture(scope="module")
@@ -47,47 +47,65 @@ def test_unwired_queries_do_not_prune(atomic_store):
     assert len(seg) == 1 or "bucket#" not in seg[1][:120]
 
 
-def test_hash_index_prunes_point_lookup(spark, tmp_path):
-    """P4 by hash through the hint index scans one bucket, not the chain
-    (SURVEY §7 risk 3); unindexed hashes fall back to the full scan."""
-    from evm_indexer_spark.sources.normalize import normalize_blocks
+def _read_buckets(monkeypatch) -> list:
+    """Record the bucket list of every ``local_rows`` read."""
+    seen, real = [], AtomicBlockStore.local_rows
 
+    def spy(self, table, buckets, *args, **kwargs):
+        seen.append((table, buckets))
+        return real(self, table, buckets, *args, **kwargs)
+
+    monkeypatch.setattr(AtomicBlockStore, "local_rows", spy)
+    return seen
+
+
+def test_hash_index_prunes_point_lookup(spark, tmp_path, monkeypatch):
+    """P4 by hash through the manifest's hash index reads one bucket,
+    not the chain (SURVEY §7 risk 3); a store older than the index
+    falls back to the full scan."""
     from .test_streaming import make_raw, raw_block
 
     store = AtomicBlockStore(spark, str(tmp_path / "s"))
     far = BLOCK_BUCKET_SIZE * 7
-    docs = [raw_block(0), raw_block(1), raw_block(far)]
-    process_raw_batch(store, make_raw(spark, docs))
-    idx = HashIndex(store)
-    idx.append(normalize_blocks(make_raw(spark, docs)))
+    process_raw_batch(store, make_raw(spark, [raw_block(0), raw_block(1), raw_block(far)]))
 
     target = raw_block(far)["hash"].lower()
-    assert idx.bucket_of_hash(target) == 7
-    row = idx.lookup_block(target).collect()
+    assert store.bucket_of_hash(target, "block") == [7]
+    q = store.historical_queries()
+    with monkeypatch.context() as m:
+        reads = _read_buckets(m)
+        row = q.rows("get_block_by_hash", target)
     assert len(row) == 1 and row[0]["number"] == far
-    # the pruned read resolves bucket 7's object dir before the hash match
-    files = idx.lookup_block(target).inputFiles()
-    assert files and all("/b7/" in f for f in files), files
+    # the read resolves bucket 7's object dir only
+    assert reads == [("blocks", [7])]
 
-    # unindexed hash → full-scan fallback still answers
-    process_raw_batch(store, make_raw(spark, [raw_block(2)]))  # not appended to idx
-    assert idx.lookup_block(raw_block(2)["hash"]).count() == 1
-    assert idx.bucket_of_hash(raw_block(2)["hash"]) is None
+    # a later commit indexes its own hashes; compaction folds both
+    process_raw_batch(store, make_raw(spark, [raw_block(2)]))
+    assert store.bucket_of_hash(raw_block(2)["hash"], "block") == [0]
+    assert store.compact() == 1
+    assert store.bucket_of_hash(target, "block") == [7]
 
-    idx.compact()
-    assert idx.bucket_of_hash(target) == 7
+    # the manifest of a store older than the index: full-scan fallback
+    m = store._manifest()
+    del m["hashes"]
+    store._commit_manifest(m)
+    assert store.bucket_of_hash(raw_block(2)["hash"], "block") is None
+    q = store.historical_queries()
+    assert q.get_block_by_hash(raw_block(2)["hash"]).count() == 1
+    assert len(q.rows("get_block_by_hash", raw_block(2)["hash"])) == 1
 
 
 def test_absent_hash_index_launches_no_job(spark, tmp_path):
     """A store whose hash index was never written answers by-hash
     bucket lookups with None without scheduling a single Spark job."""
-    idx = HashIndex(AtomicBlockStore(spark, str(tmp_path / "s")))
-    assert not os.path.isdir(idx._path())
+    store = AtomicBlockStore(spark, str(tmp_path / "s"))
+    assert not os.path.isdir(os.path.join(store.root, "objects", "hashes"))
     sc = spark.sparkContext
     group = "absent-hash-index-probe"
     sc.setJobGroup(group, group, False)
     try:
-        assert idx.bucket_of_hash("0x" + "ab" * 32) is None
+        assert store.bucket_of_hash("0x" + "ab" * 32, "block") is None
+        assert store.bucket_of_hash("0x" + "ab" * 32, "tx") is None
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
@@ -218,31 +236,26 @@ def test_zone_map_legacy_manifest_falls_back(atomic_store):
             f.write(orig)
 
 
-def test_rest_facade_default_hash_index_both_backends(spark, atomic_store):
+def test_rest_facade_default_hash_index_both_backends(spark, atomic_store, monkeypatch):
     """store.rest_facade() must serve point-by-hash reads through the
-    hint index by default, scanning one bucket's object dirs."""
-    from evm_indexer_spark.sources.normalize import normalize_blocks
-
-    idx = HashIndex(atomic_store)
-    docs = [
-        raw_block_doc(n)
-        for start in (0, BLOCK_BUCKET_SIZE, 2 * BLOCK_BUCKET_SIZE)
-        for n in range(start, start + 30)
-    ]
-    raw = spark.createDataFrame(docs, RAW_BLOCK_SCHEMA)
-    idx.append(normalize_blocks(raw))
-
+    manifest's hash index by default, reading one bucket's object
+    dirs, and the Spark fallback must give the same rows."""
     target_number = 2 * BLOCK_BUCKET_SIZE + 7
     h = raw_block_doc(target_number)["hash"].lower()
     facade = atomic_store.rest_facade()
-    assert facade.hash_index is not None
-    out = facade.block({"hash": h})
+    assert facade.hash_index is atomic_store
+    assert facade.hash_index.bucket_of_hash(h, "block") == [2]
+    with monkeypatch.context() as m:
+        reads = _read_buckets(m)
+        out = facade.block({"hash": h})
+        txs = facade.block({"hash": h, "tx": "yes"})
     assert int(out["number"]) == target_number
+    # the lookups resolve bucket 2's paths only
+    assert reads == [("blocks", [2]), ("transactions", [2])]
 
-    # the pruned lookup resolves bucket 2's paths before the scan
-    for lookup in (
-        facade.hash_index.lookup_block(h),
-        facade.hash_index.lookup_block_transactions(h),
-    ):
-        files = lookup.inputFiles()
-        assert files and all("/b2/" in f for f in files), files
+    with monkeypatch.context() as m:
+        m.setattr(AtomicBlockStore, "local_rows", lambda *a, **k: None)
+        assert facade.block({"hash": h}) == out
+        spark_txs = facade.block({"hash": h, "tx": "yes"})
+    key = lambda r: r["hash"]
+    assert sorted(spark_txs["transactions"], key=key) == sorted(txs["transactions"], key=key)

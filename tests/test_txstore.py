@@ -4,6 +4,7 @@ reorg replace, crash simulation, vacuum, and end-to-end stream ingest."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -135,18 +136,117 @@ def test_read_buckets_prunes_paths(spark, tmp_path):
 
 def test_hash_index_works_over_atomic_store(spark, tmp_path):
     from evm_indexer_spark.schemas import BLOCK_BUCKET_SIZE
-    from evm_indexer_spark.sources.normalize import normalize_blocks
-    from evm_indexer_spark.streaming.txstore import HashIndex
 
     store = AtomicBlockStore(spark, str(tmp_path / "s"))
     far = BLOCK_BUCKET_SIZE * 4
-    raw = make_raw(spark, [raw_block(0), raw_block(far)])
-    process_raw_batch(store, raw)
-    idx = HashIndex(store)
-    idx.append(normalize_blocks(raw))
+    process_raw_batch(store, make_raw(spark, [raw_block(0), raw_block(far)]))
     target = raw_block(far)["hash"]
-    assert idx.bucket_of_hash(target) == 4
-    assert idx.lookup_block(target).collect()[0]["number"] == far
+    assert store.bucket_of_hash(target, "block") == [4]
+    q = store.historical_queries()
+    assert q.rows("get_block_by_hash", target)[0]["number"] == far
+
+
+def _index_rows(store, hash_: str) -> int:
+    """Hash-index rows for *hash_* in the current manifest's objects."""
+    import pyarrow.dataset as ds
+
+    dirs = [store._hash_dir(v) for v in store._manifest().get("hashes", [])]
+    files = [
+        os.path.join(d, f)
+        for d in dirs
+        for d, _, fs in os.walk(d)
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+    return ds.dataset(files).to_table(filter=ds.field("hash") == hash_.lower()).num_rows
+
+
+def test_crash_before_manifest_swap_hides_hash_index_rows(spark, tmp_path, monkeypatch):
+    """The index objects of a commit whose manifest swap dies are never
+    read; the replay commits the batch's hashes once."""
+    store = AtomicBlockStore(spark, str(tmp_path / "s"))
+    process_raw_batch(store, make_raw(spark, [raw_block(0), raw_block(1)]))
+    batch = [raw_block(2), raw_block(3)]
+    hashes = [(b["hash"], "block") for b in batch] + [
+        (t["hash"], "tx") for b in batch for t in b["transactions"]
+    ]
+
+    def boom(_manifest):
+        raise OSError("simulated crash at commit point")
+
+    monkeypatch.setattr(store, "_commit_manifest", boom)
+    with pytest.raises(Exception, match="simulated crash"):
+        process_raw_batch(store, make_raw(spark, batch))
+    monkeypatch.undo()
+
+    assert os.path.isdir(store._hash_dir(2))  # written, not committed
+    assert store._manifest()["hashes"] == [1]
+    q = store.historical_queries()
+    for h, kind in hashes:
+        assert store.bucket_of_hash(h, kind) == []
+    assert q.rows("get_block_by_hash", batch[0]["hash"]) == []
+    assert q.rows("get_transaction_by_hash", batch[1]["transactions"][0]["hash"]) == []
+
+    process_raw_batch(store, make_raw(spark, batch))
+    assert store._manifest()["hashes"] == [1, 2]
+    for h, kind in hashes:
+        assert store.bucket_of_hash(h, kind) == [0]
+        assert _index_rows(store, h) == 1
+    assert q.rows("get_block_by_hash", batch[0]["hash"])[0]["number"] == 2
+
+
+def _by_hash(store, docs) -> list:
+    q = store.historical_queries()
+    out = []
+    for b in docs:
+        out.append(store.bucket_of_hash(b["hash"], "block"))
+        out.append(q.rows("get_block_by_hash", b["hash"]))
+        out.append(sorted(r["hash"] for r in q.rows("get_transactions_by_block_hash", b["hash"])))
+        for t in b["transactions"]:
+            out.append(store.bucket_of_hash(t["hash"], "tx"))
+            out.append(q.rows("get_events_by_transaction_hash", t["hash"]))
+    return out
+
+
+def test_compact_folds_the_hash_index(spark, tmp_path):
+    """compact() folds the hash index's per-commit object sets into one,
+    and every by-hash answer stays the same."""
+    from evm_indexer_spark.schemas import BLOCK_BUCKET_SIZE
+
+    store = AtomicBlockStore(spark, str(tmp_path / "s"))
+    far = BLOCK_BUCKET_SIZE * 3
+    for docs in ([raw_block(0), raw_block(far)], [raw_block(1)], [raw_block(1, salt="R")]):
+        process_raw_batch(store, make_raw(spark, docs))
+    assert store._manifest()["hashes"] == [1, 2, 3]
+    docs = [raw_block(0), raw_block(1), raw_block(1, salt="R"), raw_block(far)]
+    before = _by_hash(store, docs)
+    assert before[0] == [0] and before[1][0]["number"] == 0
+    assert store.compact() == 1
+    m = store._manifest()
+    assert m["hashes"] == [4] and m["version"] == 4
+    assert _by_hash(store, docs) == before
+    assert _index_rows(store, raw_block(1)["hash"]) == 1  # the stale entry
+    assert store.compact() == 0  # nothing left to fold
+
+
+def test_vacuum_keeps_the_hash_index_of_retained_snapshots(spark, tmp_path):
+    """vacuum() walks the hash index too: it keeps every object set a
+    retained snapshot lists and reclaims the folded ones."""
+    store = AtomicBlockStore(spark, str(tmp_path / "s"))
+    for n in range(3):
+        process_raw_batch(store, make_raw(spark, [raw_block(n)]))
+    store.compact()  # snapshot 4 lists one folded set
+    docs = [raw_block(n) for n in range(3)]
+    want = _by_hash(store, docs)
+
+    store.vacuum(min_age_seconds=0, retain_snapshots=2)  # snapshots 3 and 4
+    assert all(os.path.isdir(store._hash_dir(v)) for v in (1, 2, 3, 4))
+    at3 = store._manifest_at(3)
+    assert store.bucket_of_hash(raw_block(2)["hash"], "block", at3) == [0]
+
+    assert store.vacuum(min_age_seconds=0, retain_snapshots=0) >= 3
+    assert [v for v in (1, 2, 3, 4) if os.path.isdir(store._hash_dir(v))] == [4]
+    assert _by_hash(store, docs) == want
 
 
 def test_time_travel_across_reorg(spark, tmp_path):
